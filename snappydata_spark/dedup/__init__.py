@@ -32,20 +32,19 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 def _sig_frame(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """One (id, __sk) row per doc, where __sk is a signature-equality
-    key (equal iff every minhash agrees).
+    """One (id, sig_digest) row per doc of a (id, band, band_hash) table,
+    where sig_digest is a signature-equality key (equal iff every
+    minhash agrees).  This is the only code that knows whether a band
+    table carries a digest.
 
-    Fast path: banded tables produced by index_minhash._band_rows carry
-    a map-side `sig_digest` column (md5 of the full signature, identical
-    on every band row), so the per-doc row is just the band-0 slice —
-    NO shuffle.  Fallback for digest-less band tables (pre-r8 stored
-    indexes): re-derive the key via collect_list/array_sort — one
-    groupBy-id shuffle (the shape behind the r7 dedup_minhash_lsh 3x
-    regression, kept only for compatibility)."""
+    Band tables produced by index_minhash._band_rows carry a map-side
+    `sig_digest` column (md5 of the full signature, identical on every
+    band row), so the per-doc row is just the band-0 slice — no shuffle.
+    Digest-less band tables (indexes stored before the column existed)
+    re-derive the key from the band-ordered hash tuple via
+    collect_list/array_sort — one groupBy-id shuffle."""
     if "sig_digest" in banded.columns:
-        return banded.filter(F.col("band") == 0).select(
-            id_col, F.col("sig_digest").alias("__sk")
-        )
+        return banded.filter(F.col("band") == 0).select(id_col, "sig_digest")
     return banded.groupBy(id_col).agg(
         F.array_join(
             F.transform(
@@ -53,7 +52,45 @@ def _sig_frame(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 lambda s: s["band_hash"],
             ),
             ",",
-        ).alias("__sk")
+        ).alias("sig_digest")
+    )
+
+
+def _elect_reps(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, sig_digest, __srep) per doc of a band table: __srep is the
+    min id of the doc's signature group.  A MIN window over the signature
+    key elects it in one exchange (a groupBy + re-join takes two), and
+    the representatives are the rows where id == __srep."""
+    from pyspark.sql import Window as W
+
+    return _sig_frame(banded, id_col).withColumn(
+        "__srep", F.min(id_col).over(W.partitionBy("sig_digest"))
+    )
+
+
+def _rep_bands(banded: DataFrame, reps: DataFrame, id_col: str) -> DataFrame:
+    """The band rows of the representatives in `reps` (_elect_reps)."""
+    rep_ids = reps.filter(F.col(id_col) == F.col("__srep")).select(
+        F.col("__srep").alias(id_col)
+    )
+    return banded.join(rep_ids, id_col, "left_semi")
+
+
+def _band_collisions(rep_bands: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (doc1 < doc2) pairs sharing an LSH bucket (band,
+    band_hash): the self-join of a representatives-only band table."""
+    a, b = rep_bands.alias("a"), rep_bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("doc1"), F.col(f"b.{id_col}").alias("doc2")
+        )
+        .distinct()
     )
 
 
@@ -67,9 +104,8 @@ def collapse_banded_pairs(banded: DataFrame, id_col: str = "doc_id") -> DataFram
     (the r6 sf10 rehearsal emitted 14.6 B pairs on exactly that shape).
     Instead:
 
-    1. group documents by their FULL signature (the band-ordered hash
-       tuple — equal iff every minhash agrees) and pick the min-id
-       representative;
+    1. group documents by their FULL signature (equal iff every minhash
+       agrees) and pick the min-id representative (_elect_reps);
     2. emit one member→representative edge per non-representative doc
        (linear in rows — this carries the whole duplicate mass);
     3. self-join the band table restricted to REPRESENTATIVES only, so
@@ -80,60 +116,15 @@ def collapse_banded_pairs(banded: DataFrame, id_col: str = "doc_id") -> DataFram
     full pair list (members reach each other through their rep; reps of
     band-colliding groups are directly connected), so
     connected_components / keep_one_per_cluster results are unchanged —
-    only the materialized pair list shrinks from Σk² to Θ(n).
-
-    Fast path (band table carries the map-side sig_digest column, r8+):
-    the per-doc signature key is just the band-0 slice — no
-    collect_list/array_sort re-derivation (the r7 dedup_minhash_lsh 3x
-    regression).  Rep election is a partial-aggregated groupBy on the
-    digest (map-side combine shrinks the exchange to one row per
-    DISTINCT signature before the network), and the reps frame — slim,
-    bounded by distinct signatures — feeds the member join and the
-    rep semi-join, both of which AQE converts to broadcast when reps
-    fit and degrade to shuffle joins when they don't.  Fallback
-    (digest-less pre-r8 band tables): derive the key via collect_list
-    (one extra shuffle)."""
-    if "sig_digest" in banded.columns:
-        from pyspark.sql import Window as W
-
-        # r12 (guide §2.4): rep election via a MIN window over the
-        # signature digest instead of groupBy + re-join — one exchange,
-        # not two; the rep id set falls out of the same frame.
-        band0 = banded.filter(F.col("band") == 0).withColumn(
-            "__rep", F.min(id_col).over(W.partitionBy("sig_digest"))
-        )
-        member_edges = (
-            band0.filter(F.col(id_col) != F.col("__rep"))
-            .select(F.col("__rep").alias("doc1"), F.col(id_col).alias("doc2"))
-        )
-        reps = band0.filter(F.col(id_col) == F.col("__rep"))
-        rep_bands = banded.join(
-            reps.select(F.col(id_col)), id_col, "left_semi"
-        ).select(id_col, "band", "band_hash")
-    else:
-        sig = _sig_frame(banded, id_col)
-        reps = sig.groupBy("__sk").agg(F.min(id_col).alias("__rep"))
-        member_edges = (
-            sig.join(reps, "__sk")
-            .filter(F.col(id_col) != F.col("__rep"))
-            .select(F.col("__rep").alias("doc1"), F.col(id_col).alias("doc2"))
-        )
-        rep_bands = banded.join(
-            reps.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-        )
-    a, b = rep_bands.alias("a"), rep_bands.alias("b")
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc1"), F.col(f"b.{id_col}").alias("doc2")
-        )
-        .distinct()
+    only the materialized pair list shrinks from Σk² to Θ(n).  The reps
+    frame is slim (bounded by distinct signatures) and feeds the rep
+    semi-join, which AQE converts to a broadcast when reps fit and
+    degrades to a shuffle join when they don't."""
+    reps = _elect_reps(banded, id_col)
+    member_edges = reps.filter(F.col(id_col) != F.col("__srep")).select(
+        F.col("__srep").alias("doc1"), F.col(id_col).alias("doc2")
     )
+    rep_pairs = _band_collisions(_rep_bands(banded, reps, id_col), id_col)
     return member_edges.unionByName(rep_pairs)
 
 
@@ -202,38 +193,17 @@ def minhash_lsh_candidates(
     banded = _band_rows(
         rep_docs, text_col, id_col, num_hashes, bands, shingle_n
     ).persist()
-    band0 = banded.filter(F.col("band") == 0)
-    # same §2.4 move for the signature-rep election: MIN window over
-    # sig_digest replaces groupBy + re-join (one exchange, not two)
-    trep2srep = band0.withColumn(
-        "__srep", F.min(id_col).over(W.partitionBy("sig_digest"))
-    ).select(F.col(id_col).alias("__trep"), "__srep")
-    smap = trep2srep.filter(F.col("__trep") == F.col("__srep")).select(
-        "__srep"
-    )
+    reps = _elect_reps(banded, id_col)
     # inner join drops whole groups whose rep produced no bands (text
     # shorter than one shingle / NULL) — the oracle's len(t) >= 3 gate
     member_edges = (
-        doc2trep.join(trep2srep, "__trep")
+        doc2trep.join(
+            reps.select(F.col(id_col).alias("__trep"), "__srep"), "__trep"
+        )
         .filter(F.col(id_col) != F.col("__srep"))
         .select(F.col("__srep").alias("doc1"), F.col(id_col).alias("doc2"))
     )
-    rep_bands = banded.join(
-        smap.select(F.col("__srep").alias(id_col)), id_col, "left_semi"
-    )
-    a, b = rep_bands.alias("a"), rep_bands.alias("b")
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc1"), F.col(f"b.{id_col}").alias("doc2")
-        )
-        .distinct()
-    )
+    rep_pairs = _band_collisions(_rep_bands(banded, reps, id_col), id_col)
     return member_edges.unionByName(rep_pairs)
 
 
@@ -625,18 +595,26 @@ def embedding_near_dups(
     )
 
 
-def _cc_local_labels(edges: DataFrame, n_edges: int) -> DataFrame | None:
-    """Bounded-collect fast path for connected_components over the
+# Largest candidate-pair set connected_components labels on the driver:
+# 4M pairs are ~128 MB of (long, long) Arrow edges, well under the
+# default spark.driver.maxResultSize of 1g.
+CC_COLLECT_CAP = 4_000_000
+
+# id types the numpy labeler vectorizes; other numeric ids take the loop
+_CC_LOCAL_TYPES = ("bigint", "int", "smallint", "tinyint", "double", "float")
+
+
+def _cc_local_labels(edges: DataFrame, n_edges: int, schema) -> DataFrame | None:
+    """Driver-side labeling for connected_components over the
     already-checkpointed symmetrized edge set: if it holds at most
-    2 x SPARK_GRAFT_CC_COLLECT_CAP rows (cap counts PAIRS, the edge set
-    is symmetrized; default 4M pairs — ~128 MB of (long, long) Arrow
-    edges, well under spark.driver.maxResultSize), run vectorized
-    min-label propagation with pointer halving in numpy and return the
-    (node, cluster) frame as a local relation.  Returns None (caller
-    falls back to the distributed loop) when the set is over the cap or
-    carries NULL endpoints.  The probe reads CHECKPOINTED partitions —
-    it never re-runs the candidate pipeline, so an over-cap graph pays
-    only the (free) count, not a wasted pass, at any scale.
+    2 x CC_COLLECT_CAP rows (the cap counts PAIRS, the edge set is
+    symmetrized) of a primitive id type, collect it as Arrow, run
+    vectorized min-label propagation with pointer halving in numpy and
+    return the (node, cluster) frame as a local relation.  Returns None
+    (the caller takes the distributed loop) when the set is over the
+    cap, the ids are not primitive, an endpoint is NULL, or the collect
+    exceeds spark.driver.maxResultSize.  The collect reads CHECKPOINTED
+    partitions — it never re-runs the candidate pipeline.
 
     Exactness: labels are min-reachable-node-id, the identical fix point
     the distributed loop computes — per round each node takes the min of
@@ -646,56 +624,33 @@ def _cc_local_labels(edges: DataFrame, n_edges: int) -> DataFrame | None:
     stationary only when every component is uniformly labeled with its
     min.  np.unique sorts ascending, so compact-index order == id order
     and index minima == id minima."""
-    import os
-
-    cap = int(os.environ.get("SPARK_GRAFT_CC_COLLECT_CAP", "4000000"))
-    if cap <= 0 or n_edges > 2 * cap:  # cap<=0: force the loop
+    if (
+        n_edges > 2 * CC_COLLECT_CAP
+        or schema["node"].dataType.simpleString() not in _CC_LOCAL_TYPES
+    ):
         return None
     import numpy as np
-
-    spark = edges.sparkSession
-    a_type = edges.schema["a"].dataType
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("node", a_type, False),
-            StructField("cluster", a_type, False),
-        ]
-    )
-    if n_edges == 0:
-        return spark.createDataFrame([], schema)
-    # r13b (guide §6 — Arrow for driver transfers): collect the edge set
-    # via DataFrame.toArrow() and re-enter via createDataFrame(pa.Table).
-    # Both are first-class Spark 4 APIs that move Arrow batches no matter
-    # what session confs are set — no per-row pickling in either
-    # direction.  That is what raised the default cap from 250k pairs
-    # (sized for the pickled path: a 2M-row pickle collect + re-entry
-    # measured ~19 s) to 4M pairs (~128 MB of (long, long) Arrow edges,
-    # well under spark.driver.maxResultSize=1g; the sf10 graph's ~2M
-    # pairs now label locally instead of paying the distributed loop).
-    # Exotic numeric ids (decimal) keep the old row collect — the numpy
-    # pass needs primitive dtypes to vectorize.
     import pyarrow as pa
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkRuntimeError
 
-    fld = a_type.simpleString()
-    vectorized = fld in ("bigint", "int", "smallint", "tinyint", "double", "float")
-    if vectorized:
+    # Arrow both ways (toArrow, createDataFrame(pa.Table)): no per-row
+    # pickling in either direction, whatever the session confs.
+    try:
         tbl = edges.toArrow()
-        ca, cb = tbl.column("a"), tbl.column("b")
-        if ca.null_count or cb.null_count:
-            return None  # NULL endpoints: keep the distributed semantics
-        av = ca.to_numpy(zero_copy_only=False)
-        bv = cb.to_numpy(zero_copy_only=False)
-        both = np.concatenate([av, bv])
-    else:
-        head = edges.collect()
-        av = [r[0] for r in head]
-        bv = [r[1] for r in head]
-        if any(v is None for v in av) or any(v is None for v in bv):
-            return None  # NULL endpoints: keep the distributed semantics
-        both = np.array(av + bv)
-    nodes, codes = np.unique(both, return_inverse=True)
+    except (PySparkRuntimeError, Py4JJavaError) as exc:
+        # the aborted job reaches Python as the Py4J error of the Arrow
+        # server's getResult, or, if that returns, as the error the
+        # Arrow stream reader raises; both carry the abort message
+        if "spark.driver.maxResultSize" not in str(exc):
+            raise
+        return None
+    ca, cb = tbl.column("a"), tbl.column("b")
+    if ca.null_count or cb.null_count:
+        return None  # NULL endpoints: keep the distributed semantics
+    av = ca.to_numpy(zero_copy_only=False)
+    bv = cb.to_numpy(zero_copy_only=False)
+    nodes, codes = np.unique(np.concatenate([av, bv]), return_inverse=True)
     ea, eb = codes[: len(av)], codes[len(av):]
     label = np.arange(len(nodes), dtype=np.int64)
     while True:
@@ -706,25 +661,14 @@ def _cc_local_labels(edges: DataFrame, n_edges: int) -> DataFrame | None:
         if np.array_equal(nxt, label):
             break
         label = nxt
-    clusters = nodes[label]
-    if vectorized:
-        # Arrow re-entry: the same primitive type comes back out
-        # (int64→bigint etc.), no per-row pickling of up to 2×cap rows
-        out = pa.table(
-            {
-                "node": pa.array(nodes, type=tbl.schema.field("a").type),
-                "cluster": pa.array(clusters, type=tbl.schema.field("a").type),
-            }
-        )
-        return spark.createDataFrame(out)
-    # non-primitive ids (e.g. Decimal) live in an object-dtype array, so
-    # the elements are plain Python values with no .item()
-    rows = [
-        (n.item() if hasattr(n, "item") else n,
-         c.item() if hasattr(c, "item") else c)
-        for n, c in zip(nodes, clusters)
-    ]
-    return spark.createDataFrame(rows, schema)
+    id_type = tbl.schema.field("a").type
+    out = pa.table(
+        {
+            "node": pa.array(nodes, type=id_type),
+            "cluster": pa.array(nodes[label], type=id_type),
+        }
+    )
+    return edges.sparkSession.createDataFrame(out, schema)
 
 
 def connected_components(
@@ -740,25 +684,21 @@ def connected_components(
     rounds; `max_iter` bounds adversarial chains.  Driver work per round
     is one count (the convergence check) — no data is collected.
 
-    r13 fast path (guide §1.2/§5 — the candidate-pair set is PAIRS-sized,
-    not corpus-sized): when the materialized edge checkpoint fits under
-    a bounded collect (SPARK_GRAFT_CC_COLLECT_CAP, default 4M pairs —
-    Arrow both ways since r13b, so the bound is driver memory, not
-    pickling speed), label propagation runs as one vectorized numpy
-    pass on the driver instead of O(diameter) distributed rounds of
-    join+groupBy+checkpoint+probe.  The size probe is a count over the
-    ALREADY-checkpointed edges, so an over-cap graph pays nothing extra
-    at any scale; labels are identical by construction (min reachable
-    node id)."""
-    # type guard (r13, r12 verdict What's-wrong #3): the label-sum probe
-    # is only sound when MIN over labels is taken in NUMERIC order — for
-    # string ids the min is lexicographic ("10" < "9"), a label can grow
-    # numerically while shrinking lexicographically, and two rounds'
-    # sums can collide (or, for non-castable ids, both be NULL) — the
-    # loop would exit early with WRONG labels.  Fail loudly instead;
-    # every current caller uses numeric doc ids.  (The guard also covers
-    # the local fast path so both paths accept the same inputs.)
-    from pyspark.sql.types import NumericType
+    The candidate-pair set is PAIRS-sized, not corpus-sized: when the
+    checkpointed edge set fits CC_COLLECT_CAP, label propagation runs as
+    one vectorized numpy pass on the driver instead (_cc_local_labels),
+    with identical labels (min reachable node id).  The size probe is a
+    count over the ALREADY-checkpointed edges, so an over-cap graph pays
+    nothing extra.  Every exit returns the same schema."""
+    # type guard: the label-sum probe is only sound when MIN over labels
+    # is taken in NUMERIC order — for string ids the min is lexicographic
+    # ("10" < "9"), a label can grow numerically while shrinking
+    # lexicographically, and two rounds' sums can collide (or, for
+    # non-castable ids, both be NULL) — the loop would exit early with
+    # WRONG labels.  Fail loudly instead; every current caller uses
+    # numeric doc ids.  (The guard also covers the local labeler so
+    # every exit accepts the same inputs.)
+    from pyspark.sql.types import NumericType, StructField, StructType
 
     for c in (src, dst):
         if not isinstance(pairs.schema[c].dataType, NumericType):
@@ -767,12 +707,10 @@ def connected_components(
                 f"label-sum convergence probe; column {c!r} is "
                 f"{pairs.schema[c].dataType.simpleString()}"
             )
-    # r12 (guide §2.4): symmetrize map-side with ONE explode instead of a
-    # UNION of two selects — the union branches each re-ran the whole
-    # candidate-pair pipeline (minhash banding, rep elections, the band
-    # self-join), doubling the dominant cost of this function (measured
-    # 3.9 s → 2.1 s for the edge materialization at sf0.1).  explode of
-    # the 2-struct array emits exactly the same (a, b) ∪ (b, a) rows.
+    # symmetrize map-side with ONE explode of a 2-struct array: it emits
+    # the (a, b) ∪ (b, a) rows in one pass over the candidate-pair
+    # pipeline, where a UNION of two selects would run that pipeline
+    # (minhash banding, rep elections, the band self-join) twice.
     edges = (
         pairs.select(
             F.explode(
@@ -789,9 +727,21 @@ def connected_components(
         # (minhash etc.) — without this each round re-runs that pipeline
         .localCheckpoint(eager=True)
     )
-    # r13 fast path: the count reads checkpointed partitions (~free);
-    # small graphs label locally, big ones take the loop below.
-    local = _cc_local_labels(edges, edges.count())
+    # every exit returns the loop's schema: node carries the edge ids'
+    # type and nullability, cluster is a MIN aggregate and so nullable
+    a = edges.schema["a"]
+    schema = StructType(
+        [
+            StructField("node", a.dataType, a.nullable),
+            StructField("cluster", a.dataType, True),
+        ]
+    )
+    # the count reads checkpointed partitions (~free); small graphs
+    # label locally, big ones take the loop below.
+    n_edges = edges.count()
+    if n_edges == 0:
+        return edges.sparkSession.createDataFrame([], schema)
+    local = _cc_local_labels(edges, n_edges, schema)
     if local is not None:
         return local
     labels = (
@@ -799,27 +749,18 @@ def connected_components(
         .distinct()
         .withColumn("cluster", F.col("node"))
     )
-    # r12 (guide §2.4 — remove shuffles outright): each round is now ONE
-    # join + ONE groupBy (union of neighbor labels with own labels, min
-    # per node) instead of join + groupBy + left-outer re-join — 2
-    # exchanges per round, not 3.  Convergence probes via the label-sum
-    # invariant: min-propagation labels are NON-INCREASING, so the
-    # (exact, decimal) sum of labels strictly decreases until the fix
-    # point — an O(1)-output agg over the checkpointed frame replaces
-    # the old per-round labels⋈labels probe join.
-    # r12b negative results (guide §1 discipline, measured 5-rep quiet
-    # A/Bs at sf0.1): (a) fusing the probe into a persist()-materializing
-    # agg (one job/round instead of checkpoint+probe) is ~25% WORSE on
-    # the cluster queries — the columnar cache encode/decode per round
-    # costs more than the saved probe job (which reads checkpointed
-    # partitions in ~50 ms); (b) running propagation on the rep-pair
-    # graph only and attaching member stars with one post-loop join
-    # (minhash_lsh_clusters shape) re-pays the corpus fingerprint pass
-    # at every consumption and regressed keep_one ~+40%.  Both reverted;
-    # eager checkpoint + O(1) probe stands.  The sentinel init below is
-    # a robustness fix: an EMPTY edge set sums to NULL, and a None init
-    # would never compare equal — 20 dead rounds on empty input.
-    prev_sum: object = object()  # sentinel: never equal on round 1
+    # Each round is ONE join + ONE groupBy (union of neighbor labels with
+    # own labels, min per node): 2 exchanges.  Convergence probes via the
+    # label-sum invariant: min-propagation labels are NON-INCREASING, so
+    # the (exact, decimal) sum of labels strictly decreases until the fix
+    # point — an O(1)-output agg over the checkpointed frame.
+    # Measured and rejected (5-rep A/Bs at sf0.1): fusing the probe into
+    # a persist()-materializing agg is ~25% slower on the cluster queries
+    # (the columnar cache encode/decode per round costs more than the
+    # ~50 ms probe job), and propagating over the rep-pair graph only
+    # with one post-loop member join re-pays the corpus fingerprint pass
+    # per consumer (keep_one ~+40%).
+    prev_sum = None
     for rnd in range(max_iter):
         neighbor = edges.join(labels, edges.b == labels.node).select(
             F.col("a").alias("node"), "cluster"
@@ -837,7 +778,7 @@ def connected_components(
         # second guard: a numeric label that OVERFLOWS decimal(38,0)
         # (enormous double ids) sums to NULL every round — same silent
         # early exit; fail loudly on the first probe.
-        if rnd == 0 and probe.n > 0 and cur_sum is None:
+        if rnd == 0 and cur_sum is None:
             raise ValueError(
                 "connected_components convergence probe got a NULL label "
                 f"sum over {probe.n} labels (ids overflow decimal(38,0)?)"

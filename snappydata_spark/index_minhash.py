@@ -61,10 +61,9 @@ def _band_rows(
     - band_hash = md5 of the comma-joined signature slice;
     - sig_digest = md5 of the comma-joined FULL signature, identical on
       every band row of a doc.  Equal digests <=> equal signatures, so
-      collapse_banded_pairs / _write_rep_bands can group exact-duplicate
-      docs from the band-0 rows directly — a map-side column instead of
-      the collect_list/array_sort shuffle that re-derived the signature
-      key per doc (the r7 dedup_minhash_lsh 3x regression).
+      dedup._sig_frame keys exact-duplicate docs from the band-0 rows
+      directly — a map-side column instead of the collect_list/array_sort
+      shuffle that re-derives the signature key per doc.
 
     Why not the Catalyst chain: its interpreted HOF lambdas (~24M evals
     at sf0.1) did not scale across local threads (9 s wall regardless
@@ -190,18 +189,12 @@ def build_minhash(
 
 def _write_rep_bands(sn, idx_table: str, rep_table: str, id_col: str) -> None:
     """Materialize the band rows of each signature group's min-id
-    REPRESENTATIVE (signature identity = the band-ordered hash tuple).
-    One grouped pass over the band table — paid at build/maintenance,
-    never at serve time.  Uses the map-side sig_digest column when the
-    band table carries it (r8+), so no collect_list shuffle."""
-    from snappydata_spark.dedup import _sig_frame
+    REPRESENTATIVE (dedup._elect_reps).  Paid at build/maintenance,
+    never at serve time."""
+    from snappydata_spark.dedup import _elect_reps, _rep_bands
 
     banded = sn.table(idx_table)
-    sig = _sig_frame(banded, id_col)
-    reps = sig.groupBy("__sk").agg(F.min(id_col).alias("__rep"))
-    rep_bands = banded.join(
-        reps.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-    )
+    rep_bands = _rep_bands(banded, _elect_reps(banded, id_col), id_col)
     sn.create_table(
         rep_table,
         options={"key_columns": f"{id_col},band"},
@@ -322,16 +315,11 @@ def near_dup_lookup_reps(
         # entire band row set under a visible-id semi-join — probes
         # would stop matching groups that still have visible members
         # (false negatives at the ingestion gate).  Re-elect the min
-        # VISIBLE member as rep inline instead; with the sig_digest
-        # column (r8+) this is shuffle-light (_sig_frame fast path).
-        from snappydata_spark.dedup import _sig_frame
+        # VISIBLE member as rep inline instead.
+        from snappydata_spark.dedup import _elect_reps, _rep_bands
 
         banded = _visible_bands(sn, info)
-        sig = _sig_frame(banded, id_col)
-        reps = sig.groupBy("__sk").agg(F.min(id_col).alias("__rep"))
-        rep_bands = banded.join(
-            reps.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-        )
+        rep_bands = _rep_bands(banded, _elect_reps(banded, id_col), id_col)
     pb = _band_rows(
         probe,
         text_col or info["column"],

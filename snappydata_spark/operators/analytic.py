@@ -152,74 +152,35 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE with GROUPING() markers (cubeRollUpGroupingSet grammar
-    SnappyParser.scala:559-606; CubeRollupGroupingSetsTest)."""
-    from snappydata_spark.operators.tpch import _money_cents_mode
+    SnappyParser.scala:559-606; CubeRollupGroupingSetsTest).
+
+    CUBE Expands every input row ×4 (one copy per grouping set) before
+    the partial aggregate, and SUM and COUNT are decomposable, so the
+    scan is pre-aggregated per (flag, status, scan partition) in BIGINT
+    0.01-quantity units (the bigint-cents block in tpch.py) and the
+    CUBE runs over that ~|6 × tasks| cell frame.  GROUPING() markers
+    come from the outer CUBE over the same two columns, so grouping ids
+    and the NULL-value vs ALL-cell distinction are the oracle's."""
+    from snappydata_spark.operators.tpch import QTY_C, _cents_out
 
     t = load_tables(spark, sf_dir, ("lineitem",))
-    if _money_cents_mode():
-        # r13b (guide §2.3 — aggregate before you shuffle/Expand): CUBE
-        # physically Expands EVERY input row ×4 (one copy per grouping
-        # set) before the partial aggregate, and the decimal(12,2) SUM
-        # pays a JavaBigDecimal add per expanded row — 4n decimal adds
-        # over the whole scan.  SUM and COUNT are decomposable, so
-        # pre-aggregate per (flag, status, scan-partition) in BIGINT
-        # 0.01-quantity units first (the tpch.py bigint-cents
-        # discipline; per-(keys, task) groups are split-bounded, so the
-        # bigint can't overflow at any scale) and CUBE the ~|6 × tasks|
-        # cell frame instead of the 60M-row scan.  Exactness: the unit
-        # terms are exact integers (quantity has ≤2 dp by the decimal
-        # cast), integer partial sums are exact, the outer
-        # SUM(CAST(.. AS DECIMAL(38,0)))/100 is exact division, and the
-        # ROUND/CAST tail is the identical expression — bit-identical
-        # cells.  GROUPING() markers are computed by the outer CUBE over
-        # the same two columns, so grouping ids, NULL-value vs ALL-cell
-        # distinction, and the result set are unchanged.
-        # SPARK_GRAFT_MONEY_SUM=decimal restores the r12 plan.
-        inner = (
-            t["lineitem"]
-            .withColumn("__pid", F.spark_partition_id())
-            .groupBy("l_returnflag", "l_linestatus", "__pid")
-            .agg(
-                F.expr(
-                    "SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100"
-                    " AS BIGINT)) AS qty_u"
-                ),
-                F.expr("COUNT(1) AS cnt_p"),
-            )
-        )
-        return (
-            inner.cube("l_returnflag", "l_linestatus")
-            .agg(
-                F.expr("GROUPING(l_returnflag) AS g_flag"),
-                F.expr("GROUPING(l_linestatus) AS g_status"),
-                F.expr(
-                    "CAST(ROUND(SUM(CAST(qty_u AS DECIMAL(38,0))) / 100, 2)"
-                    " AS DOUBLE) AS sum_qty"
-                ),
-                F.expr("SUM(cnt_p) AS cnt"),
-            )
-            .select(
-                "l_returnflag", "l_linestatus", "g_flag", "g_status",
-                "sum_qty", "cnt",
-            )
-        )
-    return (
+    inner = (
         t["lineitem"]
-        .cube("l_returnflag", "l_linestatus")
+        .withColumn("__pid", F.spark_partition_id())
+        .groupBy("l_returnflag", "l_linestatus", "__pid")
+        .agg(F.expr(f"SUM({QTY_C}) AS qty_u"), F.expr("COUNT(1) AS cnt_p"))
+    )
+    return (
+        inner.cube("l_returnflag", "l_linestatus")
         .agg(
             F.expr("GROUPING(l_returnflag) AS g_flag"),
             F.expr("GROUPING(l_linestatus) AS g_status"),
-            # decimal accumulation: the cube/rollup/grouping-sets TOTAL
-            # rows sum entire scaling tables, where double sums drift a
-            # cent with partition order (sf10 catch on agg_rollup)
-            F.expr(
-                "CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(12,2))), 2)"
-                " AS DOUBLE) AS sum_qty"
-            ),
-            F.expr("COUNT(1) AS cnt"),
+            _cents_out("qty_u", 100, "sum_qty"),
+            F.expr("SUM(cnt_p) AS cnt"),
         )
         .select(
-            "l_returnflag", "l_linestatus", "g_flag", "g_status", "sum_qty", "cnt"
+            "l_returnflag", "l_linestatus", "g_flag", "g_status",
+            "sum_qty", "cnt",
         )
     )
 

@@ -94,12 +94,12 @@ def _sum_money_sql(term: str, alias: str):
 
 # ------------------------------------------------------- bigint-cents sums
 #
-# r13 (r12 verdict item 4; guide §2.2/§2.5 two-level aggregation): wide
-# decimal SUM buffers (precision > 18) are JavaBigDecimal adds per row —
-# the dominant per-row cost of the scan-agg queries.  The money terms are
-# exact integers in cents / 1e-4 / 1e-6 dollar units, so the per-row
-# accumulation can be BIGINT (one machine add), with the exact decimal
-# conversion deferred to the tiny outer aggregate:
+# Money sums (q01, q18, tpch2.q11, analytic.agg_cube) accumulate in BIGINT,
+# not in wide decimal SUM buffers (precision > 18 means one JavaBigDecimal
+# add per row, the dominant per-row cost of the scan-agg queries).  Each
+# money term is an exact integer in cents / 1e-4 / 1e-6 dollar units, so
+# the per-row accumulation is one machine add and the exact decimal
+# conversion is deferred to a tiny outer aggregate:
 #
 #   inner: per (group keys, scan-partition-id) BIGINT sums.  The
 #     partition id (materialized via withColumn — Catalyst rejects the
@@ -108,38 +108,31 @@ def _sum_money_sql(term: str, alias: str):
 #     ANY corpus size: task rows are input-split-bounded (~1e6 rows per
 #     128 MB split, ~1e7 at 1 GB splits) and the largest per-row term
 #     (charge in 1e-6 units) is < 1.3e11, keeping every partial under
-#     1.3e18 < 2^63.  The exchange still carries exactly one cell per
-#     (group, task) — the same rows the decimal plan's partial
-#     aggregates shipped — so shuffle volume is unchanged at any scale
-#     (a modulo salt would multiply partial rows per task instead).
+#     1.3e18 < 2^63.  The exchange carries one cell per (group, task),
+#     the rows a partial aggregate ships anyway, so shuffle volume does
+#     not grow with scale (a modulo salt would multiply partial rows).
 #   outer: SUM(CAST(partial AS DECIMAL(38,0))) — an exact decimal sum
 #     over (groups × tasks) cells — then /100 (or 1e4/1e6) in decimal
-#     (result scale ≥ 6, quotient needs ≤ 6 dp ⇒ exact), the same
-#     ROUND(x, 2) HALF_UP, CAST DOUBLE.
+#     (result scale ≥ 6, quotient needs ≤ 6 dp ⇒ exact), then the
+#     ROUND(x, 2) HALF_UP and CAST DOUBLE of the oracle's expression.
+#
+# Single level suffices where the data model bounds a group's row count:
+# q18 groups by orderkey (≤ 7 lineitems per order at any scale factor)
+# and q11 by (suppkey, partkey) (~7.5 lineitems per pair at every scale
+# factor; overflow would take ~8.4e9 rows in one group).
 #
 # Equivalence: integer arithmetic is exact, the decimal division is
-# exact (above), and the rounding/conversion expressions are identical —
-# the output double is bit-identical to the decimal path (verified
-# cell-by-cell at sf0.01/0.1/1/10, tools/ab_money_cents.py, plus the
-# oracle hash sweep).  AVG columns ride the same two-level shape as
-# (SUM(x), COUNT(x)) partials — per-task partial sums identical to the
-# decimal plan's partial_avg; only the merge ORDER of partials differs,
-# the same shuffle-fetch nondeterminism Spark's single-level avg always
-# had, absorbed by the existing ROUND(avg, 4).
-#
-# SPARK_GRAFT_MONEY_SUM=decimal restores the r12 single-level decimal
-# aggregates (the proven path) if the cents plan misbehaves on a new
-# Spark version or data profile.
+# exact (above), and the rounding/conversion expressions are the
+# oracle's — the output double is bit-identical to a direct decimal SUM
+# (tests/test_money_sums.py checks each query against its DuckDB
+# oracle).  AVG columns ride the same two-level shape as (SUM(x),
+# COUNT(x)) partials; only the merge ORDER of partials can differ, the
+# shuffle-fetch nondeterminism any Spark avg has, absorbed by
+# ROUND(avg, 4).
 QTY_C = "CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT)"
 PRICE_C = "CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)"
 DISC_H = "CAST(CAST(1 - l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)"
 TAX_H = "CAST(CAST(1 + l_tax AS DECIMAL(4,2)) * 100 AS BIGINT)"
-
-
-def _money_cents_mode() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_MONEY_SUM", "cents") != "decimal"
 
 
 def _cents_out(partial: str, unit: int, alias: str):
@@ -176,35 +169,13 @@ GROUP BY l_returnflag, l_linestatus
 def q01(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 scan-aggregate (reference getQuery1 TPCH_Queries.scala:125).
 
-    Single shuffle on the (tiny) group keys; partial aggregation is
-    map-side (Spark plans partial_sum/partial_avg before the exchange),
-    so at 100 TB the shuffle carries ~6 rows per input partition.
-
-    r13: money sums accumulate as BIGINT integer-unit partials per
-    (keys, scan partition) with an exact decimal outer sum — see the
-    bigint-cents block above for the overflow bound and the bit-equality
-    argument; SPARK_GRAFT_MONEY_SUM=decimal restores the r12 plan."""
+    Money sums accumulate as BIGINT integer-unit partials per (keys,
+    scan partition) with an exact decimal outer sum (the bigint-cents
+    block above).  Both aggregations are partial-aggregated map-side,
+    so at 100 TB the first exchange carries ~6 cells per input
+    partition and the second only the groups."""
     t = load_tables(spark, sf_dir, ("lineitem",))
     base = t["lineitem"].filter("l_shipdate <= TIMESTAMP '1998-09-02'")
-    if not _money_cents_mode():
-        return (
-            base.groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                _sum_money_sql("CAST(l_quantity AS DECIMAL(12,2))", "sum_qty"),
-                _sum_money_sql(
-                    "CAST(l_extendedprice AS DECIMAL(12,2))", "sum_base_price"
-                ),
-                _sum_money_sql(_REV_SQL, "sum_disc_price"),
-                _sum_money_sql(
-                    f"{_REV_SQL} * CAST(1 + l_tax AS DECIMAL(4,2))",
-                    "sum_charge",
-                ),
-                F.expr("ROUND(AVG(l_quantity), 4) AS avg_qty"),
-                F.expr("ROUND(AVG(l_extendedprice), 4) AS avg_price"),
-                F.expr("ROUND(AVG(l_discount), 4) AS avg_disc"),
-                F.expr("COUNT(1) AS count_order"),
-            )
-        )
     inner = (
         base.withColumn("__pid", F.spark_partition_id())
         .groupBy("l_returnflag", "l_linestatus", "__pid")
@@ -714,26 +685,16 @@ def q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts it against orders at bench scale and a key-partitioned
     join serves 100 TB)."""
     t = load_tables(spark, sf_dir, ("customer", "orders", "lineitem"))
-    # r13: sum_qty accumulates as BIGINT cents — per-orderkey groups are
-    # line-count-bounded (≤ 7 lineitems per order in TPC-H at any SF, so
-    # qty_c ≤ 7×5000: no overflow and no two-level shape needed); the
-    # decimal conversion + ROUND/CAST tail is the exact same expression,
-    # so the output double is bit-identical (see bigint-cents block).
-    qty_term = (
-        f"SUM({QTY_C})"
-        if _money_cents_mode()
-        else "SUM(CAST(l_quantity AS DECIMAL(12,2)))"
-    )
+    # sum_qty accumulates as BIGINT cents, single-level (see the
+    # bigint-cents block)
     big = (
         t["lineitem"]
         .groupBy("l_orderkey")
         .agg(
             F.expr("SUM(l_quantity) AS q"),
             F.expr(
-                f"CAST(ROUND(CAST({qty_term} AS DECIMAL(38,0)) / 100, 2) "
+                f"CAST(ROUND(CAST(SUM({QTY_C}) AS DECIMAL(38,0)) / 100, 2) "
                 "AS DOUBLE) AS sum_qty"
-                if _money_cents_mode()
-                else f"CAST(ROUND({qty_term}, 2) AS DOUBLE) AS sum_qty"
             ),
         )
         .filter("q > 300")

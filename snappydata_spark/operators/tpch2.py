@@ -90,70 +90,33 @@ WHERE CAST(value_dec AS DOUBLE) >
 def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 (getQuery11, lineitem standing in for partsupp):
     groups above a global-total threshold (uncorrelated scalar subquery).
-    Revenue sums go through exact DECIMAL on both engines (the fuzzer's
-    class-1 divergence: at sf0.001 this query's double sums landed on a
-    .xx5 rounding boundary with different summation orders — decimal
-    addition is associative, so the result is order-independent)."""
-    from snappydata_spark.operators.tpch import (
-        DISC_H,
-        PRICE_C,
-        _money_cents_mode,
-    )
+    Revenue sums are exact on both engines (the fuzzer's class-1
+    divergence: at sf0.001 this query's double sums landed on a .xx5
+    rounding boundary with different summation orders — exact addition
+    is associative, so the result is order-independent)."""
+    from snappydata_spark.operators.tpch import DISC_H, PRICE_C
 
     t = load_tables(spark, sf_dir, ("lineitem",))
-    if _money_cents_mode():
-        # r13 (guide §2.2/§2.5, the tpch.py bigint-cents discipline):
-        # both aggregations accumulated decimal(18,4) terms — one
-        # JavaBigDecimal add per row, twice over lineitem.  Accumulate
-        # the revenue term as BIGINT 1e-4 dollar units instead:
-        # - sp: SINGLE-level BIGINT (the q18 shape, not q01's
-        #   partition-id two-level — an A/B showed the extra 591k-cell
-        #   exchange+agg costs more than it saves here): per
-        #   (suppkey, partkey) group rows are join-fanout bounded
-        #   (TPC-H draws each line's pair from partsupp: ~7.5
-        #   rows/pair at EVERY scale factor, pairs scale with the
-        #   corpus), so a group sum stays ~8e9 « 2^63; overflowing
-        #   int64 would take ~8.4e9 rows in ONE pair group.
-        # - threshold: per-scan-partition BIGINT partials + exact
-        #   decimal outer sum (per-task rows are split-bounded, but the
-        #   GLOBAL row count is not — the q01 overflow argument).
-        # /1e4 decimal division is exact (result scale 6 >= needed 4),
-        # so value_dec, the double casts, the ROUND(.,2) tail and the
-        # threshold compare are bit-identical to the decimal plan
-        # (verified cell-by-cell over 590 973 groups at sf0.1).
-        rev_u = f"SUM({PRICE_C} * {DISC_H}) AS rev_u"
-        sp = (
-            t["lineitem"]
-            .groupBy("l_suppkey", "l_partkey")
-            .agg(F.expr(rev_u))
-            .select(
-                "l_suppkey",
-                "l_partkey",
-                F.expr(
-                    "CAST(rev_u AS DECIMAL(38,0)) / 10000 AS value_dec"
-                ),
-            )
+    # revenue accumulates as single-level BIGINT 1e-4 dollar units; the
+    # /1e4 decimal division is exact (see the bigint-cents block in
+    # tpch.py).  One lineitem scan serves both sides: the threshold needs
+    # only the global revenue total, and the exact value_dec group sums
+    # add up to it — the oracle's own `SELECT SUM(value_dec) FROM sp`.
+    # sp is persisted because both branches of the returned plan consume
+    # it (consumed-by-returned-plan frames rely on the session
+    # clearCache, see OPTIMIZATION_r13.md §8); AQE does not reuse the
+    # grouped exchange across the broadcast-subquery boundary, so without
+    # the persist the grouped aggregate runs twice.
+    sp = (
+        t["lineitem"]
+        .groupBy("l_suppkey", "l_partkey")
+        .agg(F.expr(f"SUM({PRICE_C} * {DISC_H}) AS rev_u"))
+        .select(
+            "l_suppkey",
+            "l_partkey",
+            F.expr("CAST(rev_u AS DECIMAL(38,0)) / 10000 AS value_dec"),
         )
-    else:
-        sp = (
-            t["lineitem"]
-            .groupBy("l_suppkey", "l_partkey")
-            .agg(F.sum(_rev().cast("decimal(18,4)")).alias("value_dec"))
-        )
-    # r13b (guide §2.4 — one lineitem scan, not two): the threshold needs
-    # only the GLOBAL revenue total, and value_dec group sums are EXACT
-    # (bigint integer units /1e4 exact decimal division in cents mode;
-    # associative decimal(18,4) addition in decimal mode), so
-    # SUM(value_dec) over the groups equals the total the old second
-    # lineitem pass computed from raw rows — it is literally the oracle's
-    # own `SELECT SUM(value_dec) FROM sp`, and the double cast of the
-    # identical exact total is bit-identical.  sp is persisted because
-    # BOTH branches of the returned plan consume it (the repo persist
-    # rule: consumed-by-returned-plan frames rely on the session
-    # clearCache, see OPTIMIZATION_r13.md §8); AQE does NOT reuse the
-    # grouped exchange across the broadcast-subquery boundary (verified:
-    # final plan had 3 independent ShuffleQueryStages), so without the
-    # persist the grouped aggregate really ran twice.
+    )
     sp = sp.persist()
     threshold = sp.agg(
         (F.sum("value_dec").cast("double") * 0.00008).alias("thr")

@@ -364,11 +364,15 @@ def test_connected_components_numeric_ids_unchanged(spark):
     assert got == {(10, 10), (11, 10), (12, 10), (20, 20), (21, 20)}
 
 
+def _labels(df):
+    return {(r.node, r.cluster) for r in df.collect()}
+
+
 def test_connected_components_local_matches_distributed(spark, monkeypatch):
-    """r13 bounded-collect fast path: the numpy union-find labels must be
-    IDENTICAL to the distributed min-label loop's on the same graph —
-    including long chains (multi-round propagation) and singleton-free
-    components — and the cap env var must route between the paths."""
+    """The driver-side numpy labels must be IDENTICAL to the distributed
+    min-label loop's on the same graph — including long chains
+    (multi-round propagation) and singleton-free components — and the
+    CC_COLLECT_CAP constant must route between the paths."""
     # chain 0-1-2-...-9 (diameter 9: exercises multi-round convergence),
     # a triangle, a 2-cycle duplicate edge, and reversed-order pairs
     edges = (
@@ -377,16 +381,9 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
         + [(200, 201), (201, 200), (300, 250)]
     )
     pairs = spark.createDataFrame(edges, "doc1 long, doc2 long")
-    monkeypatch.setenv("SPARK_GRAFT_CC_COLLECT_CAP", "250000")
-    local = {
-        (r.node, r.cluster)
-        for r in dedup.connected_components(pairs).collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_CC_COLLECT_CAP", "0")  # force the loop
-    dist = {
-        (r.node, r.cluster)
-        for r in dedup.connected_components(pairs).collect()
-    }
+    local = _labels(dedup.connected_components(pairs))
+    monkeypatch.setattr(dedup, "CC_COLLECT_CAP", 0)  # force the loop
+    dist = _labels(dedup.connected_components(pairs))
     assert local == dist
     assert {(0, 0), (9, 0), (102, 100), (201, 200), (300, 250), (250, 250)} <= local
 
@@ -397,19 +394,18 @@ def test_connected_components_cap_falls_back(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(10)] + [(50, 60)], "doc1 long, doc2 long"
     )
-    monkeypatch.setenv("SPARK_GRAFT_CC_COLLECT_CAP", "5")  # 11 pairs > 5
-    got = {
-        (r.node, r.cluster)
-        for r in dedup.connected_components(pairs).collect()
-    }
+    monkeypatch.setattr(dedup, "CC_COLLECT_CAP", 5)  # 11 pairs > 5
+    monkeypatch.setattr(
+        type(pairs), "toArrow", lambda self: pytest.fail("collected over the cap")
+    )
+    got = _labels(dedup.connected_components(pairs))
     assert got == {(i, 0) for i in range(11)} | {(50, 50), (60, 50)}
 
 
 def test_connected_components_local_nonlong_numeric_ids(spark, monkeypatch):
-    """r13b Arrow fast path: non-long primitive ids (int, double) go
-    through toArrow/createDataFrame(pa.Table) and must label identically
-    to the distributed loop, preserving the id type; DECIMAL ids (numeric
-    but non-primitive) must take the row-collect branch and still agree."""
+    """Non-long primitive ids (int, double) go through the Arrow labeler
+    and must label identically to the distributed loop, preserving the
+    id type; DECIMAL ids (numeric but non-primitive) take the loop."""
     from decimal import Decimal
 
     base = [(1, 2), (2, 3), (10, 11), (20, 20)]
@@ -422,25 +418,164 @@ def test_connected_components_local_nonlong_numeric_ids(spark, monkeypatch):
         pairs = spark.createDataFrame(
             edges, f"doc1 {typ}, doc2 {typ}"
         )
-        monkeypatch.setenv("SPARK_GRAFT_CC_COLLECT_CAP", "250000")
+        monkeypatch.setattr(dedup, "CC_COLLECT_CAP", 250000)
         local_df = dedup.connected_components(pairs)
-        local = {(r.node, r.cluster) for r in local_df.collect()}
-        monkeypatch.setenv("SPARK_GRAFT_CC_COLLECT_CAP", "0")
-        dist = {
-            (r.node, r.cluster)
-            for r in dedup.connected_components(pairs).collect()
-        }
+        local = _labels(local_df)
+        monkeypatch.setattr(dedup, "CC_COLLECT_CAP", 0)
+        dist = _labels(dedup.connected_components(pairs))
         assert local == dist, typ
         assert local_df.schema["node"].dataType == pairs.schema["doc1"].dataType
 
 
-def test_agg_cube_cents_mode_matches_decimal_mode(spark, sf_dir, monkeypatch):
-    """r13b pre-aggregated bigint-unit cube must produce cell-identical
-    rows to the direct decimal CUBE (SPARK_GRAFT_MONEY_SUM=decimal)."""
-    from snappydata_spark.operators.analytic import agg_cube
+@pytest.mark.parametrize("typ", ["long", "decimal(10,0)"])
+def test_connected_components_one_schema_on_every_exit(spark, monkeypatch, typ):
+    """Every exit — empty edge set, local labeler, distributed loop, and
+    the decimal-id route — returns the loop's schema: node and cluster
+    of the id type, nullable (the ids here are nullable columns)."""
+    from decimal import Decimal
 
-    monkeypatch.delenv("SPARK_GRAFT_MONEY_SUM", raising=False)
-    cents = {tuple(r) for r in agg_cube(spark, sf_dir).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_MONEY_SUM", "decimal")
-    dec = {tuple(r) for r in agg_cube(spark, sf_dir).collect()}
-    assert cents == dec and len(cents) > 0
+    from pyspark.sql.types import StructField, StructType
+
+    conv = Decimal if typ.startswith("decimal") else int
+    ddl = f"doc1 {typ}, doc2 {typ}"
+    pairs = spark.createDataFrame(
+        [(conv(1), conv(2)), (conv(2), conv(3)), (conv(7), conv(8))], ddl
+    )
+    id_type = pairs.schema["doc1"].dataType
+    expect = StructType(
+        [StructField("node", id_type, True), StructField("cluster", id_type, True)]
+    )
+    empty = dedup.connected_components(spark.createDataFrame([], ddl))
+    local = dedup.connected_components(pairs)
+    monkeypatch.setattr(dedup, "CC_COLLECT_CAP", 0)
+    loop = dedup.connected_components(pairs)
+    assert empty.schema == expect and empty.count() == 0
+    assert local.schema == expect
+    assert loop.schema == expect
+    assert _labels(local) == _labels(loop)
+
+
+_RESULT_SIZE_MSG = (
+    "Job aborted due to stage failure: Total size of serialized results "
+    "of 1 tasks (7.8 MiB) is bigger than spark.driver.maxResultSize "
+    "(1024.0 KiB)"
+)
+
+
+def _collect_error(spark, kind, msg):
+    """The two shapes a failed toArrow job reaches Python in: the Py4J
+    error of the Arrow server's getResult (what PySpark 4.1 raises), or
+    the PySparkRuntimeError of ArrowCollectSerializer.load_stream."""
+    if kind == "getResult":
+        from py4j.protocol import Py4JJavaError
+
+        jexc = spark._jvm.org.apache.spark.SparkException(msg)
+        return Py4JJavaError("An error occurred while calling o1.getResult.", jexc)
+    from pyspark.errors import PySparkRuntimeError
+
+    return PySparkRuntimeError(
+        errorClass="ERROR_OCCURRED_WHILE_CALLING",
+        messageParameters={
+            "func_name": "ArrowCollectSerializer.load_stream",
+            "error_msg": msg,
+        },
+    )
+
+
+def _raising_to_arrow(exc):
+    def to_arrow(self):
+        raise exc
+
+    return to_arrow
+
+
+@pytest.mark.parametrize("kind", ["getResult", "load_stream"])
+def test_connected_components_result_size_falls_back_to_loop(
+    spark, monkeypatch, kind
+):
+    """A local collect that exceeds spark.driver.maxResultSize must not
+    fail the query: connected_components takes the loop instead."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)] + [(40, 41), (41, 42)],
+        "doc1 long, doc2 long",
+    )
+    monkeypatch.setattr(dedup, "CC_COLLECT_CAP", 0)
+    loop = _labels(dedup.connected_components(pairs))
+    monkeypatch.setattr(dedup, "CC_COLLECT_CAP", 250000)
+    exc = _collect_error(spark, kind, _RESULT_SIZE_MSG)
+    monkeypatch.setattr(type(pairs), "toArrow", _raising_to_arrow(exc))
+    assert _labels(dedup.connected_components(pairs)) == loop
+
+
+@pytest.mark.parametrize("kind", ["getResult", "load_stream", "other"])
+def test_connected_components_other_collect_errors_raise(
+    spark, monkeypatch, kind
+):
+    """Only the result-size error falls back; any other collect failure,
+    of the caught types or not, still surfaces."""
+    msg = "Job aborted due to stage failure: boom"
+    exc = RuntimeError(msg) if kind == "other" else _collect_error(spark, kind, msg)
+    pairs = spark.createDataFrame([(1, 2)], "doc1 long, doc2 long")
+    monkeypatch.setattr(type(pairs), "toArrow", _raising_to_arrow(exc))
+    with pytest.raises(type(exc), match="boom"):
+        dedup.connected_components(pairs)
+
+
+_RESULT_SIZE_CHILD = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+from snappydata_spark import dedup, get_spark
+
+# broadcast joins off: the loop's label broadcast would trip a 1m limit
+# too, where a real maxResultSize sits far above the broadcast threshold
+spark = get_spark(
+    "cc-result-size", master="local[1]", shuffle_partitions=2,
+    extra_conf={
+        "spark.driver.maxResultSize": "1m",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.ui.enabled": "false",
+    },
+)
+seen = []
+local_labels = dedup._cc_local_labels
+def spy(*args):
+    out = local_labels(*args)
+    seen.append(out is None)
+    return out
+dedup._cc_local_labels = spy
+n = 100000  # 200k symmetrized (long, long) edges: ~3 MB of Arrow, over 1m
+pairs = spark.range(n).select(
+    (F.col("id") * 2).alias("doc1"), (F.col("id") * 2 + 1).alias("doc2")
+)
+out = dedup.connected_components(pairs)
+bad = out.filter(F.col("cluster") != F.col("node") - F.col("node") % 2).count()
+print(json.dumps({"fell_back": seen, "rows": out.count(), "bad": bad}))
+spark.stop()
+"""
+
+
+def test_connected_components_real_result_size_limit_falls_back(tmp_path):
+    """End to end, in a child JVM with spark.driver.maxResultSize=1m: the
+    local collect of a graph over that size really fails, and the query
+    still returns the loop's labels."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1")
+    env.pop("SPARK_GRAFT_EXTRA_CONF", None)
+    out = subprocess.run(
+        [sys.executable, "-c", _RESULT_SIZE_CHILD, root],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        cwd=str(tmp_path),
+        env=env,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"fell_back": [True], "rows": 200000, "bad": 0}
+    assert "spark.driver.maxResultSize" in out.stderr

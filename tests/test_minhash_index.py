@@ -243,3 +243,42 @@ def test_rep_gate_reelects_visible_rep_under_rls(snappy, spark):
     finally:
         snappy.sql("ALTER TABLE mh_rls DISABLE ROW LEVEL SECURITY")
         snappy.sql("DROP POLICY p_rls_rep")
+
+
+def test_digestless_band_table_gives_same_edges(snappy, spark):
+    """Band tables stored before the sig_digest column existed take
+    _sig_frame's re-derived signature key; collapse_banded_pairs and the
+    index's candidate_pairs must return the same edges on them as on the
+    same table with the digest."""
+    base = "the quick brown fox jumps over the lazy dog again and again "
+    other = "entirely different content about query engines and storage "
+    rows = [Row(doc_id=i, text=base * 3) for i in (1, 5, 7)]  # mirrors
+    rows += [
+        Row(doc_id=2, text=(base * 3) + " zzz"),  # near-dup of 1
+        Row(doc_id=3, text=other * 2),
+        Row(doc_id=6, text=(other * 2) + "   "),  # same signature as 3
+        Row(doc_id=4, text="short"),  # no shingle: no band rows
+    ]
+    snappy.create_table(
+        "dl_docs", options={"key_columns": "doc_id"},
+        df=spark.createDataFrame(rows),
+    )
+    snappy.sql("CREATE INDEX dl_mh ON dl_docs(text) USING minhash")
+    banded = snappy.table("dl_mh__ann")
+    assert "sig_digest" in banded.columns
+
+    def edges(df):
+        return {(r.doc1, r.doc2) for r in df.collect()}
+
+    with_digest = edges(dedup.collapse_banded_pairs(banded))
+    assert {(1, 5), (1, 7), (3, 6), (1, 2)} <= with_digest
+    stripped = banded.drop("sig_digest")
+    assert edges(dedup.collapse_banded_pairs(stripped)) == with_digest
+    assert edges(index_minhash.candidate_pairs(snappy, "dl_mh")) == with_digest
+    snappy.create_table(
+        "dl_mh__ann", options={"key_columns": "doc_id,band"},
+        df=spark.createDataFrame(stripped.collect(), stripped.schema),
+        overwrite=True,
+    )
+    assert "sig_digest" not in snappy.table("dl_mh__ann").columns
+    assert edges(index_minhash.candidate_pairs(snappy, "dl_mh")) == with_digest

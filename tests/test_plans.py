@@ -36,20 +36,16 @@ def test_q5_dims_broadcast(spark, sf_dir):
 
 
 def test_q1_single_shuffle(spark, sf_dir):
-    from snappydata_spark.operators.tpch import _money_cents_mode, q01
+    from snappydata_spark.operators.tpch import q01
 
     df = q01(spark, sf_dir)
-    if _money_cents_mode():
-        # r13 bigint-cents shape: inner (keys, partition-id) BIGINT agg +
-        # outer exact decimal agg = 2 exchanges, but the first carries
-        # exactly one cell per (group, task) — the same rows the decimal
-        # plan's partial aggregates shipped — and the second carries
-        # groups only (see the bigint-cents block in operators/tpch.py)
-        assert exchange_count(df) == 2
-        assert "spark_partition_id" in physical_plan(df).lower()
-    else:
-        assert exchange_count(df) == 1  # partial agg → exchange → final agg
+    # bigint-cents shape: inner (keys, partition-id) BIGINT agg + outer
+    # exact decimal agg = 2 exchanges; the first carries one cell per
+    # (group, task), the second groups only (see the bigint-cents block
+    # in operators/tpch.py)
+    assert exchange_count(df) == 2
     plan = physical_plan(df)
+    assert "spark_partition_id" in plan.lower()
     assert "HashAggregate" in plan
 
 
