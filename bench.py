@@ -144,9 +144,9 @@ def plan_cache_hit_vs_cold(spark, sf_dir):
         sn.sql(q)
     cold = round(_t.time() - t0, 3)
     sn.plan_cache.enabled = True
-    # r12 (verdict item 7): the varied-literal hit path (normalized-key
-    # lookup — the dashboard-refresh shape plan_cache_20_repeats
-    # executes) timed as BUILD only, so the facade budget is a bench row:
+    # r12 (verdict item 7): the varied-literal path (20 new texts, each
+    # a plan-cache miss — the cache keys on the exact text) timed as
+    # BUILD only, so the facade budget is a bench row:
     # profiled 2026-08-17 at ~1.9 ms/call vs 9.9 ms cache-off build and
     # ~188 ms execution — sql() overhead is noise against execution.
     t0 = _t.time()

@@ -11,7 +11,6 @@ from snappydata_spark.operators import dml  # noqa: F401
 from snappydata_spark.operators import textops  # noqa: F401
 from snappydata_spark.operators import dedup_ops  # noqa: F401
 from snappydata_spark.operators import aqp_ops  # noqa: F401
-from snappydata_spark.operators import tpch2  # noqa: F401
 from snappydata_spark.operators import sqlfeatures  # noqa: F401
 from snappydata_spark.operators import sqlfeatures2  # noqa: F401
 from snappydata_spark.operators import timeseries_ops  # noqa: F401

@@ -1,4 +1,4 @@
-from snappydata_spark.plans.cache import PlanCache, normalize_sql
+from snappydata_spark.plans.cache import PlanCache
 from snappydata_spark.plans.explainer import (
     physical_plan,
     exchange_count,
@@ -7,7 +7,6 @@ from snappydata_spark.plans.explainer import (
 
 __all__ = [
     "PlanCache",
-    "normalize_sql",
     "physical_plan",
     "exchange_count",
     "scan_pushdown_info",

@@ -1,20 +1,16 @@
-"""Plan cache with parameterized literals.
+"""Plan cache keyed on the exact statement text.
 
-The reference's single biggest lifecycle feature missing from Catalyst
-(SURVEY.md §4): literals in the SQL text are tokenized (ParamLiteral,
-SnappyParser.scala:226-261) so textually different but structurally
-identical queries share one cached plan, with new literal values re-bound
-(SnappySession.scala:2584-2683).
-
-PySpark realization: normalize the SQL text by replacing literals with
-positional slots → (template, values).  The cache maps
-(scope, template, values) → the analyzed DataFrame, so a repeated query
-(same template AND values — the dashboard refresh shape) returns the
-cached DataFrame with zero re-parse/re-analysis.  A template hit with NEW
-values re-binds through Spark 3.4+ parameterized sql(template, args):
-one parse of the same template text, values bound as parameters — the
-closest public-API analogue of ParamLiteral re-binding (PySpark exposes
-no hook to mutate literals inside an already-analyzed plan).
+The reference tokenizes literals (ParamLiteral, SnappyParser.scala:
+226-261) so that one analyzed plan serves many literal values, re-bound
+in place (SnappySession.scala:2584-2683).  PySpark exposes no hook to
+rebind a literal inside an analyzed plan, so a literal-tokenized key
+could only ever reuse exact repeats anyway — and re-parsing a tokenized
+template with bound parameters changes answers (a parameter binds
+``1.5`` as DOUBLE where the SQL literal is DECIMAL(2,1), and a Python
+unescaper is never quite Spark's).  The cache therefore maps
+(scope, text) → the analyzed DataFrame: a repeated statement (the
+dashboard refresh shape) returns the cached DataFrame with zero
+re-parse/re-analysis, and a miss is exactly ``spark.sql(text)``.
 
 `scope` carries the session user: row-level-security policies make view
 contents user-dependent, so plans must never be shared across users
@@ -25,45 +21,15 @@ facade does this in `_refresh_view`.
 
 from __future__ import annotations
 
-import re
 import threading
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
-# string literals first (so numbers inside strings aren't tokenized), then
-# numeric literals not part of an identifier.  Double-quoted text is
-# PROTECTED but not parameterized: under Spark's default dialect "..." is
-# a string literal, under ANSI double-quoted-identifiers it's an
-# identifier — either way its contents must not be tokenized (a number
-# inside would otherwise leave a :pN marker INSIDE the literal, which
-# parses fine with the arg unused and silently compares against ':pN').
-_STRING = re.compile(r"'(?:[^'\\]|\\.)*'")
-_DQUOTED = re.compile(r'"(?:[^"\\]|\\.)*"')
-_NUMBER = re.compile(r"(?<![\w'\.])-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?(?![\w'])")
-
-
-def normalize_sql(text: str) -> tuple[str, list[str]]:
-    """Replace literals with :p0, :p1 ... ; return (template, values)."""
-    values: list[str] = []
-
-    def _sub(m: re.Match) -> str:
-        if m.group(0).startswith('"'):
-            return m.group(0)  # protected verbatim, never parameterized
-        values.append(m.group(0))
-        return f":p{len(values) - 1}"
-
-    # one pass: find string / double-quoted / number occurrences in order
-    combined = re.compile(
-        f"(?:{_STRING.pattern})|(?:{_DQUOTED.pattern})|(?:{_NUMBER.pattern})"
-    )
-    template = combined.sub(_sub, text)
-    return template, values
-
 
 class PlanCache:
     """Guava-planCache analogue (size default PlanCacheSize, Literals.scala:
-    122-124); LRU of normalized-SQL → parameterized plan."""
+    122-124); LRU of (scope, SQL text) → analyzed plan."""
 
     def __init__(self, max_size: int = 3000, enabled: bool = True):
         self.max_size = max_size
@@ -75,40 +41,19 @@ class PlanCache:
         self._lock = threading.RLock()
         self.hits = 0
         self.misses = 0
-        # templates that failed parameterized parse once fall back to raw
-        # text permanently (literal tokenization can move a literal into a
-        # position where parameters are illegal, e.g. LIMIT in old Sparks)
-        self._raw_templates: set[str] = set()
 
     def get_or_build(self, spark: SparkSession, text: str, scope: str = "") -> DataFrame:
         if not self.enabled:
             return spark.sql(text)
-        template, values = normalize_sql(text)
-        key = (scope, template, tuple(values))
+        key = (scope, text)
         with self._lock:
             cached = self._cache.get(key)
             if cached is not None:
-                # true plan reuse: same template + same values (dashboard
-                # refresh) returns the already-analyzed DataFrame
                 self.hits += 1
                 self._cache.move_to_end(key)
                 return cached
             self.misses += 1
-        # Spark 3.4+ parameterized SQL: the parse tree for a given template
-        # is identical across calls; literal values bind as parameters
-        # (DynamicReplacableConstant analogue, ParamLiteral.scala:44-100).
-        df = None
-        if values and template not in self._raw_templates:
-            args = {f"p{i}": _parse_literal(v) for i, v in enumerate(values)}
-            try:
-                df = spark.sql(template, args=args)
-            except Exception:
-                # remember dialect corners the normalizer mangles and stop
-                # retrying them (CodegenSparkFallback analogue,
-                # SnappyStrategies:831-856)
-                self._raw_templates.add(template)
-        if df is None:
-            df = spark.sql(text)
+        df = spark.sql(text)
         with self._lock:
             self._cache[key] = df
             if len(self._cache) > self.max_size:
@@ -122,38 +67,3 @@ class PlanCache:
         time and would otherwise serve stale plans."""
         with self._lock:
             self._cache.clear()
-
-
-# Spark's ParserUtils.unescapeSQLString escape set: named control chars,
-# \uXXXX, LIKE escapes (\% \_) keep their backslash, any other \x → x
-_NAMED_ESCAPES = {
-    "n": "\n",
-    "t": "\t",
-    "r": "\r",
-    "b": "\b",
-    "0": "\0",
-    "Z": "\x1a",
-    "%": "\\%",
-    "_": "\\_",
-}
-
-
-def _unescape_sql_string(s: str) -> str:
-    def _one(m: re.Match) -> str:
-        if m.group(1) is not None:  # \uXXXX
-            return chr(int(m.group(1), 16))
-        c = m.group(2)
-        return _NAMED_ESCAPES.get(c, c)
-
-    return re.sub(r"\\u([0-9a-fA-F]{4})|\\(.)", _one, s)
-
-
-def _parse_literal(tok: str):
-    if tok.startswith("'"):
-        return _unescape_sql_string(tok[1:-1])
-    try:
-        if re.search(r"[\.eE]", tok):
-            return float(tok)
-        return int(tok)
-    except ValueError:
-        return tok

@@ -109,8 +109,8 @@ def test_prepared_statement(snappy):
 
 def test_plan_cache_returns_cached_dataframe(snappy):
     """Identical query → the SAME analyzed DataFrame object (true plan
-    reuse, CachedDataFrame analogue); new literal values → parameterized
-    re-bind (miss, but same template parse); mutation → invalidation."""
+    reuse, CachedDataFrame analogue); new literal values → new text, a
+    miss; mutation → invalidation."""
     snappy.spark.range(50).selectExpr("id AS k", "id * 3 AS v").createOrReplaceTempView(
         "pc_t"
     )
@@ -190,6 +190,31 @@ def test_plan_cache_concurrent_sessions(snappy):
     assert pc.hits >= 80 - 8 * 3
 
 
+@pytest.mark.parametrize(
+    "q",
+    [
+        "SELECT 1.5 AS x",
+        "SELECT 0.1 * 3 AS x",
+        r"SELECT '\101' AS s",
+        r"SELECT 'a\tb' AS s",
+        "SELECT 'it''s' AS s",
+        "SELECT DATE '2020-01-01' AS d",
+    ],
+)
+def test_plan_cache_matches_spark_sql(snappy, q):
+    """A cached statement answers exactly as spark.sql does: same schema
+    (types and nullability) and rows; the second identical call is a
+    cache hit returning the same plan."""
+    expected = snappy.spark.sql(q)
+    pc = snappy.plan_cache
+    first = snappy.sql(q)
+    assert first.schema == expected.schema
+    assert first.collect() == expected.collect()
+    hits = pc.hits
+    assert snappy.sql(q) is first
+    assert pc.hits == hits + 1
+
+
 def test_join_hints_passthrough(snappy, sf_dir):
     """Spark 3 join hints (the reference's --+ joinType() comment hints,
     QueryHint Literals.scala:405-511) flow through session.sql."""
@@ -267,9 +292,8 @@ def test_reference_comment_join_hints(snappy, sf_dir):
 
 
 def test_plan_cache_double_quoted_literal_protected(snappy):
-    """A number inside a double-quoted string must NOT be tokenized —
-    the :pN marker would land INSIDE the literal and the query would
-    silently compare against the string ':p0'."""
+    """A number inside a double-quoted string literal compares as the
+    literal text, never as a placeholder such as ':p0'."""
     snappy.spark.createDataFrame(
         [("100",), (":p0",)], "c string"
     ).createOrReplaceTempView("dq_t")
@@ -278,8 +302,8 @@ def test_plan_cache_double_quoted_literal_protected(snappy):
 
 
 def test_plan_cache_escape_sequences_bind_exactly(snappy):
-    """Backslash escapes in a parameterized literal must bind the same
-    string the raw SQL produces (tab, newline, backslash, unicode)."""
+    """Backslash escapes in a cached statement's literals mean what they
+    mean to spark.sql (tab, newline)."""
     snappy.spark.createDataFrame(
         [("a\tb",), ("a\\tb",), ("x\ny",)], "c string"
     ).createOrReplaceTempView("esc_t")
@@ -287,8 +311,3 @@ def test_plan_cache_escape_sequences_bind_exactly(snappy):
     assert [r.c for r in rows] == ["a\tb"]
     rows = snappy.sql("SELECT c FROM esc_t WHERE c = 'x\\ny'").collect()
     assert [r.c for r in rows] == ["x\ny"]
-    from snappydata_spark.plans.cache import _parse_literal
-
-    assert _parse_literal(r"'a\\b'") == "a\\b"
-    assert _parse_literal(r"'A'") == "A"
-    assert _parse_literal(r"'100\%'") == "100\\%"  # LIKE escape survives

@@ -187,7 +187,10 @@ def test_sf100_fresh_walls_are_primary():
     root = os.path.dirname(os.path.dirname(__file__))
     report = json.load(open(os.path.join(root, "BENCH_REGISTRY_SF100.json")))
     fresh = {k: v for k, v in report.items() if v.get("fresh_session")}
-    assert fresh, "no fresh-session rows recorded (tools/remeasure_fresh.py)"
+    assert fresh, (
+        "no fresh-session rows recorded in BENCH_REGISTRY_SF100.json "
+        "(their provenance is in BENCH_SF100.md, round 11)"
+    )
     for k, v in fresh.items():
         assert "sweep_wall" in v, f"{k}: fresh row lacks sweep_wall sidecar"
         assert "wall" in v and v["wall"] > 0

@@ -48,7 +48,8 @@ def main() -> None:
     out: dict[str, float] = {}
     # full facade build (plan-cache hit path, identical text)
     out["sql_build_hit_ms"] = timed(lambda: sn.sql(q))
-    # varied-literal hit path (normalized-key lookup, the dashboard shape)
+    # varied-literal hit path: 20 distinct texts, each a cache hit after
+    # its first miss (the dashboard shape; the key is the exact text)
     i = [0]
 
     def varied():
