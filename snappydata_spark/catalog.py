@@ -18,6 +18,7 @@ import json
 import os
 import shutil
 import tempfile
+import threading
 from dataclasses import dataclass, field, asdict
 
 _META_FILE = "_snappy_meta.json"
@@ -84,6 +85,17 @@ def canon_name(name: str) -> str:
     return n
 
 
+def write_json_atomic(path: str, obj, **dump_kwargs) -> None:
+    """Replace `path` with `obj` as JSON in one os.replace: a crash or a
+    concurrent reader sees the old file or the new one, never a torn
+    write.  The temp name is per process and thread, so two writers of
+    one path never share it."""
+    tmp = f"{path}.tmp.{os.getpid()}.{threading.get_ident()}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, **dump_kwargs)
+    os.replace(tmp, path)
+
+
 class Catalog:
     """Directory-backed catalog: one subdir per managed table."""
 
@@ -106,11 +118,11 @@ class Catalog:
         os.makedirs(self.table_path(meta.name), exist_ok=True)
         # atomic replace: meta carries the live bucket generation — a
         # torn write must never be observable
-        path = os.path.join(self.table_path(meta.name), _META_FILE)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(asdict(meta), f, indent=2)
-        os.replace(tmp, path)
+        write_json_atomic(
+            os.path.join(self.table_path(meta.name), _META_FILE),
+            asdict(meta),
+            indent=2,
+        )
 
     def load_meta(self, name: str) -> TableMeta:
         with open(os.path.join(self.table_path(name), _META_FILE)) as f:

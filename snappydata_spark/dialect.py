@@ -17,14 +17,11 @@ from dataclasses import dataclass, field
 
 @dataclass
 class Statement:
-    kind: str  # put | update | delete | truncate | insert_select |
-    #            create_table | create_sample | create_index | drop_index |
-    #            drop_table | passthrough
+    kind: str  # one per statement shape split_statement knows, else passthrough
     table: str = ""
     where: str | None = None
     assignments: dict = field(default_factory=dict)
     source_sql: str | None = None
-    source_df: object = None
     provider: str = "column"
     options: dict = field(default_factory=dict)
     schema_sql: str | None = None
@@ -87,6 +84,24 @@ def strip_alias_qualifier(expr: str | None, alias: str) -> str | None:
 
 
 _TRUNCATE = re.compile(r"^\s*TRUNCATE\s+TABLE\s+([\w.]+)\s*;?\s*$", re.I)
+# transaction control, with ij's AUTOCOMMIT and the reference's SET
+# ISOLATION; then table maintenance (the SQL faces of table_history(),
+# vacuum() and compact_table())
+_TX_CONTROL = re.compile(
+    r"^\s*(BEGIN(?:\s+TRANSACTION)?|START\s+TRANSACTION|COMMIT|ROLLBACK)\s*;?\s*$",
+    re.I,
+)
+_AUTOCOMMIT = re.compile(r"^\s*AUTOCOMMIT\s+(ON|OFF)\s*;?\s*$", re.I)
+_SET_ISOLATION = re.compile(
+    r"^\s*SET\s+ISOLATION\s+(?:TO\s+)?([A-Za-z_ ]+?)\s*;?\s*$", re.I
+)
+_DESCRIBE_HISTORY = re.compile(
+    r"^\s*DESCRIBE\s+HISTORY\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I
+)
+_VACUUM = re.compile(r"^\s*VACUUM\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I)
+_COMPACT_TABLE = re.compile(
+    r"^\s*COMPACT\s+TABLE\s+([A-Za-z_][\w.]*)\s*;?\s*$", re.I
+)
 # optional ANSI column list after the table name; the (?!SELECT\b)
 # lookahead keeps a parenthesized subselect from being eaten as a list
 _COL_LIST = r"(?:\(\s*(?!SELECT\b)([\w\s,]+?)\s*\)\s*)?"
@@ -1112,6 +1127,13 @@ def _values_defaults_to_null(body: str) -> tuple[str, list[int]]:
     )
 
 
+def _cols_opt(group: str | None) -> dict:
+    """Options entry for an optional `(c1, c2, ...)` column list."""
+    if not group:
+        return {}
+    return {"columns": [c.strip().lower() for c in group.split(",") if c.strip()]}
+
+
 def split_statement(text: str) -> Statement:
     # preparse gate (plan-cache cold-path cost discipline): a statement
     # whose head keyword is a plain query form can never match any of the
@@ -1122,6 +1144,28 @@ def split_statement(text: str) -> Statement:
     # reach any of them (fuzzed in test_dialect_property.py).
     if _QUERY_HEAD.match(text):
         return Statement("passthrough")
+    m = _TX_CONTROL.match(text)
+    if m:
+        head = m.group(1)[0].upper()
+        return Statement(
+            "commit" if head == "C" else "rollback" if head == "R" else "begin"
+        )
+    m = _AUTOCOMMIT.match(text)
+    if m:
+        return Statement("autocommit", options={"on": m.group(1).upper() == "ON"})
+    m = _SET_ISOLATION.match(text)
+    if m:
+        level = m.group(1).strip().lower().replace(" ", "_")
+        return Statement("set_isolation", options={"level": level})
+    m = _DESCRIBE_HISTORY.match(text)
+    if m:
+        return Statement("describe_history", table=m.group(1))
+    m = _VACUUM.match(text)
+    if m:
+        return Statement("vacuum", table=m.group(1))
+    m = _COMPACT_TABLE.match(text)
+    if m:
+        return Statement("compact_table", table=m.group(1))
     m = _MERGE.match(text)
     if m:
         return _parse_merge(m)
@@ -1386,11 +1430,7 @@ def split_statement(text: str) -> Statement:
     m = _PUT.match(text)
     if m:
         body = m.group(3).strip()
-        cols = (
-            {"columns": [c.strip().lower() for c in m.group(2).split(",") if c.strip()]}
-            if m.group(2)
-            else {}
-        )
+        cols = _cols_opt(m.group(2))
         if body.upper().startswith("SELECT"):
             return Statement("put", table=m.group(1), source_sql=body, options=cols)
         # VALUES (...) [, (...)] — let Spark parse it as an inline table
@@ -1421,11 +1461,6 @@ def split_statement(text: str) -> Statement:
     m = _TRUNCATE.match(text)
     if m:
         return Statement("truncate", table=m.group(1))
-    def _cols_opt(group: str | None) -> dict:
-        if not group:
-            return {}
-        return {"columns": [c.strip().lower() for c in group.split(",") if c.strip()]}
-
     m = _INSERT_SELECT.match(text)
     if m:
         return Statement(

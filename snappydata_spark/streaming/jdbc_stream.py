@@ -43,6 +43,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from snappydata_spark.catalog import write_json_atomic
+
 # staging dir -> poller (module registry so DDL-created streams can be
 # driven without holding the object returned at CREATE time)
 POLLERS: dict[str, "JdbcCdcPoller"] = {}
@@ -78,10 +80,7 @@ class JdbcCdcPoller:
             return None
 
     def _save_offset(self, offset) -> None:
-        tmp = f"{self._state_path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"offset": offset}, f)
-        os.replace(tmp, self._state_path)
+        write_json_atomic(self._state_path, {"offset": offset})
 
     def _offset_literal(self, offset) -> str:
         if isinstance(offset, (int, float)):

@@ -30,6 +30,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from snappydata_spark.catalog import write_json_atomic
+
 
 class ContinuousAggregate:
     """foreachBatch callable maintaining the rollup table.
@@ -84,10 +86,7 @@ class ContinuousAggregate:
             return -1
 
     def _record_batch(self, batch_id: int) -> None:
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.replace(tmp, self._state_path())
+        write_json_atomic(self._state_path(), {"batch_id": batch_id})
 
     def _partial(self, batch: DataFrame) -> DataFrame:
         win = F.window(F.col(self.ts_col), self.bucket)

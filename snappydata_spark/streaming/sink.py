@@ -43,6 +43,8 @@ import os
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from snappydata_spark.catalog import write_json_atomic
+
 EVENT_INSERT = 0
 EVENT_UPDATE = 1
 EVENT_DELETE = 2
@@ -116,10 +118,7 @@ class SnappySink:
             return -1
 
     def _record_batch(self, batch_id: int) -> None:
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-        os.replace(tmp, self._state_path())
+        write_json_atomic(self._state_path(), {"batch_id": batch_id})
 
     # -- the sink --------------------------------------------------------
 

@@ -247,7 +247,7 @@ def test_constrained_tables_stay_serial(snappy, spark):
 
 
 def test_claims_registry_semantics():
-    from snappydata_spark.session import _TableWriteClaims
+    from snappydata_spark.session.locks import _TableWriteClaims
 
     c = _TableWriteClaims()
     assert c.try_claim(1, frozenset({"f1", "key:3"}))
@@ -280,7 +280,7 @@ def test_claims_registry_semantics():
 def test_flock_pin_survives_release(tmp_path):
     """A downgraded writer releases the in-process lock but must keep the
     cross-process flock pinned until its claim drops."""
-    from snappydata_spark.session import _TableMutationLock
+    from snappydata_spark.session.locks import _TableMutationLock
 
     lk = _TableMutationLock(str(tmp_path / "t.lock"))
     lk.acquire(5)

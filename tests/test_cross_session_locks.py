@@ -66,7 +66,7 @@ def test_two_sessions_same_store_serialize_puts(spark, sf_dir):
 
 @pytest.mark.skipif(os.name != "posix", reason="flock is POSIX-only")
 def test_outermost_lock_holds_os_flock():
-    from snappydata_spark.session import _TableMutationLock
+    from snappydata_spark.session.locks import _TableMutationLock
 
     store = tempfile.mkdtemp(prefix="snappy_flock_")
     path = os.path.join(store, "_locks", "t.lock")

@@ -23,6 +23,52 @@ def test_parse_create_table_as_select():
     assert s.kind == "create_table" and s.source_sql == "SELECT 1 AS x"
 
 
+@pytest.mark.parametrize(
+    "text,kind",
+    [
+        ("BEGIN", "begin"),
+        ("begin transaction;", "begin"),
+        ("START TRANSACTION", "begin"),
+        ("COMMIT", "commit"),
+        (" rollback ;", "rollback"),
+    ],
+)
+def test_parse_transaction_control(text, kind):
+    assert split_statement(text).kind == kind
+
+
+@pytest.mark.parametrize("text,on", [("AUTOCOMMIT ON", True), ("autocommit off;", False)])
+def test_parse_autocommit(text, on):
+    s = split_statement(text)
+    assert s.kind == "autocommit" and s.options == {"on": on}
+
+
+@pytest.mark.parametrize(
+    "text,level",
+    [
+        ("SET ISOLATION READ COMMITTED", "read_committed"),
+        ("set isolation to Repeatable Read;", "repeatable_read"),
+        ("SET ISOLATION RESET", "reset"),
+    ],
+)
+def test_parse_set_isolation(text, level):
+    s = split_statement(text)
+    assert s.kind == "set_isolation" and s.options == {"level": level}
+
+
+@pytest.mark.parametrize(
+    "text,kind,table",
+    [
+        ("DESCRIBE HISTORY app.orders", "describe_history", "app.orders"),
+        ("vacuum t1;", "vacuum", "t1"),
+        ("COMPACT TABLE s.t2", "compact_table", "s.t2"),
+    ],
+)
+def test_parse_table_maintenance(text, kind, table):
+    s = split_statement(text)
+    assert s.kind == kind and s.table == table
+
+
 def test_ddl_lifecycle_via_sql(snappy, sf_dir):
     snappy.spark.read.parquet(f"{sf_dir}/nation.parquet").createOrReplaceTempView(
         "nation_src"

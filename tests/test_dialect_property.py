@@ -127,6 +127,10 @@ _STMT_KEYWORDS = [
     "INSERT INTO t VALUES (1)", "CREATE TABLE t (a INT)",
     "GRANT SELECT ON t TO u", "CALL SYS.EXPORT_DATA('x')",
     "CREATE SYNONYM s FOR t", "DEPLOY PACKAGE p 'g:a:v'",
+    "BEGIN", "BEGIN TRANSACTION", "START TRANSACTION", "COMMIT", "ROLLBACK",
+    "AUTOCOMMIT ON", "AUTOCOMMIT OFF", "SET ISOLATION READ COMMITTED",
+    "SET ISOLATION TO REPEATABLE READ", "DESCRIBE HISTORY t", "VACUUM t",
+    "COMPACT TABLE t",
 ]
 
 

@@ -41,7 +41,7 @@ ALLOWLIST = {
     # NOT IN surface-coverage exemplar: the null-aware broadcast anti
     # join is the price of NOT IN's NULL semantics; the scale-safe
     # NOT EXISTS twin (sql_not_in_scalable, same oracle) plans a
-    # shuffled SortMergeJoin LeftAnti — see sqlfeatures2.py.
+    # shuffled SortMergeJoin LeftAnti — see sqlfeatures.py.
     "sql_in_subquery": {"null_aware_broadcast_anti"},
     # ROW_NUMBER runs on the 10 survivors of a TakeOrderedAndProject
     # (distributed top-k merged on the driver) — bounded at any scale;

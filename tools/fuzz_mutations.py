@@ -8,7 +8,7 @@ SERIAL-REPLAY ORACLE: the same logical ops applied in observed commit
 order to a plain python dict, hash-compared with the final table state.
 
 The machinery under test is the blast-radius write-claims protocol
-(session.py _TableWriteClaims/_WriteScope): disjoint-radius writers
+(session/locks.py _TableWriteClaims/_WriteScope): disjoint-radius writers
 commit in parallel, intersecting writers wait + retry, whole-table
 actions drain claims — the engine analogue of the reference's ROW-level
 write locks (consistency/using_transactions_row.md: writers on disjoint
@@ -80,18 +80,18 @@ class OpLog:
 def _install_scope_hook(oplog: OpLog):
     """Patch _WriteScope.exit so a no-commit op records its serialization
     point BEFORE releasing the table lock.  Returns a restore fn."""
-    from snappydata_spark import session as session_mod
+    from snappydata_spark.session import locks
 
-    real_exit = session_mod._WriteScope.exit
+    real_exit = locks._WriteScope.exit
 
     def exit_logged(self):
         oplog.log(getattr(_TLS, "op_id", None))
         return real_exit(self)
 
-    session_mod._WriteScope.exit = exit_logged
+    locks._WriteScope.exit = exit_logged
 
     def restore():
-        session_mod._WriteScope.exit = real_exit
+        locks._WriteScope.exit = real_exit
 
     return restore
 
