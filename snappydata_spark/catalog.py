@@ -116,8 +116,7 @@ class Catalog:
 
     def save_meta(self, meta: TableMeta) -> None:
         os.makedirs(self.table_path(meta.name), exist_ok=True)
-        # atomic replace: meta carries the live bucket generation — a
-        # torn write must never be observable
+        # atomic replace: a torn write must never be observable
         write_json_atomic(
             os.path.join(self.table_path(meta.name), _META_FILE),
             asdict(meta),

@@ -1,8 +1,9 @@
 """Deduplication operators for training-data pipelines (SURVEY.md §7 M6).
 
-All five families — exact, MinHash+LSH, SimHash, n-gram Jaccard,
+The near-duplicate families — MinHash+LSH, SimHash, n-gram Jaccard,
 embedding-cosine — as DataFrame transformations built from pure Catalyst
-expressions (functions/text.py, functions/vector.py).
+expressions (functions/text.py, functions/vector.py); exact dedup is a
+fingerprint groupBy in operators/dedup_ops.py.
 
 Scale design: every family is map-side signature computation followed by
 exactly ONE shuffle on a blocking key (fingerprint / LSH band / SimHash
@@ -15,20 +16,6 @@ within hash buckets.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-from snappydata_spark.functions import text as T
-from snappydata_spark.functions import vector as V
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup on the full-content fingerprint: keep the min-id doc
-    per fingerprint (hash-groupBy — one shuffle on the md5 key)."""
-    fp = T.fingerprint(F.col(text_col)).alias("fp")
-    return (
-        df.select(F.col(id_col), fp)
-        .groupBy("fp")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies"))
-    )
 
 
 def _sig_frame(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:

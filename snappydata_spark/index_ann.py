@@ -69,18 +69,6 @@ def _quantize_codes(vec, mn: list[float], mx: list[float]):
     )
 
 
-def _dequant_codes(code, mn: list[float], mx: list[float]):
-    """deq_i = mn_i + code_i/255*(mx_i - mn_i) (code==0 when mx==mn, so
-    the degenerate dim dequantizes to mn exactly as sq8_dequant does)."""
-    mn_lit, mx_lit = _lit_darray(mn), _lit_darray(mx)
-    dc = F.transform(code, lambda x: x.cast("double"))
-    return F.zip_with(
-        F.zip_with(dc, mn_lit, lambda q, lo: F.struct(q.alias("q"), lo.alias("lo"))),
-        mx_lit,
-        lambda s, hi: s.lo + s.q / 255.0 * (hi - s.lo),
-    )
-
-
 def sq8_scores_pandas(
     rows: DataFrame,
     col: str,

@@ -149,10 +149,6 @@ mh_pairs AS (SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
               AND a.doc_id < b.doc_id)"""
 
 
-def _minhash_oracle(num_hashes: int = 16, bands: int = 4) -> str:
-    return f"WITH {_minhash_ctes(num_hashes, bands)}\nSELECT doc1, doc2 FROM mh_pairs"
-
-
 def _minhash_edge_oracle(num_hashes: int = 16, bands: int = 4) -> str:
     """Exact-dup-collapsed edge set over the verbatim-dup corpus: the
     DuckDB statement of dedup.collapse_banded_pairs — group docs by the

@@ -61,10 +61,6 @@ def _one_minus_disc():
     return (1 - F.col("l_discount")).cast("decimal(4,2)")
 
 
-def _one_plus_tax():
-    return (1 + F.col("l_tax")).cast("decimal(4,2)")
-
-
 def _sum_money(expr, alias: str):
     """SUM a money term exactly, round while STILL decimal (a half-cent
     tie must tie-break in decimal arithmetic on both engines — rounding

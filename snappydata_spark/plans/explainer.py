@@ -43,10 +43,6 @@ def broadcast_join_count(df: DataFrame) -> int:
     return len(re.findall(r"BroadcastHashJoin", physical_plan(df)))
 
 
-def sortmerge_join_count(df: DataFrame) -> int:
-    return len(re.findall(r"SortMergeJoin", physical_plan(df)))
-
-
 def scan_pushdown_info(df: DataFrame) -> list[dict]:
     """Extract PushedFilters / ReadSchema per parquet scan — the check that
     filters and projections actually reached the scan."""

@@ -280,6 +280,14 @@ class SnappySession(
         # guard reads the max-lock-wait property via get_conf
         self._engine_confs: dict[str, str] = {}
         self._load_registry()
+        # disambiguates bucketed tables' catalog entries across stores
+        # sharing one SparkSession (e.g. test fixtures).  Derived from the
+        # store dir, NOT random: two sessions over the SAME store must
+        # resolve the same catalog entry.  Set before the roll-forward
+        # below, which may publish a bucketed generation.
+        self._session_id = hashlib.md5(
+            os.path.abspath(self.catalog.base_dir).encode()
+        ).hexdigest()[:8]
         # roll forward any multi-table commit a crashed process left
         # behind its commit point (see commit(): intent-log two-phase)
         self._recover_tx_intents()
@@ -298,29 +306,13 @@ class SnappySession(
         self._active_cqs: dict[str, object] = {}
         self._streaming_trigger: str | None = None
         self.current_user: str = ""
-        # disambiguates bucketed catalog-table names across SnappySession
-        # instances sharing one SparkSession (e.g. test fixtures).  Derived
-        # from the store dir, NOT random: two sessions over the SAME store
-        # must resolve the same catalog entry (a random id made every
-        # bucketed table silently unreadable — and mutations silently
-        # no-op — from any second session)
-        self._session_id = hashlib.md5(
-            os.path.abspath(self.catalog.base_dir).encode()
-        ).hexdigest()[:8]
-        # re-expose persisted managed tables as temp views: without this a
-        # fresh session over an existing store could table()/mutate them
-        # but sql("SELECT ... FROM t") raised TABLE_OR_VIEW_NOT_FOUND
-        # until some mutation happened to refresh the view
+        # re-expose persisted managed tables as temp views (bucketed ones
+        # register their catalog entry from the manifest on the way):
+        # without this a fresh session over an existing store could
+        # table()/mutate them but sql("SELECT ... FROM t") raised
+        # TABLE_OR_VIEW_NOT_FOUND until some mutation refreshed the view
         for tbl in list(self.catalog.list_tables()):
-            try:
-                meta = self.catalog.load_meta(tbl)
-                if self._is_bucketed(meta):
-                    # finish any mutation a crash interrupted mid-swap
-                    with self._table_lock(tbl):
-                        self._recover_mutation_journal(meta)
-                self._refresh_view(tbl)
-            except Exception:  # noqa: BLE001 — e.g. bucketed layout whose
-                pass  # catalog entry didn't survive the process restart
+            self._refresh_view(tbl)
         for vname, vsql in list(self._views.items()):
             try:
                 self.spark.sql(vsql).createOrReplaceTempView(vname)

@@ -155,15 +155,7 @@ class DDLMixin:
                 if (m.provider == "topk" and companion
                         and self.catalog.exists(companion)):
                     self.drop_table(companion)
-        if self.catalog.exists(name) and self._is_bucketed(self.catalog.load_meta(name)):
-            cur = int(
-                self.catalog.load_meta(name).options.get("bucket_gen", 0)
-            )
-            # current generation plus any crash orphans around it
-            for g in {cur, cur - 1, cur + 1, 0} - {-1}:
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self._cat_name(name, gen=g)}"
-                )
+        self._drop_catalog_entry(name)
         self.catalog.drop(name)
         if name in self._rls:
             self._rls.discard(name)
@@ -190,19 +182,15 @@ class DDLMixin:
 
     @_serialized
     def truncate_table(self, name: str) -> None:
-        """TRUNCATE TABLE (SnappyDDLParser:627, API truncateTable:812).
-        Unbucketed: a pure manifest commit (live = ∅, schema retained) —
-        no Spark job, old files tombstoned under the usual grace."""
+        """TRUNCATE TABLE (SnappyDDLParser:627, API truncateTable:812):
+        a pure manifest commit (live = ∅, schema retained) — no Spark
+        job, old files tombstoned under the usual grace."""
         self._check_write_priv(name, "delete")
         meta = self.catalog.load_meta(name.lower())
         if self._referencing_fks(meta.name):
             self._assert_no_fk_orphans(meta, None)
         schema = self._read_table(name).schema
-        if self._is_bucketed(meta):
-            empty = self.spark.createDataFrame([], schema)
-            self._write(empty, meta, mode="overwrite")
-        else:
-            self._manifest_commit(self._canon(name), full=[], schema=schema)
+        self._manifest_commit(self._canon(name), full=[], schema=schema)
         self._refresh_view(name)
 
     def create_external_table(
@@ -271,18 +259,13 @@ class DDLMixin:
         """Compact a managed table's small files (the maintenance op
         copy-on-write appends need: every insert adds files; scans slow
         down as file count grows).  Rewrites to ceil(bytes/target) files
-        — bucketed tables re-bucket instead (bucket count fixes their
-        layout).  Returns the resulting file count."""
+        — bucketed tables re-bucket instead (the staging writer's bucket
+        count fixes their layout).  Returns the resulting file count."""
         name = self._canon(name)
         meta = self.catalog.load_meta(name)
-        df = self._read_table(name)
-        if not self._is_bucketed(meta):
-            stats = self.analyze_table(name)
-            n_files = max(1, -(-stats["size_bytes"] // target_file_bytes))
-            df = df.repartition(n_files)
-        self._rewrite(df, meta)
-        if self._is_bucketed(meta):
-            return meta.buckets
+        stats = self.analyze_table(name)
+        n_files = max(1, -(-stats["size_bytes"] // target_file_bytes))
+        self._rewrite(self._read_table(name).repartition(n_files), meta)
         live = self._live_files(name)
         return len(live if live is not None else self._list_data_files(name))
 
@@ -402,20 +385,11 @@ class DDLMixin:
         meta = self.catalog.load_meta(name)
         n = self._read_table(name).count()
         size = 0
-        live = None if self._is_bucketed(meta) else self._live_files(name)
+        live = self._live_files(name)
         if live is not None:
             size = sum(
                 os.path.getsize(f) for f in live if os.path.exists(f)
             )
-        elif self._is_bucketed(meta):
-            # bucketed data lives in the Spark warehouse, not table_path
-            try:
-                for f in self.spark.table(self._cat_name(name)).inputFiles():
-                    p = self._local_path(f)
-                    if os.path.exists(p):
-                        size += os.path.getsize(p)
-            except Exception:  # noqa: BLE001 — stats stay best-effort
-                pass
         else:
             for root, _dirs, files in os.walk(self.catalog.table_path(name)):
                 size += sum(os.path.getsize(os.path.join(root, f)) for f in files)
@@ -495,10 +469,7 @@ class DDLMixin:
             return self._tx_overlay(name)
         if self.catalog.exists(name):
             meta = self.catalog.load_meta(name)
-            if self._is_bucketed(meta):
-                df = self.spark.table(self._cat_name(name))
-            else:
-                df = self._managed_df(name)
+            df = self._managed_df(name)
             if meta.replicate:
                 # REPLICATE tables join broadcast-side (StoreUtils REPLICATE
                 # option; replicated-table local join SnappyStrategies:330-343)

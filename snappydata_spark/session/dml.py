@@ -270,7 +270,7 @@ class DMLMixin:
         uniques = self._meta_uniques(meta)
         if not uniques or self._skip_constraints():
             return
-        existing = self._mutation_target(meta.name, meta)
+        existing = self._mutation_target(meta.name)
         for cols in uniques:
             null_pred = None
             for c in cols:
@@ -324,7 +324,7 @@ class DMLMixin:
             nonnull = rows
             for c in cols:
                 nonnull = nonnull.filter(F.col(c).isNotNull())
-            parent = self._mutation_target(rt, self.catalog.load_meta(rt))
+            parent = self._mutation_target(rt)
             if parent is None:
                 if nonnull.limit(1).count():
                     raise ValueError(
@@ -372,7 +372,7 @@ class DMLMixin:
         refs = self._referencing_fks(parent_meta.name)
         for child, fk in refs:
             cols, rcols = fk["columns"], fk["ref_columns"]
-            child_df = self._mutation_target(child, self.catalog.load_meta(child))
+            child_df = self._mutation_target(child)
             if child_df is None:
                 continue
             nonnull = child_df
@@ -422,7 +422,7 @@ class DMLMixin:
                 # BEFORE identity assignment: put() assigns identities
                 # itself, and pre-assigned GENERATED ALWAYS values would
                 # trip its user-supplied-value rejection.
-                if self._mutation_target(name, meta) is not None:
+                if self._mutation_target(name) is not None:
                     self.put(name, df)
                     return
             df = self._assign_identities(meta, df)
@@ -458,7 +458,7 @@ class DMLMixin:
             or self.get_conf("snappydata.column.maxdeltarows", 0)
             or 0
         )
-        if not limit or self._is_bucketed(meta):
+        if not limit:
             return
         # opportunistic maintenance must not run beside blast-radius
         # claim holders (it merges files it didn't claim) — a downgraded
@@ -522,7 +522,7 @@ class DMLMixin:
             df = mutate.conflate_last(df, keys)
             self._validate_uniques_incremental(meta, df, exclude_keys=keys)
             self._validate_fks(meta, df)
-            target = self._mutation_target(name, meta)
+            target = self._mutation_target(name)
             if target is None:  # empty table: put == insert
                 self.insert(name, df)
                 return
@@ -580,7 +580,7 @@ class DMLMixin:
                 f"cannot UPDATE GENERATED ALWAYS identity column(s) "
                 f"{bad_id} of {name} (create-table.md Identity Columns)"
             )
-        target = self._mutation_target(name, meta)
+        target = self._mutation_target(name)
         if target is None:
             return
         if alias:
@@ -635,7 +635,7 @@ class DMLMixin:
         bitmap (ColumnDeleteEncoder.scala:39)."""
         self._check_write_priv(name, "delete")
         meta = self.catalog.load_meta(name.lower())
-        target = self._mutation_target(name, meta)
+        target = self._mutation_target(name)
         if target is None:
             return
         if alias:
@@ -664,7 +664,7 @@ class DMLMixin:
                 f"deleteFrom {name} requires key_columns (or partition_by) "
                 "— keys=[] would wipe every row, not match none"
             )
-        target = self._mutation_target(name, meta)
+        target = self._mutation_target(name)
         if target is None:
             return
         if self._referencing_fks(meta.name):
@@ -676,7 +676,7 @@ class DMLMixin:
             files = self._affected_files(target, source=df, keys=keys)
         if not files:
             return
-        self._scope_gate(meta, files)
+        self._scope_gate(meta, files, key_source=(df, keys))
         touched = self._read_files(target.schema, files)
         self._replace_files(
             meta, files, mutate._anti_on_keys(touched, df, keys).select(*target.columns)
@@ -751,7 +751,7 @@ class DMLMixin:
         src_sql = using[1:-1] if using.startswith("(") else f"SELECT * FROM {using}"
         self._resolve_read_access(src_sql)
         source = self.spark.sql(src_sql)
-        target = self._mutation_target(name, meta)
+        target = self._mutation_target(name)
         if target is None:  # empty table: only the insert branch can fire
             if o["insert"] is not None:
                 icond, imap = o["insert"]

@@ -400,18 +400,19 @@ class FunctionMixin:
         self._save_registry()
         if self.catalog.exists(name):
             meta = self.catalog.load_meta(name)
-            if not self._is_bucketed(meta):
-                # serialize with writers AND drain in-flight claims: the
-                # registration above makes the table claims-ineligible
-                # for NEW writers, but a holder downgraded before it
-                # would commit over this clustering rewrite
-                def _cluster_body():
-                    df = self._mutation_target(name, meta)
-                    if df is not None and not df.isEmpty():
-                        # _rewrite clusters for the just-registered index
-                        self._rewrite(df, meta)
 
-                self._run_exclusive(name, _cluster_body)
+            # serialize with writers AND drain in-flight claims: the
+            # registration above makes the table claims-ineligible for
+            # NEW writers, but a holder downgraded before it would
+            # commit over this clustering rewrite
+            def _cluster_body():
+                df = self._mutation_target(name)
+                if df is not None and not df.isEmpty():
+                    # the staging writer clusters for the just-registered
+                    # index (a bucketed table keeps its bucket layout)
+                    self._rewrite(df, meta)
+
+            self._run_exclusive(name, _cluster_body)
         return None
 
     def _index_cols(self, name: str) -> list[str] | None:

@@ -584,8 +584,7 @@ class LockingMixin:
         """May a pruned mutation of this table downgrade to a blast-radius
         claim and run beside disjoint writers?  Only when nothing about
         the table requires observing the WHOLE post-state of a rival
-        write: no bucketed layout (its mutation journal + eager deletes
-        assume one writer), no UNIQUE/FK constraints (their validators
+        write: no UNIQUE/FK constraints (their validators
         scan the full table), nothing referencing it, no identity columns
         (assignment reads the current max), no clustered/ANN index or
         dependent sample/topk table (maintained synchronously under the
@@ -593,8 +592,6 @@ class LockingMixin:
         if self._staged_manifests is not None:
             return False  # tx replay: commit() already drained claims
         name = meta.name.lower()
-        if self._is_bucketed(meta):
-            return False
         if self._meta_uniques(meta) or self._meta_fks(meta):
             return False
         if self._referencing_fks(meta.name):
@@ -624,22 +621,28 @@ class LockingMixin:
         key_source: tuple[DataFrame, list[str]] | None = None,
     ) -> None:
         """Locking decision point for a pruned mutation, called once the
-        blast radius is known.  Eligible table → downgrade the current
-        write scope to a file/key claim (disjoint writers commit in
-        parallel — reference row-write-lock semantics).  Otherwise
-        (constrained or index-maintained table) → wait out in-flight
-        claim holders and keep the classic exclusive table lock.  Either
-        branch may raise _MutationRetry, re-running the mutation fresh."""
+        blast radius is known.  A keyed mutation (`key_source`) of an
+        eligible table → downgrade the current write scope to a file/key
+        claim (disjoint writers commit in parallel — reference
+        row-write-lock semantics).  Otherwise → wait out in-flight claim
+        holders and keep the classic exclusive table lock: a predicate
+        mutation cannot claim the rows a concurrent upsert is adding
+        (its radius is the files matching NOW), so beside one it would
+        miss a phantom row, and constrained or index-maintained tables
+        must see the whole post-state.  Either branch may raise
+        _MutationRetry, re-running the mutation fresh."""
         scope = self._current_write_scope()
         if scope is None or scope.downgraded:
             return
-        if self._claims_eligible(meta):
+        if key_source is not None and self._claims_eligible(meta):
+            buckets = getattr(files, "buckets", None)  # _BucketFiles
+            if buckets is not None:
+                keyed = frozenset(f"bucket:{b}" for b in buckets)
+            else:
+                keyed = self._key_claim_tokens(*key_source)
             tokens = frozenset(
                 os.path.basename(self._local_path(f)) for f in files
-            )
-            if key_source is not None:
-                src, keys = key_source
-                tokens |= self._key_claim_tokens(src, keys)
+            ) | keyed
             scope.downgrade(tokens)
         else:
             scope.ensure_exclusive()

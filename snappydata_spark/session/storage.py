@@ -7,37 +7,43 @@ import json
 import os
 import re
 import shutil
+import threading
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructType
 
 from snappydata_spark.catalog import TableMeta, write_json_atomic
+
+# catalog entry name → ((gen, ts), spec): the generation each bucketed
+# table's Spark-catalog entry points at and the DDL it was created with.
+# One record per process, like the catalog it describes: every
+# SnappySession over a store shares the entries.
+_CATALOG_ENTRIES: dict[str, tuple] = {}
+_CATALOG_LOCK = threading.Lock()
+
+
+class _BucketFiles(list):
+    """A bucket-pruned file radius.  `buckets` are the bucket ids the
+    source keys hash to; they double as the mutation's key-claim tokens
+    (the same key always hashes to the same bucket), so claiming them
+    costs no second job over the source."""
+
+    def __init__(self, files: list[str], buckets: set[int]):
+        super().__init__(files)
+        self.buckets = frozenset(buckets)
 
 
 class StorageMixin:
     def _is_bucketed(self, meta: TableMeta) -> bool:
         return bool(meta.partition_by and meta.buckets)
 
-    def _cat_name(self, name: str, gen: int | None = None) -> str:
-        """Spark-catalog identifier for a bucketed managed table (the
-        bucketing spec lives in the session catalog, which is what lets
-        EnsureRequirements elide the shuffle on colocated joins).
-        Bucketed overwrites are generation-swapped for crash atomicity:
-        the LIVE generation comes from the table meta; gen 0 is the
-        legacy unsuffixed name so pre-existing stores stay readable."""
-        cname = self._canon(name)
-        if gen is None:
-            gen = 0
-            try:
-                gen = int(
-                    self.catalog.load_meta(cname).options.get("bucket_gen", 0)
-                )
-            except (OSError, ValueError):
-                pass
-        suffix = f"__g{gen}" if gen else ""
-        return f"snappy_managed_{self._session_id}_{cname}{suffix}"
+    def _cat_name(self, name: str) -> str:
+        """Spark-catalog identifier of a bucketed table's one catalog
+        entry (unique per store directory, see ``_session_id``)."""
+        return f"snappy_managed_{self._session_id}_{self._canon(name)}"
 
     def _bloom_opts(self, meta: TableMeta) -> dict[str, str]:
         """KEY_COLUMNS get parquet bloom filters: the engine's
@@ -54,68 +60,72 @@ class StorageMixin:
             for c in meta.key_columns
         }
 
-    def _write(self, df: DataFrame, meta: TableMeta, mode: str) -> None:
-        """PARTITION_BY + BUCKETS → a real bucketed catalog table
-        (bucketBy on the partition keys: Catalyst then knows
-        HashPartitioning, so joins/aggs on those keys need no exchange —
-        the CollapseCollocatedPlans / COLOCATE_WITH semantics of the
-        reference, SnappyStrategies.scala:768-826).  Unbucketed tables are
-        plain parquet dirs."""
+    def _stage(
+        self, df: DataFrame, meta: TableMeta, tag: str, n_files: int | None = None
+    ) -> list[str]:
+        """The staging writer: write `df` as new files in the table's
+        data dir, under fresh names, and return those names.  Nothing is
+        visible until the caller commits them through _manifest_commit.
+
+        PARTITION_BY + BUCKETS tables stage through Spark's bucketed
+        writer (bucketBy needs saveAsTable: a throwaway external table
+        at the staging path), so every file holds one bucket and keeps
+        Spark's `_NNNNN` bucket-id suffix — what the table's catalog
+        entry (_catalog_entry) and bucket pruning
+        (_bucket_affected_files) read.  Colocated joins then need no
+        exchange (the CollapseCollocatedPlans / COLOCATE_WITH semantics
+        of the reference, SnappyStrategies.scala:768-826).  Other
+        tables with an index range-cluster the rows into `n_files`
+        files when `n_files` is given (rewrites and mutations)."""
         # COMPRESSION option (ExternalStoreUtils.scala:88-105; batch codecs
         # CompressionCodecId.scala LZ4/SNAPPY) → parquet codec per table
-        self._audit_plan(f"write:{meta.name}", df)
         codec = str(meta.options.get("compression", "snappy")).lower()
         codec = {"lz4": "lz4", "snappy": "snappy", "none": "uncompressed"}.get(
             codec, codec
         )
-        blooms = self._bloom_opts(meta)
+        stamp = uuid.uuid4().hex[:8]
+        tmp = os.path.join(self.catalog.table_path(meta.name), f"{tag}-{stamp}")
         if self._is_bucketed(meta):
-            cur_gen = int(meta.options.get("bucket_gen", 0))
-            # overwrite = generation swap (crash-atomic: saveAsTable's
-            # overwrite deletes-then-writes IN PLACE, so a crash there
-            # would truncate the table; writing gen+1 and flipping the
-            # meta pointer afterwards leaves the old generation intact
-            # through any crash).  Appends go into the live generation —
-            # Spark's commit protocol makes those all-or-nothing already.
-            target_gen = cur_gen + 1 if mode == "overwrite" else cur_gen
-            writer = (
+            staging = f"snappy_stage_{stamp}_{uuid.uuid4().hex[:8]}"
+            (
                 df.repartition(meta.buckets, *meta.partition_by)
                 .write.format("parquet")
                 .option("compression", codec)
-                .options(**blooms)
+                .options(**self._bloom_opts(meta))
                 .bucketBy(meta.buckets, *meta.partition_by)
                 .sortBy(*meta.partition_by)
-                .mode("overwrite" if mode == "overwrite" else mode)
+                .option("path", tmp)
+                .saveAsTable(staging)
             )
-            writer.saveAsTable(self._cat_name(meta.name, gen=target_gen))
-            if mode == "overwrite":
-                meta.options["bucket_gen"] = target_gen
-                self.catalog.save_meta(meta)  # atomic pointer flip
-                for old in (cur_gen, cur_gen - 1):
-                    if old >= 0 and old != target_gen:
-                        try:
-                            self.spark.sql(
-                                "DROP TABLE IF EXISTS "
-                                + self._cat_name(meta.name, gen=old)
-                            )
-                        except Exception:  # noqa: BLE001 — orphan, GC later
-                            pass
+            self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
         else:
-            before = (
-                set(self._list_data_files(meta.name)) if mode == "append" else None
-            )
-            df.write.mode(mode).option("compression", codec).options(
-                **blooms
-            ).parquet(self.catalog.data_path(meta.name))
-            after = self._list_data_files(meta.name)
-            if mode == "append":
-                self._manifest_commit(
-                    meta.name,
-                    add=[f for f in after if f not in before],
-                    schema=df.schema,
-                )
-            else:
-                self._manifest_commit(meta.name, full=after, schema=df.schema)
+            cols = self._index_cols(meta.name) if n_files else None
+            if cols:
+                # indexed tables keep their clustered layout through
+                # mutations: footer min/max skipping doesn't decay
+                df = self._cluster_for_index(df, cols, n_files)
+            df.write.mode("overwrite").option("compression", codec).options(
+                **self._bloom_opts(meta)
+            ).parquet(tmp)
+        data = self.catalog.data_path(meta.name)
+        os.makedirs(data, exist_ok=True)
+        names = []
+        for f in sorted(os.listdir(tmp)):
+            if f.endswith(".parquet"):
+                os.rename(os.path.join(tmp, f), os.path.join(data, f"{tag}-{stamp}-{f}"))
+                names.append(f"{tag}-{stamp}-{f}")
+        shutil.rmtree(tmp, ignore_errors=True)
+        return names
+
+    def _write(self, df: DataFrame, meta: TableMeta, mode: str) -> None:
+        """Create (mode 'overwrite') or append: stage, then one manifest
+        commit."""
+        self._audit_plan(f"write:{meta.name}", df)
+        names = self._stage(df, meta, "ins" if mode == "append" else "new")
+        if mode == "append":
+            self._manifest_commit(meta.name, add=names, schema=df.schema)
+        else:
+            self._manifest_commit(meta.name, full=names, schema=df.schema)
 
     # tombstoned files survive this many further manifest generations
     # before physical deletion, so a reader that resolved the previous
@@ -137,6 +147,9 @@ class StorageMixin:
             # inside a deferred (transactional) commit: later ops of the
             # same tx must read the tx's own staged generation
             return dict(staged[name.lower()]["payload"])
+        return self._published_manifest(name)
+
+    def _published_manifest(self, name: str) -> dict | None:
         try:
             with open(self._manifest_path(name)) as f:
                 return json.load(f)
@@ -159,25 +172,38 @@ class StorageMixin:
         return [os.path.join(data, f) for f in m["files"]]
 
     def _managed_df(self, name: str) -> DataFrame:
-        """Unbucketed managed read resolved through the manifest: the
-        returned plan pins this generation's file list, and a concurrent
-        mutation never unlinks inside the grace window — a scan stays
-        valid across up to _TOMBSTONE_GRACE-1 subsequent mutations (a
-        scan slower than that many writes can lose a file mid-read and
-        must retry; the reference bounds the same race with its snapshot
-        tx lease).  Empty tables come back as an
-        empty frame with the manifest-recorded schema."""
-        files = self._live_files(name)
-        if files is None:
+        """Managed read resolved through the manifest: the returned plan
+        pins this generation's file list (for a bucketed table, its
+        gens/gen-N link directory), and a concurrent mutation never
+        unlinks inside the grace window — a scan stays valid across up
+        to _TOMBSTONE_GRACE-1 subsequent mutations (a scan slower than
+        that many writes can lose a file mid-read and must retry; the
+        reference bounds the same race with its snapshot tx lease).
+        Empty tables come back as an empty frame with the
+        manifest-recorded schema."""
+        m = self._load_manifest(name)
+        if m is None:  # table predates the manifest
             return self.spark.read.parquet(self.catalog.data_path(name))
-        if not files:
-            m = self._load_manifest(name)
-            if m and m.get("schema"):
+        staged = self._staged_manifests
+        if staged is None or name.lower() not in staged:
+            cat = self._catalog_entry(name)
+            if cat is not None:
+                try:
+                    return self.spark.table(cat)
+                except AnalysisException:
+                    # the entry went away behind this process's record
+                    # (dropped by hand, or a new SparkContext): register
+                    with _CATALOG_LOCK:
+                        _CATALOG_ENTRIES.pop(cat, None)
+                    return self.spark.table(self._catalog_entry(name))
+        if not m["files"]:
+            if m.get("schema"):
                 return self.spark.createDataFrame(
                     [], StructType.fromJson(m["schema"])
                 )
             raise FileNotFoundError(f"table {name} has no data files")
-        return self.spark.read.parquet(*files)
+        data = self.catalog.data_path(name)
+        return self.spark.read.parquet(*[os.path.join(data, f) for f in m["files"]])
 
     def _manifest_commit(
         self,
@@ -260,13 +286,7 @@ class StorageMixin:
             "schema": sch,
         }
         self._publish_generation(name, payload)
-        hist = self._history_dir(name)
-        for old in self._history_gens(name):
-            if old <= gen - self._TOMBSTONE_GRACE:
-                try:
-                    os.remove(os.path.join(hist, f"gen-{old}.json"))
-                except FileNotFoundError:
-                    pass
+        self._retire_generations(name, gen - self._TOMBSTONE_GRACE + 1)
         for t in drop:
             try:
                 os.remove(os.path.join(data, t["file"]))
@@ -296,8 +316,9 @@ class StorageMixin:
         time travel (table_version): any generation still inside the
         tombstone grace window has every one of its files intact on
         disk, so the history manifest alone reconstructs that snapshot.
-        A staged manifest already holding `payload` is renamed into
-        place rather than rewritten."""
+        A bucketed table's catalog entry then moves to the new
+        generation (_catalog_entry).  A staged manifest already holding
+        `payload` is renamed into place rather than rewritten."""
         if staged_path is None:
             write_json_atomic(self._manifest_path(name), payload)
         else:
@@ -307,6 +328,97 @@ class StorageMixin:
         write_json_atomic(
             os.path.join(hist, f"gen-{payload['gen']}.json"), payload
         )
+        self._catalog_entry(name)
+
+    def _catalog_entry(self, name: str) -> str | None:
+        """The Spark-catalog entry of a bucketed table, pointed at its
+        published generation; None for other tables.  The entry carries
+        the bucketing spec — what lets EnsureRequirements elide the
+        shuffle of colocated joins — over gens/gen-N, a directory of
+        hard links to generation N's live files.  A process that has no
+        record of the entry (a new process, a restore) registers it from
+        the manifest, so bucketed tables survive a restart; after that a
+        new generation only moves its LOCATION (the ALTER also drops the
+        cached relation, so no refreshTable is needed).  Reading the
+        manifest under the lock keeps the entry monotone when sessions
+        race: it always moves to the newest published generation."""
+        meta = self.catalog.load_meta(name)
+        if not self._is_bucketed(meta):
+            return None
+        cat = self._cat_name(name)
+        with _CATALOG_LOCK:
+            m = self._published_manifest(name)
+            if m is None:
+                return None
+            known = _CATALOG_ENTRIES.get(cat)
+            mark = (m["gen"], m.get("ts"))
+            if known is not None and known[0] == mark:
+                return cat
+            loc = self._link_generation(name, m).replace("'", "\\'")
+            cols = ", ".join(
+                f"`{f.name}` {f.dataType.simpleString()}"
+                for f in StructType.fromJson(m["schema"]).fields
+            )
+            keys = ", ".join(meta.partition_by)
+            spec = (
+                f"({cols}) USING parquet CLUSTERED BY ({keys}) "
+                f"SORTED BY ({keys}) INTO {meta.buckets} BUCKETS"
+            )
+            if known is not None and known[1] == spec:
+                self.spark.sql(f"ALTER TABLE {cat} SET LOCATION '{loc}'")
+            else:  # first sight, or the schema or bucketing changed
+                self.spark.sql(f"DROP TABLE IF EXISTS {cat}")
+                self.spark.sql(f"CREATE TABLE {cat} {spec} LOCATION '{loc}'")
+            _CATALOG_ENTRIES[cat] = (mark, spec)
+        return cat
+
+    def _drop_catalog_entry(self, name: str) -> None:
+        cat = self._cat_name(name)
+        with _CATALOG_LOCK:
+            _CATALOG_ENTRIES.pop(cat, None)
+            self.spark.sql(f"DROP TABLE IF EXISTS {cat}")
+
+    def _gens_dir(self, name: str) -> str:
+        return os.path.join(self.catalog.table_path(name.lower()), "gens")
+
+    def _link_generation(self, name: str, m: dict) -> str:
+        """gens/gen-N: hard links to generation N's live files, built
+        once under a temporary name and renamed into place.  A link that
+        cannot be made (a file already gone) raises."""
+        gdir = os.path.join(self._gens_dir(name), f"gen-{m['gen']}")
+        if os.path.isdir(gdir):
+            return gdir
+        data = self.catalog.data_path(name)
+        tmp = f"{gdir}.tmp-{uuid.uuid4().hex[:8]}"
+        os.makedirs(tmp)
+        for f in m["files"]:
+            os.link(os.path.join(data, f), os.path.join(tmp, f))
+        try:
+            os.rename(tmp, gdir)
+        except OSError:  # another process built it first
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.isdir(gdir):
+                raise
+        return gdir
+
+    def _retire_generations(self, name: str, below: int) -> None:
+        """Drop the history manifests and link directories of every
+        generation older than `below`."""
+        for d in (self._history_dir(name), self._gens_dir(name)):
+            if not os.path.isdir(d):
+                continue
+            for f in os.listdir(d):
+                m = re.match(r"gen-(\d+)", f)
+                if m is None or int(m.group(1)) >= below:
+                    continue
+                p = os.path.join(d, f)
+                if os.path.isdir(p):
+                    shutil.rmtree(p, ignore_errors=True)
+                else:
+                    try:
+                        os.remove(p)
+                    except FileNotFoundError:
+                        pass
 
     def _recover_tx_intents(self) -> None:
         """Roll FORWARD any multi-table commit that crashed after its
@@ -469,36 +581,20 @@ class StorageMixin:
             gen = m["gen"] + 1
             self._publish_generation(name, {**m, "gen": gen, "tombstones": []})
             # historical generations referenced the files just deleted —
-            # retire every time-travel snapshot older than the one just
-            # published along with them
-            hist = self._history_dir(name)
-            for g in self._history_gens(name):
-                if g < gen:
-                    try:
-                        os.remove(os.path.join(hist, f"gen-{g}.json"))
-                    except FileNotFoundError:
-                        pass
+            # retire every time-travel snapshot (and link directory)
+            # older than the one just published along with them
+            self._retire_generations(name, gen)
             # cached plans (incl. VERSION AS OF snapshots) may pin the
             # files just unlinked
             self.plan_cache.clear()
             return n
 
-    def _mutation_target(self, name: str, meta: TableMeta) -> DataFrame | None:
+    def _mutation_target(self, name: str) -> DataFrame | None:
         """Raw table read for mutation (no broadcast hint, no RLS filter —
         mutations see the whole table).  None = table has no data yet.
         Read FAILURES propagate — swallowing them into None turned broken
         states (missing catalog entry, corrupt file) into silent no-op
         UPDATE/DELETE and duplicate-key PUT-as-INSERT."""
-        if self._is_bucketed(meta):
-            cat = self._cat_name(meta.name)
-            if not self.spark.catalog.tableExists(cat):
-                raise ValueError(
-                    f"bucketed table {meta.name} has no catalog entry in "
-                    "this SparkSession (bucketed layouts live in the Spark "
-                    "catalog and do not survive a process restart — "
-                    "recreate the table; documented divergence)"
-                )
-            return self.spark.table(cat)
         files = self._live_files(name)
         if files is not None and not files:
             return None  # manifest says: no data
@@ -515,27 +611,29 @@ class StorageMixin:
         alone — ``pmod(murmur3_hash(bucket_cols), n)``, the exact
         expression Spark's bucketed writer assigns files with
         (HashPartitioning.partitionIdExpression) — so NO scan of the
-        target runs at all; candidate files come from the catalog's
-        driver-side listing, filtered by the bucket id encoded in each
-        file name.  The reference's analogue is routing a keyed mutation
-        to its owning bucket via the store's hash ring
-        (PartitionedRegion put routing; ColumnTableBulkOps.scala:46-120).
+        target runs at all; candidate files are the manifest's live
+        files, filtered by the bucket id encoded in each file name.  The
+        reference's analogue is routing a keyed mutation to its owning
+        bucket via the store's hash ring (PartitionedRegion put routing;
+        ColumnTableBulkOps.scala:46-120).
 
-        Returns the (superset-safe) file list, or None to fall back to the
-        semi-join scan (unbucketed table, keys not covering the bucket
-        columns, or an unexpected file layout)."""
-        if not self._is_bucketed(meta):
-            return None
+        Returns the (superset-safe) file list with its bucket ids, or None
+        to fall back to the semi-join scan (no bucket count, keys not
+        covering the bucket columns, or a file without a bucket id)."""
         bcols = [c.lower() for c in meta.partition_by]
-        if not set(bcols) <= {k.lower() for k in keys}:
+        if not meta.buckets or not bcols or not set(bcols) <= {
+            k.lower() for k in keys
+        }:
             return None
-        try:
-            table = self.spark.table(self._cat_name(meta.name))
-        except Exception:
-            return None  # no bucketed catalog entry: use the scan path
+        m = self._load_manifest(meta.name)
+        if m is None or not m.get("schema"):
+            return None
         # hash() is physical-type-sensitive: cast source keys to the
         # target's column types so int32/int64 drift can't mis-bucket
-        types = {f.name.lower(): f.dataType for f in table.schema.fields}
+        types = {
+            f.name.lower(): f.dataType
+            for f in StructType.fromJson(m["schema"]).fields
+        }
         exprs = [F.col(c).cast(types[c]) for c in bcols]
         ids = {
             r[0]
@@ -545,14 +643,15 @@ class StorageMixin:
             .distinct()
             .collect()
         }
+        data = self.catalog.data_path(meta.name)
         files: list[str] = []
-        for f in table.inputFiles():
-            m = re.search(r"_(\d{5})(?:\.|$)", os.path.basename(f))
-            if m is None:
+        for f in m["files"]:
+            b = re.search(r"_(\d{5})(?:\.|$)", f)
+            if b is None:
                 return None  # not a bucketed layout: use the scan path
-            if int(m.group(1)) % meta.buckets in ids:
-                files.append(f)
-        return files
+            if int(b.group(1)) % meta.buckets in ids:
+                files.append(os.path.join(data, f))
+        return _BucketFiles(files, ids)
 
     def _affected_files(
         self,
@@ -598,43 +697,6 @@ class StorageMixin:
             return unquote(urlparse(uri).path)
         return uri
 
-    def _recover_mutation_journal(self, meta: TableMeta) -> None:
-        """Complete (or discard) a bucketed mutation interrupted between
-        its append and its old-file removals — see _replace_files.  Runs
-        under the table lock before any new mutation, and at session init
-        over an existing store."""
-        jpath = os.path.join(
-            self.catalog.table_path(meta.name), "mutation_journal.json"
-        )
-        try:
-            with open(jpath) as fh:
-                j = json.load(fh)
-        except (OSError, ValueError):
-            return
-        tdir = j.get("dir")
-        if tdir and os.path.isdir(tdir):
-            current = {
-                f for f in os.listdir(tdir) if f.endswith(".parquet")
-            }
-            appended = current - set(j.get("existing", []))
-            if appended:
-                # the append committed: the removals are what is missing
-                for p in j.get("remove", []):
-                    try:
-                        os.remove(p)
-                    except FileNotFoundError:
-                        pass
-            # else: the append never committed — pre-mutation state is
-            # already exact; just drop the journal
-        try:
-            os.remove(jpath)
-        except FileNotFoundError:
-            pass
-        try:
-            self.spark.catalog.refreshTable(self._cat_name(meta.name))
-        except Exception:  # noqa: BLE001 — table may not be registered yet
-            pass
-
     def _replace_files(
         self, meta: TableMeta, files: list[str], new_rows: DataFrame
     ) -> None:
@@ -646,126 +708,41 @@ class StorageMixin:
         physically removed only after the grace window); never duplicates,
         never loss.  Readers that resolved the previous manifest keep
         scanning intact files (the reference brackets this in a store
-        transaction, SnapshotConnectionListener.scala).
-
-        Bucketed tables append through the bucketed writer (rows re-hash
-        into their buckets, so bucket pruning and colocated joins stay
-        correct even if an UPDATE moved a partition column) and rely on
-        Spark's catalog listing, so old-file deletion is eager — made
-        crash-exact by a mutation JOURNAL: the pre-append file listing is
-        recorded first, so recovery can tell whether the append committed
-        (new parquet files present ⇒ finish the removals; none ⇒ the
-        mutation never happened — drop the journal).  Either way a crash
-        replays to exactly-before or exactly-after, never duplicates."""
+        transaction, SnapshotConnectionListener.scala).  Bucketed rows
+        re-hash into their buckets in the staging writer, so bucket
+        pruning and colocated joins stay correct even if an UPDATE moved
+        a partition column."""
         self._audit_plan(f"replace_files:{meta.name}", new_rows)
-        if self._is_bucketed(meta):
-            self._recover_mutation_journal(meta)
-            local_remove = [self._local_path(f) for f in files]
-            table_dir = (
-                os.path.dirname(local_remove[0]) if local_remove else None
+        schema = new_rows.schema
+        added = self._stage(new_rows, meta, "mut", n_files=max(1, len(files)))
+        # the manifest read-modify-write is the only section that
+        # needs the table lock: a DOWNGRADED writer (claims held,
+        # lock released — see _WriteScope) re-takes it just for this.
+        # Its removals can't collide: the claimed files are live and
+        # no intersecting writer is in flight.
+        with self._table_lock(meta.name):
+            self._manifest_commit(
+                meta.name,
+                add=added,
+                remove=[os.path.basename(self._local_path(f)) for f in files],
+                schema=schema,
             )
-            jpath = os.path.join(
-                self.catalog.table_path(meta.name), "mutation_journal.json"
-            )
-            if table_dir and os.path.isdir(table_dir):
-                existing = sorted(
-                    f for f in os.listdir(table_dir) if f.endswith(".parquet")
-                )
-                write_json_atomic(
-                    jpath,
-                    {"dir": table_dir, "remove": local_remove, "existing": existing},
-                )
-            self._write(new_rows, meta, mode="append")
-            for f in local_remove:
-                try:
-                    os.remove(f)
-                except FileNotFoundError:
-                    pass
-            try:
-                os.remove(jpath)
-            except FileNotFoundError:
-                pass
-            self.spark.catalog.refreshTable(self._cat_name(meta.name))
-        else:
-            data = self.catalog.data_path(meta.name)
-            cols = self._index_cols(meta.name)
-            if cols:
-                # indexed tables keep their clustered layout through
-                # mutations: re-cluster just the touched rows so footer
-                # min/max skipping doesn't decay with every UPDATE
-                new_rows = self._cluster_for_index(
-                    new_rows, cols, max(1, len(files))
-                )
-            schema = new_rows.schema
-            tmp = self.catalog.table_path(meta.name) + "/mut-" + uuid.uuid4().hex[:8]
-            new_rows.write.mode("overwrite").options(
-                **self._bloom_opts(meta)
-            ).parquet(tmp)
-            stamp = uuid.uuid4().hex[:8]
-            added = []
-            for f in os.listdir(tmp):
-                if f.endswith(".parquet"):
-                    os.rename(
-                        os.path.join(tmp, f), os.path.join(data, f"mut-{stamp}-{f}")
-                    )
-                    added.append(f"mut-{stamp}-{f}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            # the manifest read-modify-write is the only section that
-            # needs the table lock: a DOWNGRADED writer (claims held,
-            # lock released — see _WriteScope) re-takes it just for this.
-            # Its removals can't collide: the claimed files are live and
-            # no intersecting writer is in flight.
-            with self._table_lock(meta.name):
-                self._manifest_commit(
-                    meta.name,
-                    add=added,
-                    remove=[
-                        os.path.basename(self._local_path(f)) for f in files
-                    ],
-                    schema=schema,
-                )
-                self._refresh_view(meta.name)
-            return
-        self._refresh_view(meta.name)
+            self._refresh_view(meta.name)
 
     def _rewrite(self, result: DataFrame, meta: TableMeta) -> None:
-        """Copy-on-write: materialize to a fresh dir then swap — the
+        """Copy-on-write: stage the whole result under fresh names, then
+        one manifest commit flips the table to exactly those files — the
         semantics (not storage trick) of column deltas/delete bitmaps
-        (ColumnDeltaEncoder.scala / ColumnDeleteEncoder.scala).  The tmp
-        materialization also breaks the read-your-own-target cycle of
-        overwrite-while-reading."""
-        cols = self._index_cols(meta.name)
-        if cols and not self._is_bucketed(meta):
-            live = self._live_files(meta.name)
-            n_files = max(1, len(live) if live is not None
-                          else len(self._list_data_files(meta.name)))
-            result = self._cluster_for_index(result, cols, n_files)
+        (ColumnDeltaEncoder.scala / ColumnDeleteEncoder.scala).  The old
+        files stay on disk as tombstones, so reading the table while
+        rewriting it is safe."""
+        live = self._live_files(meta.name)
+        n_files = max(1, len(live) if live is not None
+                      else len(self._list_data_files(meta.name)))
         self._audit_plan(f"rewrite:{meta.name}", result)
         schema = result.schema
-        tmp = self.catalog.table_path(meta.name) + "/rewrite-" + uuid.uuid4().hex[:8]
-        result.write.mode("overwrite").options(
-            **self._bloom_opts(meta)
-        ).parquet(tmp)
-        staged = self.spark.read.parquet(tmp)
-        if self._is_bucketed(meta):
-            self._write(staged, meta, mode="overwrite")
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            # full-replace through the same atomic manifest commit the
-            # pruned path uses: move the staged files in under fresh
-            # names, then one os.replace flips the table to exactly them
-            data = self.catalog.data_path(meta.name)
-            os.makedirs(data, exist_ok=True)
-            stamp = uuid.uuid4().hex[:8]
-            names = []
-            for f in os.listdir(tmp):
-                if f.endswith(".parquet"):
-                    os.rename(
-                        os.path.join(tmp, f), os.path.join(data, f"rw-{stamp}-{f}")
-                    )
-                    names.append(f"rw-{stamp}-{f}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            self._manifest_commit(meta.name, full=names, schema=schema)
+        names = self._stage(result, meta, "rw", n_files=n_files)
+        self._manifest_commit(meta.name, full=names, schema=schema)
         self._refresh_view(meta.name)
 
     def _refresh_view(self, name: str) -> None:
@@ -774,13 +751,8 @@ class StorageMixin:
         self.plan_cache.clear()
         name = self._canon(name)
         if self.catalog.exists(name):
-            meta = self.catalog.load_meta(name)
             try:
-                if self._is_bucketed(meta):
-                    self.spark.catalog.refreshTable(self._cat_name(name))
-                    df = self.spark.table(self._cat_name(name))
-                else:
-                    df = self._managed_df(name)
+                df = self._managed_df(name)
                 self._apply_policies(name, df).createOrReplaceTempView(name)
             except Exception:
                 pass  # empty table with no files yet

@@ -6,12 +6,13 @@ from __future__ import annotations
 import datetime
 import json
 import os
-import re
 import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, functions as F
+
+from snappydata_spark.catalog import write_json_atomic
 
 
 class SystemMixin:
@@ -78,15 +79,16 @@ class SystemMixin:
         if proc == "rebalance_all_buckets":
             # reference: redistributes bucket data across members
             # (rebalance-all-buckets.md).  The file-layout analogue:
-            # rewrite every BUCKETED table through its bucketed writer,
-            # re-hashing rows into their buckets — evening out file
-            # sizes after skewed appends.  Unbucketed tables have no
-            # buckets to balance and are untouched.
+            # compact every table declared with BUCKETS through the
+            # staging writer, re-hashing rows into their buckets —
+            # evening out file sizes after skewed appends.  Tables
+            # without buckets have none to balance and are untouched.
             rows = []
             for t in self.catalog.list_tables():
                 meta = self.catalog.load_meta(t)
-                if self._is_bucketed(meta):
-                    rows.append((t, self.compact_table(t)))
+                if meta.buckets:
+                    self.compact_table(t)
+                    rows.append((t, meta.buckets))
             return self.spark.createDataFrame(
                 rows or [("", 0)], "table string, buckets int"
             ).filter(F.col("table") != "")
@@ -350,15 +352,15 @@ class SystemMixin:
         minute-stamped subdirectory, restorable to the original
         locations).  Here the "disk store" is the managed-table store
         directory: for each table, UNDER ITS MUTATION LOCK (so no writer
-        is mid-swap — the doc's "run during low activity" caveat becomes
-        a hard per-table consistency guarantee), the backup copies the
-        table meta + the CURRENT manifest generation + exactly the
-        manifest's live files (tombstones and uncommitted orphans are
-        skipped); bucketed tables copy their live bucketed files plus
-        the schema/bucketing spec needed to re-register them.  The
-        catalog registry (indexes, grants, policies, views) rides along,
-        so restored indexes serve without a rebuild.  Returns the
-        created backup directory."""
+        is mid-commit — the doc's "run during low activity" caveat
+        becomes a hard per-table consistency guarantee), the backup
+        copies the table meta + the CURRENT manifest generation (also as
+        its one history record) + exactly the manifest's live files
+        (tombstones and uncommitted orphans are skipped).  Bucketed
+        tables take the same path: restore re-registers their catalog
+        entry from the manifest.  The catalog registry (indexes, grants,
+        policies, views) rides along, so restored indexes serve without
+        a rebuild.  Returns the created backup directory."""
         stamp = datetime.datetime.now().strftime("%Y-%m-%d-%H-%M-%S")
         bdir = os.path.join(dest_dir, stamp)
         n = 0
@@ -371,52 +373,33 @@ class SystemMixin:
 
         for t in self.catalog.list_tables():
             with self._table_lock(t):
-                meta = self.catalog.load_meta(t)
                 tdir = os.path.join(bdir, "store", t)
                 os.makedirs(os.path.join(tdir, "data"), exist_ok=True)
                 shutil.copy2(
                     os.path.join(self.catalog.table_path(t), _META_FILE),
                     os.path.join(tdir, _META_FILE),
                 )
-                entry: dict = {"bucketed": False}
-                if self._is_bucketed(meta):
-                    df = self.spark.table(self._cat_name(t))
-                    wdir = os.path.join(bdir, "warehouse", t)
-                    os.makedirs(wdir)
-                    for f in df.inputFiles():
-                        src = re.sub(r"^file:(//)?(?=/)", "", f)
-                        shutil.copy2(src, wdir)
-                    entry = {
-                        "bucketed": True,
-                        "buckets": meta.buckets,
-                        "partition_by": list(meta.partition_by),
-                        "schema_ddl": ", ".join(
-                            f"`{fld.name}` {fld.dataType.simpleString()}"
-                            for fld in df.schema.fields
-                        ),
-                    }
+                m = self._load_manifest(t)
+                data = self.catalog.data_path(t)
+                if m is not None:
+                    # manifest-pinned copy: live generation only; the
+                    # backed-up manifest carries no tombstones (their
+                    # files are not copied)
+                    clean = {**m, "tombstones": []}
+                    write_json_atomic(os.path.join(tdir, "manifest.json"), clean)
+                    os.makedirs(os.path.join(tdir, "_history"))
+                    write_json_atomic(
+                        os.path.join(tdir, "_history", f"gen-{m['gen']}.json"),
+                        clean,
+                    )
+                    files = m["files"]
                 else:
-                    m = self._load_manifest(t)
-                    data = self.catalog.data_path(t)
-                    if m is not None:
-                        # manifest-pinned copy: live generation only; the
-                        # backed-up manifest carries no tombstones (their
-                        # files are not copied)
-                        clean = dict(m)
-                        clean["tombstones"] = []
-                        with open(
-                            os.path.join(tdir, "manifest.json"), "w"
-                        ) as f:
-                            json.dump(clean, f)
-                        files = m["files"]
-                    else:
-                        files = self._list_data_files(t)
-                    for f in files:
-                        shutil.copy2(
-                            os.path.join(data, f),
-                            os.path.join(tdir, "data", f),
-                        )
-                desc["tables"][t] = entry
+                    files = self._list_data_files(t)
+                for f in files:
+                    shutil.copy2(
+                        os.path.join(data, f), os.path.join(tdir, "data", f)
+                    )
+                desc["tables"][t] = {}
         # registry copied LAST: it then reflects every DDL
         # that completed before any per-table copy it describes.  Each
         # table copy is individually consistent (taken under its lock);
@@ -436,14 +419,18 @@ class SystemMixin:
         """Restore a backup_store() snapshot into THIS session's store:
         each backed-up table's directory (meta + manifest + live files)
         replaces the current one under the table's mutation lock;
-        bucketed tables re-register in the Spark catalog as external
-        bucketed tables over the restored files (CLUSTERED BY ... INTO n
-        BUCKETS LOCATION), so colocated-join exchange elision survives
-        the round trip; the catalog registry (indexes/grants/policies)
-        is restored and reloaded.  Returns the number of tables
-        restored.  (store-backup.md's restore script analogue — copy
-        back to original locations, refusing nothing: restore is an
-        operator action that overwrites current state.)"""
+        bucketed tables re-register their catalog entry from the
+        restored manifest (CLUSTERED BY ... INTO n BUCKETS), so
+        colocated-join exchange elision survives the round trip; the
+        catalog registry (indexes/grants/policies) is restored and
+        reloaded.  Returns the number of tables restored.
+        (store-backup.md's restore script analogue — copy back to
+        original locations, refusing nothing: restore is an operator
+        action that overwrites current state.)
+
+        Backups of the earlier layout keep a bucketed table's files
+        under warehouse/<t> (its backup.json entry says `bucketed`):
+        those files become the table's first manifest generation."""
         with open(os.path.join(backup_dir, "backup.json")) as f:
             desc = json.load(f)
         # wholesale semantics (store-backup.md restore copies
@@ -456,40 +443,23 @@ class SystemMixin:
                 self.drop_table(t, if_exists=True)
         for t, entry in desc["tables"].items():
             with self._table_lock(t):
-                # drop the live bucketed catalog entries before the swap
-                if self.catalog.exists(t):
-                    old_meta = self.catalog.load_meta(t)
-                    if self._is_bucketed(old_meta):
-                        old_gen = int(old_meta.options.get("bucket_gen", 0))
-                        for g in (old_gen - 1, old_gen, old_gen + 1):
-                            if g >= 0:
-                                try:
-                                    self.spark.sql(
-                                        "DROP TABLE IF EXISTS "
-                                        + self._cat_name(t, gen=g)
-                                    )
-                                except Exception:  # noqa: BLE001
-                                    pass
+                self._drop_catalog_entry(t)
                 tpath = self.catalog.table_path(t)
                 shutil.rmtree(tpath, ignore_errors=True)
                 shutil.copytree(os.path.join(backup_dir, "store", t), tpath)
                 if entry.get("bucketed"):
-                    loc = os.path.join(tpath, "bucketdata")
-                    shutil.copytree(
-                        os.path.join(backup_dir, "warehouse", t), loc
+                    wdir = os.path.join(backup_dir, "warehouse", t)
+                    data = self.catalog.data_path(t)
+                    os.makedirs(data, exist_ok=True)
+                    names = sorted(
+                        f for f in os.listdir(wdir) if f.endswith(".parquet")
                     )
-                    meta = self.catalog.load_meta(t)
-                    gen = int(meta.options.get("bucket_gen", 0))
-                    cat = self._cat_name(t, gen=gen)
-                    self.spark.sql(f"DROP TABLE IF EXISTS {cat}")
-                    cluster = ", ".join(entry["partition_by"])
-                    self.spark.sql(
-                        f"CREATE TABLE {cat} ({entry['schema_ddl']}) "
-                        f"USING parquet CLUSTERED BY ({cluster}) "
-                        f"SORTED BY ({cluster}) "
-                        f"INTO {entry['buckets']} BUCKETS "
-                        f"LOCATION '{loc}'"
-                    )
+                    for f in names:
+                        shutil.copy2(os.path.join(wdir, f), os.path.join(data, f))
+                    schema = self.spark.createDataFrame(
+                        [], entry["schema_ddl"]
+                    ).schema
+                    self._manifest_commit(t, full=names, schema=schema)
             self._refresh_view(t)
         reg = os.path.join(backup_dir, "_registry.json")
         if os.path.exists(reg):
@@ -526,12 +496,6 @@ class SystemMixin:
         Returns one row: (table, mode, files, skipped, rows)."""
         name = self._canon(name)
         meta = self.catalog.load_meta(name)
-        if self._is_bucketed(meta):
-            raise ValueError(
-                f"SYS.RECOVER_TABLE: {name} is a bucketed table — its "
-                "layout lives in the Spark catalog, not a manifest; "
-                "recreate it from SYS.BACKUP_STORE or re-register it"
-            )
         with self._table_lock(name):
             data = self.catalog.data_path(name)
             hist_gens = self._history_gens(name)
@@ -583,13 +547,15 @@ class SystemMixin:
                 )
             # a corrupt manifest must not poison the rebuild below
             # (_manifest_commit seeds from the directory listing when the
-            # manifest is unreadable); stale history snapshots reference
-            # a numbering we are about to restart — retire them
+            # manifest is unreadable); stale history snapshots and link
+            # directories reference a numbering we are about to restart
+            # — retire them
             try:
                 os.remove(self._manifest_path(name))
             except FileNotFoundError:
                 pass
-            shutil.rmtree(self._history_dir(name), ignore_errors=True)
+            for d in (self._history_dir(name), self._gens_dir(name)):
+                shutil.rmtree(d, ignore_errors=True)
             df = (
                 self.spark.read.option("mergeSchema", "true").parquet(*valid)
             )

@@ -380,13 +380,6 @@ class TransactionMixin:
         m = self._load_manifest(name)
         if m is not None:
             return ("manifest", m["gen"])
-        meta = self.catalog.load_meta(name)
-        if self._is_bucketed(meta):
-            return (
-                "bucketed",
-                int(meta.options.get("bucket_gen", 0)),
-                tuple(sorted(self.spark.table(self._cat_name(name)).inputFiles())),
-            )
         return ("files", tuple(self._list_data_files(name)))
 
     def set_current_schema(self, schema: str, create_if_not_exists: bool = True) -> None:

@@ -127,8 +127,7 @@ class ContinuousAggregate:
         # must never hide stored rows from the merge (hidden row ⇒ its
         # history silently overwritten) or kill the stream with a
         # permission error inside foreachBatch
-        meta = self.session.catalog.load_meta(self.table)
-        raw = self.session._mutation_target(self.table, meta)
+        raw = self.session._mutation_target(self.table)
         if raw is None:  # table exists but holds no data yet
             self.session.put(
                 self.table, part.withColumn("last_batch_id", F.lit(batch_id))

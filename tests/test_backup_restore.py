@@ -86,15 +86,14 @@ def test_restored_bucketed_table_keeps_bucketing(populated, spark, tmp_path):
     sn.sql("DELETE FROM bk_fact WHERE grp = 2")
     sn.restore_store(bdir)
     assert sn.table("bk_fact").count() == 30
-    cat = sn._cat_name("bk_fact")
     # catalog-registered with buckets: the physical plan for a bucket-key
-    # aggregate over the CATALOG table has no shuffle exchange
+    # aggregate over the table has no shuffle exchange
     plan = (
-        spark.table(cat).groupBy("grp").agg(F.sum("amt"))
+        sn.table("bk_fact").groupBy("grp").agg(F.sum("amt"))
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
-    # and mutations keep working after restore (next generation swap)
+    # and mutations keep working after restore (next manifest generation)
     sn.sql("UPDATE bk_fact SET amt = -1.0 WHERE id = 0")
     assert sn.table("bk_fact").filter("id = 0").collect()[0].amt == -1.0
 

@@ -111,12 +111,7 @@ def test_bucketed_keyed_table_carries_bloom(spark, snappy):
     )
 
     def _cat_bytes(sn, table):
-        import glob as g
-
-        root = sn.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        root = root.removeprefix("file:")
-        pats = g.glob(os.path.join(root, f"*{table}*", "**", "*"), recursive=True)
-        return sum(os.path.getsize(p) for p in pats if os.path.isfile(p))
+        return sum(os.path.getsize(p) for p in sn._live_files(table))
 
     assert _cat_bytes(snappy, "bloombkt") > _cat_bytes(snappy, "plainbkt")
     assert (

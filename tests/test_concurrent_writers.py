@@ -92,6 +92,65 @@ def test_disjoint_put_commits_while_rival_mid_rewrite(snappy, spark):
     assert snappy._claims(name).by_owner == {}
 
 
+def test_predicate_delete_sees_concurrent_new_key(snappy, spark):
+    """A predicate DELETE cannot claim rows a concurrent PUT is adding:
+    beside an in-flight upsert of a NEW key inside its range it must
+    wait for the PUT to commit and then delete that row too (serial
+    order PUT → DELETE), not commit a radius that misses it."""
+    from snappydata_spark import SnappySession
+
+    name = _mk_two_file_table(snappy, spark)
+    store = snappy.catalog.base_dir
+    sa = SnappySession(spark, store_dir=store)
+    sb = SnappySession(spark, store_dir=store)
+    a_stalled = threading.Event()
+    b_rewriting = threading.Event()
+    a_done = threading.Event()
+    errors = []
+    real_replace = type(sa)._replace_files
+
+    def put_replace(meta, files, rows):
+        a_stalled.set()
+        b_rewriting.wait(timeout=5)  # a downgraded DELETE would get here
+        real_replace(sa, meta, files, rows)
+        a_done.set()
+
+    def delete_replace(meta, files, rows):
+        b_rewriting.set()
+        a_done.wait(timeout=90)  # commit after the PUT
+        real_replace(sb, meta, files, rows)
+
+    sa._replace_files = put_replace
+    sb._replace_files = delete_replace
+
+    def run_a():
+        try:
+            sa.put(name, spark.createDataFrame([(200, 2000)], "k long, v long"))
+        except Exception as e:  # noqa: BLE001
+            errors.append(("a", e))
+            a_done.set()
+
+    def run_b():
+        try:
+            assert a_stalled.wait(timeout=90)
+            sb.delete(name, "k >= 90")
+        except Exception as e:  # noqa: BLE001
+            errors.append(("b", e))
+
+    ta = threading.Thread(target=run_a)
+    tb = threading.Thread(target=run_b)
+    ta.start()
+    tb.start()
+    ta.join(timeout=180)
+    tb.join(timeout=180)
+    assert not ta.is_alive() and not tb.is_alive()
+    assert errors == []
+    final = _vals(snappy, name)
+    assert 200 not in final
+    assert sorted(final) == list(range(1, 90))
+    assert snappy._claims(name).by_owner == {}
+
+
 def test_intersecting_put_waits_then_applies(snappy, spark):
     """Writer B touching the SAME key as in-flight writer A must wait out
     A's claim, retry against fresh state, and apply after it — never a
@@ -237,13 +296,13 @@ def test_constrained_tables_stay_serial(snappy, spark):
         df=spark.createDataFrame([(1, 10)], "k long, v long"),
     )
     assert snappy._claims_eligible(snappy.catalog.load_meta("cw_plain")) is True
-    # bucketed tables are not (single-writer mutation journal)
+    # bucketed tables are too: they commit through the same manifest
     snappy.create_table(
         "cw_b",
         options={"key_columns": "k", "partition_by": "k", "buckets": "4"},
         df=spark.createDataFrame([(1, 10)], "k long, v long"),
     )
-    assert snappy._claims_eligible(snappy.catalog.load_meta("cw_b")) is False
+    assert snappy._claims_eligible(snappy.catalog.load_meta("cw_b")) is True
 
 
 def test_claims_registry_semantics():

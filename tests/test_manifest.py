@@ -1,6 +1,6 @@
 """Manifest-based atomic mutation commits (round-2 verdict items #2/#3).
 
-The unbucketed managed-table layout commits every mutation as ONE
+Every managed table, bucketed or not, commits every mutation as ONE
 os.replace of manifest.json.  The crash windows that existed in the
 eager-delete design are each simulated here:
 
@@ -174,108 +174,91 @@ def test_pre_manifest_table_first_mutation_no_duplicates(snappy):
     snappy.drop_table("pm_u")
 
 
-def test_bucketed_overwrite_is_generation_swapped(snappy, sf_dir):
-    """Bucketed mutations are crash-atomic via generation swap: the new
-    generation's catalog table is written FIRST, then the meta pointer
-    flips (atomic rename).  A crash between the two leaves the old
-    generation fully live."""
-    import pytest as _pt
-    from pyspark.sql import functions as F
+def _crash_before_publish(sn):
+    """Make the next manifest publication of `sn` die before its commit
+    point (the staged files are already in the data dir)."""
 
+    def boom(*a, **k):
+        raise RuntimeError("injected crash before publish")
+
+    sn._publish_generation = boom
+    return lambda: sn.__dict__.pop("_publish_generation")
+
+
+def _bucketed_orders(snappy, sf_dir, name):
     base = snappy.spark.read.parquet(f"{sf_dir}/orders.parquet").limit(40)
     snappy.create_table(
-        "bg_t",
+        name,
         options={"key_columns": "o_orderkey", "partition_by": "o_orderkey",
                  "buckets": 4},
         df=base,
     )
-    key = base.select("o_orderkey").collect()[0].o_orderkey
-    before = snappy.table("bg_t").count()
+    return base.select("o_orderkey").collect()[0].o_orderkey
 
-    # inject a crash between the new-generation write and the meta flip
-    # (INSERT OVERWRITE takes the full-rewrite path = generation swap)
-    orig_save = snappy.catalog.save_meta
 
-    def boom(meta):
-        raise RuntimeError("injected crash before pointer flip")
+def _rows(sn, name):
+    return sorted(tuple(r) for r in sn.table(name).collect())
 
-    snappy.catalog.save_meta = boom
+
+def test_bucketed_overwrite_is_generation_swapped(snappy, sf_dir):
+    """A bucketed overwrite is one new manifest generation: its files are
+    staged first, then the manifest flips (atomic rename).  A crash
+    between the two leaves the old generation fully live."""
+    import pytest as _pt
+    from pyspark.sql import functions as F
+
+    key = _bucketed_orders(snappy, sf_dir, "bg_t")
+    before = _rows(snappy, "bg_t")
+
+    restore = _crash_before_publish(snappy)
     with _pt.raises(RuntimeError, match="injected crash"):
         snappy.sql(
             f"INSERT OVERWRITE bg_t SELECT * FROM bg_t WHERE o_orderkey <> {key}"
         )
-    snappy.catalog.save_meta = orig_save
+    restore()
 
     # a FRESH session over the store still serves the OLD generation in full
     from snappydata_spark import SnappySession
 
     sn2 = SnappySession(snappy.spark, store_dir=snappy.catalog.base_dir)
-    assert sn2.table("bg_t").count() == before
-    assert sn2.table("bg_t").filter(F.col("o_orderkey") == key).count() >= 1
+    assert _rows(sn2, "bg_t") == before
 
-    # redo without the crash: mutation lands, old generation is retired
+    # redo without the crash: mutation lands with no duplicate row
     sn2.sql(
         f"INSERT OVERWRITE bg_t SELECT * FROM bg_t WHERE o_orderkey <> {key}"
     )
-    assert sn2.table("bg_t").count() == before - 1
+    after = _rows(sn2, "bg_t")
+    assert len(after) == len(before) - 1 == len(set(after))
     assert sn2.table("bg_t").filter(F.col("o_orderkey") == key).count() == 0
-    # bucketed layout preserved through the swap (still a catalog table)
-    meta = sn2.catalog.load_meta("bg_t")
-    assert int(meta.options["bucket_gen"]) >= 1
     snappy.drop_table("bg_t")
 
 
-def test_bucketed_pruned_mutation_journal_recovers(snappy, sf_dir):
-    """Pruned bucketed mutations (append new bucket rows, then remove the
-    touched files) are crash-exact through the mutation journal: a crash
-    after the append but before the removals would duplicate rows; on the
-    next session the journal replays the removals."""
-    import os as _os
-
-    import snappydata_spark.session as sess_mod
+def test_bucketed_pruned_mutation_crash_is_atomic(snappy, sf_dir):
+    """A pruned bucketed mutation (stage the rewritten bucket files, then
+    commit adds + removals in one manifest generation) is crash-exact: a
+    crash before the commit leaves exactly the pre-mutation rows, and
+    the redo lands with no duplicate row."""
     from snappydata_spark import SnappySession
     from pyspark.sql import functions as F
 
-    base = snappy.spark.read.parquet(f"{sf_dir}/orders.parquet").limit(40)
-    snappy.create_table(
-        "bj_t",
-        options={"key_columns": "o_orderkey", "partition_by": "o_orderkey",
-                 "buckets": 4},
-        df=base,
-    )
-    key = base.select("o_orderkey").collect()[0].o_orderkey
-    before = snappy.table("bj_t").count()
+    key = _bucketed_orders(snappy, sf_dir, "bj_t")
+    before = _rows(snappy, "bj_t")
 
-    # crash injection: the first os.remove of a parquet file dies
-    real_remove = _os.remove
-    state = {"shot": False}
-
-    def exploding_remove(path):
-        if str(path).endswith(".parquet") and not state["shot"]:
-            state["shot"] = True
-            raise RuntimeError("injected crash during old-file removal")
-        return real_remove(path)
-
-    sess_mod.os.remove = exploding_remove
+    restore = _crash_before_publish(snappy)
     try:
-        try:
-            snappy.sql(
-                f"UPDATE bj_t SET o_totalprice = 1.5 WHERE o_orderkey = {key}"
-            )
-        except RuntimeError:
-            pass
+        snappy.sql(f"UPDATE bj_t SET o_totalprice = 1.5 WHERE o_orderkey = {key}")
+    except RuntimeError:
+        pass
     finally:
-        sess_mod.os.remove = real_remove
+        restore()
 
-    # journal exists; duplicates are present in the raw listing until
-    # recovery runs
-    jpath = _os.path.join(snappy.catalog.table_path("bj_t"), "mutation_journal.json")
-    assert _os.path.exists(jpath)
-
-    # a fresh session recovers: exact post-mutation state, no duplicates
     sn2 = SnappySession(snappy.spark, store_dir=snappy.catalog.base_dir)
-    assert not _os.path.exists(jpath)
-    assert sn2.table("bj_t").count() == before
+    assert _rows(sn2, "bj_t") == before
+
+    sn2.sql(f"UPDATE bj_t SET o_totalprice = 1.5 WHERE o_orderkey = {key}")
+    after = _rows(sn2, "bj_t")
+    assert len(after) == len(before)
+    assert sn2.table("bj_t").select("o_orderkey").distinct().count() == len(before)
     got = sn2.table("bj_t").filter(F.col("o_orderkey") == key).collect()
     assert len(got) == 1 and got[0].o_totalprice == 1.5
     snappy.drop_table("bj_t")

@@ -220,18 +220,14 @@ def test_pruned_update_bucketed_table(snappy):
         "prb_t", options={"key_columns": "k", "partition_by": "k", "buckets": "8"},
         df=df,
     )
-    import glob as _glob
-
-    warehouse = snappy.spark.conf.get("spark.sql.warehouse.dir")
-    tbl_dir = _glob.glob(
-        os.path.join(warehouse.replace("file:", ""), "*prb_t*")
-    )[0]
-    files_before = _data_files(tbl_dir)
+    # bucketed tables keep their files in the table's own data dir,
+    # committed through the manifest like every other table
+    files_before = snappy._live_files("prb_t")
     state_before = _file_state(files_before)
 
     snappy.update("prb_t", "k = 77", {"x": "x + 1"})
 
-    files_after = _data_files(tbl_dir)
+    files_after = snappy._live_files("prb_t")
     surviving = [f for f in files_before if f in files_after]
     assert len(surviving) >= len(files_before) - 1
     after_state = _file_state(surviving)

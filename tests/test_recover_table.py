@@ -6,8 +6,6 @@ history snapshots when possible, else from surviving parquet footers."""
 
 import os
 
-import pytest
-
 
 def _mk(snappy, spark, name="rc_t"):
     df = spark.createDataFrame(
@@ -75,11 +73,25 @@ def test_recover_skips_torn_files(snappy, spark):
     assert len(got) == 100 and got[1] == "updated"
 
 
-def test_recover_bucketed_rejected(snappy, spark):
+def test_recover_bucketed_from_history(snappy, spark):
+    """Bucketed tables commit through the same manifest, so a lost
+    manifest replays from history exactly, the catalog entry moves to
+    the recovered generation and the bucket layout survives."""
+    from snappydata_spark.plans import exchange_count
+
     snappy.create_table(
         "rc_b",
         options={"key_columns": "k", "partition_by": "k", "buckets": "4"},
-        df=spark.createDataFrame([(1, 10)], "k long, v long"),
+        df=spark.createDataFrame(
+            [(i, f"v{i}") for i in range(1, 41)], "k long, v string"
+        ),
     )
-    with pytest.raises(ValueError, match="bucketed"):
-        snappy.recover_table("rc_b")
+    snappy.put("rc_b", spark.createDataFrame([(1, "updated")], "k long, v string"))
+    before = _vals(snappy, "rc_b")
+    os.remove(snappy._manifest_path("rc_b"))
+    rep = snappy.sql("CALL SYS.RECOVER_TABLE('rc_b')").collect()[0]
+    assert rep.mode.startswith("history:")
+    assert _vals(snappy, "rc_b") == before and before[1] == "updated"
+    assert exchange_count(snappy.table("rc_b").groupBy("k").count()) == 0
+    snappy.put("rc_b", spark.createDataFrame([(2, "post")], "k long, v string"))
+    assert _vals(snappy, "rc_b")[2] == "post"

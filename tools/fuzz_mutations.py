@@ -33,6 +33,11 @@ cannot even read until the first committed), and ops the claims protocol
 lets interleave have disjoint radii, whose model effects commute — so
 replaying the log serially reproduces the unique correct final state.
 
+Every schedule runs twice: on an unbucketed keyed table and on a
+bucketed one (PARTITION_BY k, 4 BUCKETS).  Both commit through the same
+hooked `_manifest_commit` and take the same claims, so one oracle serves
+both layouts.
+
 Usage:
     python tools/fuzz_mutations.py --schedules 200 --seed 1 \
         --json FUZZ_MUTATIONS.json
@@ -54,6 +59,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 KEYSPACE = 96
 TABLE = "fmz_t"
+# table options per layout; every schedule runs on each
+LAYOUTS = {
+    "plain": {"key_columns": "k"},
+    "bucketed": {"key_columns": "k", "partition_by": "k", "buckets": 4},
+}
 
 _TLS = threading.local()
 
@@ -248,7 +258,21 @@ def run_schedule(
     ops_per_thread: int = 5,
     mode: str = "mixed",
 ) -> dict:
-    """One randomized schedule.  Returns {'ok': bool, ...diagnostics}."""
+    """One randomized schedule, run on every layout in LAYOUTS.  Returns
+    {'ok': bool, ...} — the first failing layout's diagnostics, or the
+    per-layout walls."""
+    walls = {}
+    for layout in LAYOUTS:
+        res = _run_layout(spark, seed, n_threads, ops_per_thread, mode, layout)
+        if not res["ok"]:
+            return res
+        walls[layout] = res["wall"]
+    return {**res, "layout": "all", "wall": walls}
+
+
+def _run_layout(
+    spark, seed: int, n_threads: int, ops_per_thread: int, mode: str, layout: str
+) -> dict:
     from snappydata_spark import SnappySession
 
     rng = random.Random(seed)
@@ -266,7 +290,7 @@ def run_schedule(
         chunks = [range(0, 32), range(32, 64), range(64, KEYSPACE)]
         boot.create_table(
             TABLE,
-            options={"key_columns": "k"},
+            options=dict(LAYOUTS[layout]),
             df=spark.createDataFrame(
                 [(k, k) for k in chunks[0]], "k long, v long"
             ),
@@ -318,6 +342,7 @@ def run_schedule(
                 "ok": False,
                 "seed": seed,
                 "mode": mode,
+                "layout": layout,
                 "reason": "worker hung (>600s)",
             }
         if errors:
@@ -325,6 +350,7 @@ def run_schedule(
                 "ok": False,
                 "seed": seed,
                 "mode": mode,
+                "layout": layout,
                 "reason": f"op errors: {errors}",
             }
         logged = set(oplog.entries)
@@ -334,6 +360,7 @@ def run_schedule(
                 "ok": False,
                 "seed": seed,
                 "mode": mode,
+                "layout": layout,
                 "reason": f"ops never logged a serialization point: {missing}",
             }
         for op_id in oplog.entries:
@@ -345,6 +372,7 @@ def run_schedule(
                 "ok": False,
                 "seed": seed,
                 "mode": mode,
+                "layout": layout,
                 "reason": f"duplicate keys in final state "
                 f"({len(rows)} rows, {len(final)} keys)",
             }
@@ -360,6 +388,7 @@ def run_schedule(
                 "ok": False,
                 "seed": seed,
                 "mode": mode,
+                "layout": layout,
                 "reason": "final state != serial-replay model",
                 "extra_keys": repr(extra)[:400],
                 "missing_keys": repr(gone)[:400],
@@ -371,6 +400,7 @@ def run_schedule(
             "ok": True,
             "seed": seed,
             "mode": mode,
+            "layout": layout,
             "n_ops": len(by_id),
             "wall": round(wall, 2),
         }
@@ -406,7 +436,8 @@ def run(
         print(
             f"{status}  schedule {i + 1}/{n_schedules} mode={mode} "
             f"seed={res['seed']} "
-            + (f"wall={res.get('wall')}s" if res["ok"] else res["reason"]),
+            + (f"wall={res.get('wall')}" if res["ok"] else
+               f"layout={res['layout']} {res['reason']}"),
             flush=True,
         )
         results.append(res)
