@@ -24,8 +24,6 @@ top-k would shuffle the world.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, functions as F
 
 Z_95 = 1.959963984540054  # 95% two-sided normal quantile

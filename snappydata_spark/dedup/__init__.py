@@ -1,9 +1,11 @@
 """Deduplication operators for training-data pipelines (SURVEY.md §7 M6).
 
 The near-duplicate families — MinHash+LSH, SimHash, n-gram Jaccard,
-embedding-cosine — as DataFrame transformations built from pure Catalyst
-expressions (functions/text.py, functions/vector.py); exact dedup is a
-fingerprint groupBy in operators/dedup_ops.py.
+containment, embedding-cosine — as DataFrame transformations.  Text
+becomes per-document features in ONE Python pass (_featurize: one
+tokenizer with Spark tokens() semantics, one mapInPandas scaffold);
+everything after it is Catalyst.  Exact dedup is a fingerprint groupBy
+in operators/dedup_ops.py.
 
 Scale design: every family is map-side signature computation followed by
 exactly ONE shuffle on a blocking key (fingerprint / LSH band / SimHash
@@ -15,6 +17,9 @@ within hash buckets.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -24,11 +29,11 @@ def _sig_frame(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
     minhash agrees).  This is the only code that knows whether a band
     table carries a digest.
 
-    Band tables produced by index_minhash._band_rows carry a map-side
-    `sig_digest` column (md5 of the full signature, identical on every
-    band row), so the per-doc row is just the band-0 slice — no shuffle.
-    Digest-less band tables (indexes stored before the column existed)
-    re-derive the key from the band-ordered hash tuple via
+    Band tables produced by _band_rows carry a map-side `sig_digest`
+    column (md5 of the full signature, identical on every band row), so
+    the per-doc row is just the band-0 slice — no shuffle.  Digest-less
+    band tables (indexes stored before the column existed) re-derive
+    the key from the band-ordered hash tuple via
     collect_list/array_sort — one groupBy-id shuffle."""
     if "sig_digest" in banded.columns:
         return banded.filter(F.col("band") == 0).select(id_col, "sig_digest")
@@ -81,7 +86,9 @@ def _band_collisions(rep_bands: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def collapse_banded_pairs(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def collapse_banded_pairs(
+    banded: DataFrame, id_col: str = "doc_id", doc2trep: DataFrame | None = None
+) -> DataFrame:
     """Exact-duplicate-collapsed candidate edges from a (id, band,
     band_hash) table.
 
@@ -106,9 +113,20 @@ def collapse_banded_pairs(banded: DataFrame, id_col: str = "doc_id") -> DataFram
     only the materialized pair list shrinks from Σk² to Θ(n).  The reps
     frame is slim (bounded by distinct signatures) and feeds the rep
     semi-join, which AQE converts to a broadcast when reps fit and
-    degrades to a shuffle join when they don't."""
+    degrades to a shuffle join when they don't.
+
+    `doc2trep` (id, __trep) is given when `banded` holds only the
+    verbatim-text representatives of a corpus (minhash_lsh_candidates):
+    every doc then takes the signature rep of its text rep, and the
+    inner join drops whole text groups whose rep produced no bands (text
+    shorter than one shingle / NULL) — the oracle's len(t) >= 3 gate."""
     reps = _elect_reps(banded, id_col)
-    member_edges = reps.filter(F.col(id_col) != F.col("__srep")).select(
+    members = reps
+    if doc2trep is not None:
+        members = doc2trep.join(
+            reps.select(F.col(id_col).alias("__trep"), "__srep"), "__trep"
+        )
+    member_edges = members.filter(F.col(id_col) != F.col("__srep")).select(
         F.col("__srep").alias("doc1"), F.col(id_col).alias("doc2")
     )
     rep_pairs = _band_collisions(_rep_bands(banded, reps, id_col), id_col)
@@ -130,21 +148,6 @@ def minhash_lsh_candidates(
     for verbatim-duplicate mass plus rep-rep band-collision pairs —
     linear output whose transitive closure equals the full pair set
     (see collapse_banded_pairs)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes={num_hashes} must divide evenly into bands={bands}: "
-            "a remainder would silently drop the trailing hash functions "
-            "and change the effective (1/b)^(1/r) similarity threshold"
-        )
-    # band rows come from the vectorized Python-worker builder
-    # (index_minhash._band_rows) — hash-identical to the Catalyst chain
-    # in functions/text.py but ~15x faster cold: the interpreted HOF
-    # lambdas (~24M evals at sf0.1) did not scale across local threads.
-    # Docs too short for a shingle are dropped there (an all-NULL
-    # signature would bucket every short doc together — k short docs →
-    # k² candidate pairs; the oracle's WHERE len(t) >= 3 matches).
-    from snappydata_spark.index_minhash import _band_rows
-
     # Verbatim-duplicate pre-collapse (r8): on web corpora the same page
     # is mirrored k times, and minhashing each mirror re-pays the whole
     # shingle->md5->minhash CPU for identical bytes.  Fingerprint the
@@ -176,168 +179,183 @@ def minhash_lsh_candidates(
     # sides of the rep self-join read the cached band table instead of
     # re-running shingle->md5->minhash (2x the whole pipeline).  At
     # 100 TB the same move is "write signatures to a table, self-join
-    # the table" -- signature bytes << text bytes.
+    # the table" -- signature bytes << text bytes.  Docs too short for a
+    # shingle get no band rows (see _band_rows).
     banded = _band_rows(
         rep_docs, text_col, id_col, num_hashes, bands, shingle_n
     ).persist()
-    reps = _elect_reps(banded, id_col)
-    # inner join drops whole groups whose rep produced no bands (text
-    # shorter than one shingle / NULL) — the oracle's len(t) >= 3 gate
-    member_edges = (
-        doc2trep.join(
-            reps.select(F.col(id_col).alias("__trep"), "__srep"), "__trep"
-        )
-        .filter(F.col(id_col) != F.col("__srep"))
-        .select(F.col("__srep").alias("doc1"), F.col(id_col).alias("doc2"))
-    )
-    rep_pairs = _band_collisions(_rep_bands(banded, reps, id_col), id_col)
-    return member_edges.unionByName(rep_pairs)
+    return collapse_banded_pairs(banded, id_col, doc2trep)
 
 
-def _ascii_tokens(text):
+_WS = re.compile(r"\s+", re.ASCII)
+
+
+def _ascii_tokens(text: str) -> list[str]:
     """Python twin of functions/text.tokens(): Spark trim() strips ASCII
     spaces only, then an ASCII-\\s+ split (Java's default \\s class)
     with empties dropped."""
-    import re
-
-    return [
-        t
-        for t in re.split(r"\s+", text.strip(" "), flags=re.ASCII)
-        if t
-    ]
+    return [t for t in _WS.split(text.strip(" ")) if t]
 
 
-def _simhash_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, sh): 60-bit simhash per doc, vectorized in Python workers —
-    bit-identical to token_hashes + simhash_from_hashes (one md5 per
-    DISTINCT token, per-bit majority vote; integers only).  The
-    Catalyst chain evaluated 60 interpreted per-bit folds over the
-    token-hash array per doc and did not scale across local threads."""
-    import hashlib
+def _featurize(
+    df: DataFrame, text_col: str, id_col: str, fields: list[str], emit
+) -> DataFrame:
+    """The one text → per-document features pass: select(id, text) →
+    repartition(defaultParallelism) → mapInPandas in Python workers.
+
+    `fields` are the output columns after the id ("name type").  For
+    every non-NULL text, `emit(cols, doc_id, toks)` appends zero or more
+    rows to `cols` — one list per output column, id first — where `toks`
+    is the document's _ascii_tokens.  Hashes are md5-derived (hashlib ==
+    Spark md5 == DuckDB md5 over utf-8), so every featurizer has an exact
+    DuckDB oracle (operators/dedup_ops.py).  The interpreted Catalyst
+    higher-order-function chains these replace did not scale across local
+    threads (~24M lambda evals at sf0.1, 9 s wall regardless of
+    partitioning); this pass parallelizes per Arrow batch."""
+    names = [id_col] + [f.split()[0] for f in fields]
 
     def run(batches):
-        import numpy as np
         import pandas as pd
 
-        bitpos = np.arange(60, dtype=np.int64)
         for pdf in batches:
-            out = {"__id": [], "sh": []}
+            cols = tuple([] for _ in names)
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                toks = list(dict.fromkeys(_ascii_tokens(text)))
-                if not toks:
-                    out["__id"].append(doc_id)
-                    out["sh"].append(0)
-                    continue
-                hs = np.fromiter(
-                    (
-                        int(hashlib.md5(("sh~" + t).encode()).hexdigest()[:15], 16)
-                        for t in toks
-                    ),
-                    dtype=np.int64,
-                )
-                votes = (
-                    ((hs[:, None] >> bitpos) & 1) * 2 - 1
-                ).sum(axis=0)
-                sh = int(((votes > 0).astype(np.int64) << bitpos).sum())
-                out["__id"].append(doc_id)
-                out["sh"].append(sh)
-            yield pd.DataFrame({id_col: out["__id"], "sh": out["sh"]})
+                if text is not None:
+                    emit(cols, doc_id, _ascii_tokens(text))
+            yield pd.DataFrame(dict(zip(names, cols)))
 
     id_type = dict(df.dtypes)[id_col]
     par = df.sparkSession.sparkContext.defaultParallelism
     return (
         df.select(id_col, text_col)
         .repartition(par)
-        .mapInPandas(run, f"{id_col} {id_type}, sh long")
+        .mapInPandas(run, ", ".join([f"{id_col} {id_type}", *fields]))
     )
+
+
+def _md5_int(s: str, hex_chars: int) -> int:
+    """The first `hex_chars` md5 hex digits of `s` as an unsigned int."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:hex_chars], 16)
+
+
+def _shingles(toks: list[str], n: int) -> list[str]:
+    """n-token shingles in document order ([] when len(toks) < n)."""
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+def _band_rows(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+) -> DataFrame:
+    """(id, band, band_hash, sig_digest) for every doc with >= 1
+    shingle — hash-for-hash the dedup_minhash oracle CTEs:
+
+    - base hash per shingle: first 8 md5 hex chars of 'mh~'+shingle as
+      an unsigned int;
+    - sig[i] = min((h*(2i+1) + (12582917i+1)) % (2^31-1)) — int64-exact
+      numpy; docs with no shingle are dropped (an all-NULL signature
+      would bucket every short doc together);
+    - band_hash = md5 of the comma-joined signature slice;
+    - sig_digest = md5 of the comma-joined FULL signature, identical on
+      every band row of a doc.  Equal digests <=> equal signatures, so
+      _sig_frame keys exact-duplicate docs from the band-0 rows directly
+      — a map-side column instead of the collect_list/array_sort shuffle
+      that re-derives the signature key per doc."""
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"num_hashes={num_hashes} must divide evenly into bands={bands}: "
+            "a remainder would silently drop the trailing hash functions "
+            "and change the effective (1/b)^(1/r) similarity threshold"
+        )
+    import numpy as np
+
+    rows = num_hashes // bands
+    mults = [2 * i + 1 for i in range(num_hashes)]
+    adds = [12582917 * i + 1 for i in range(num_hashes)]
+
+    def emit(cols, doc_id, toks):
+        if len(toks) < shingle_n:
+            return
+        ids, band, band_hash, sig_digest = cols
+        hs = np.fromiter(
+            (_md5_int("mh~" + s, 8) for s in _shingles(toks, shingle_n)),
+            dtype=np.int64,
+        )
+        sig = [int(((hs * m + a) % 2147483647).min()) for m, a in zip(mults, adds)]
+        dig = hashlib.md5(",".join(str(s) for s in sig).encode()).hexdigest()
+        for b in range(bands):
+            chunk = ",".join(str(sig[b * rows + r]) for r in range(rows))
+            ids.append(doc_id)
+            band.append(b)
+            band_hash.append(hashlib.md5(chunk.encode()).hexdigest())
+            sig_digest.append(dig)
+
+    return _featurize(
+        df, text_col, id_col,
+        ["band int", "band_hash string", "sig_digest string"], emit,
+    )
+
+
+def _simhash_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, sh): 60-bit simhash per doc — one md5 per DISTINCT token
+    (first 15 hex chars of 'sh~'+token), per-bit majority vote, integers
+    only; a doc with no token gets 0 (the dedup_simhash oracle)."""
+    import numpy as np
+
+    bitpos = np.arange(60, dtype=np.int64)
+
+    def emit(cols, doc_id, toks):
+        ids, sh = cols
+        ids.append(doc_id)
+        if not toks:
+            sh.append(0)
+            return
+        hs = np.fromiter(
+            (_md5_int("sh~" + t, 15) for t in dict.fromkeys(toks)), dtype=np.int64
+        )
+        votes = (((hs[:, None] >> bitpos) & 1) * 2 - 1).sum(axis=0)
+        sh.append(int(((votes > 0).astype(np.int64) << bitpos).sum()))
+
+    return _featurize(df, text_col, id_col, ["sh long"], emit)
 
 
 def _shingle_hash_sets(
     df: DataFrame, text_col: str, id_col: str, shingle_n: int
 ) -> DataFrame:
     """(id, sh array<long>): sorted distinct 60-bit shingle hashes per
-    doc (md5 15-hex prefix), vectorized — the containment index/verify
-    substrate.  Docs with no shingle are dropped (as before)."""
-    import hashlib
+    doc (md5 15-hex prefix) — the containment index/verify substrate.
+    Docs with no shingle are dropped."""
 
-    def run(batches):
-        import pandas as pd
+    def emit(cols, doc_id, toks):
+        if len(toks) < shingle_n:
+            return
+        ids, sh = cols
+        ids.append(doc_id)
+        sh.append(sorted({_md5_int(s, 15) for s in _shingles(toks, shingle_n)}))
 
-        for pdf in batches:
-            out = {"__id": [], "sh": []}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                toks = _ascii_tokens(text)
-                if len(toks) < shingle_n:
-                    continue
-                hs = {
-                    int(
-                        hashlib.md5(
-                            " ".join(toks[i : i + shingle_n]).encode()
-                        ).hexdigest()[:15],
-                        16,
-                    )
-                    for i in range(len(toks) - shingle_n + 1)
-                }
-                out["__id"].append(doc_id)
-                out["sh"].append(sorted(hs))
-            yield pd.DataFrame({id_col: out["__id"], "sh": out["sh"]})
-
-    id_type = dict(df.dtypes)[id_col]
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(id_col, text_col)
-        .repartition(par)
-        .mapInPandas(run, f"{id_col} {id_type}, sh array<long>")
-    )
+    return _featurize(df, text_col, id_col, ["sh array<long>"], emit)
 
 
 def _shingle_string_sets(
     df: DataFrame, text_col: str, id_col: str, shingle_n: int, block_tokens: int
 ) -> DataFrame:
     """(id, blk, sh array<string>): first-occurrence-distinct shingle
-    strings + the md5 prefix-fingerprint blocking key, vectorized (the
-    ngram-Jaccard substrate; set sizes are order-independent so the
-    distinct order never affects results)."""
-    import hashlib
+    strings + the md5 prefix-fingerprint blocking key (the ngram-Jaccard
+    substrate; set sizes are order-independent so the distinct order
+    never affects results)."""
 
-    def run(batches):
-        import pandas as pd
+    def emit(cols, doc_id, toks):
+        ids, blk, sh = cols
+        ids.append(doc_id)
+        blk.append(hashlib.md5(" ".join(toks[:block_tokens]).encode()).hexdigest())
+        sh.append(list(dict.fromkeys(_shingles(toks, shingle_n))))
 
-        for pdf in batches:
-            out = {"__id": [], "blk": [], "sh": []}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                toks = _ascii_tokens(text)
-                blk = hashlib.md5(
-                    " ".join(toks[:block_tokens]).encode()
-                ).hexdigest()
-                if len(toks) < shingle_n:
-                    sh = []
-                else:
-                    sh = list(
-                        dict.fromkeys(
-                            " ".join(toks[i : i + shingle_n])
-                            for i in range(len(toks) - shingle_n + 1)
-                        )
-                    )
-                out["__id"].append(doc_id)
-                out["blk"].append(blk)
-                out["sh"].append(sh)
-            yield pd.DataFrame(
-                {id_col: out["__id"], "blk": out["blk"], "sh": out["sh"]}
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(id_col, text_col)
-        .repartition(par)
-        .mapInPandas(run, f"{id_col} {id_type}, blk string, sh array<string>")
+    return _featurize(
+        df, text_col, id_col, ["blk string", "sh array<string>"], emit
     )
 
 
@@ -584,7 +602,10 @@ def embedding_near_dups(
 
 # Largest candidate-pair set connected_components labels on the driver:
 # 4M pairs are ~128 MB of (long, long) Arrow edges, well under the
-# default spark.driver.maxResultSize of 1g.
+# default spark.driver.maxResultSize of 1g.  On a 4-core host
+# (local[4]), synthetic star-shaped near-dup graphs of 0.5/1/2/4M pairs
+# labeled 1.9-5.5x faster locally than in the distributed loop (4M:
+# 6.4 s vs 35 s), so the cap is the largest size measured.
 CC_COLLECT_CAP = 4_000_000
 
 # id types the numpy labeler vectorizes; other numeric ids take the loop

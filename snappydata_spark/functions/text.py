@@ -3,8 +3,10 @@ Python UDFs: everything stays inside whole-stage codegen, so these run at
 parquet-scan speed over 100 TB of documents).
 
 Families: tokenization, quality metrics, language-ID (marker heuristic),
-document fingerprinting, shingling, MinHash signatures, SimHash — the
-text side of a training-data pipeline (SURVEY.md §7 M6).
+document fingerprinting, shingling — the text side of a training-data
+pipeline (SURVEY.md §7 M6).  The near-dup signatures (MinHash, SimHash,
+shingle hash sets) are computed by the Python featurizers in dedup/,
+with the same tokens() semantics.
 
 Cross-engine determinism: every hash is md5-derived (identical bytes in
 Spark and DuckDB), so each operator has an exact SQL oracle.
@@ -32,6 +34,10 @@ def tokens(col: Column) -> Column:
     whitespace-only text yields [] — a bare split returns [''], giving
     empty documents token_count=1 and a non-zero quality score."""
     return F.filter(F.split(F.trim(col), r"\s+"), lambda x: x != "")
+
+
+# tokens() of a `text` column in DuckDB, for the registry oracles
+TOKENS_SQL = r"list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')"
 
 
 def token_count(col: Column) -> Column:
@@ -142,106 +148,6 @@ def hash32(col: Column, seed: str) -> Column:
     return F.conv(F.substring(F.md5(F.concat(F.lit(seed), col)), 1, 8), 16, 10).cast(
         "long"
     )
-
-
-MINHASH_MOD = 2147483647  # 2^31 - 1
-
-
-def shingle_hashes(col: Column, shingle_n: int = 3) -> Column:
-    """ONE md5-derived base hash per shingle.  The expensive digest runs
-    once; the minhash family derives from it by cheap affine rehashes
-    (minhash_from_hashes).  Keep this in its OWN projection (withColumn)
-    before fanning out to the per-seed mins: CollapseProject will not
-    inline a non-cheap alias referenced many times, so the digest is
-    computed once per shingle instead of num_hashes times — this is a
-    ~16× difference in signature build cost."""
-    return F.transform(shingles(col, shingle_n), lambda s: hash32(s, "mh~"))
-
-
-def minhash_from_hashes(hs: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature from base shingle hashes: sig[i] = min over
-    shingles of (h·aᵢ + bᵢ) mod (2³¹−1) — the standard affine hash
-    family; products stay < 2³⁸ so BIGINT arithmetic is exact in both
-    Spark and the SQL oracle."""
-
-    def _min_hash(i: int) -> Column:
-        a, b = 2 * i + 1, 12582917 * i + 1
-        return F.array_min(
-            F.transform(hs, lambda h: (h * a + b) % F.lit(MINHASH_MOD))
-        )
-
-    return F.array(*[_min_hash(i) for i in range(num_hashes)])
-
-
-def minhash_signature(col: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """MinHash signature as a single expression (convenience; the
-    two-stage shingle_hashes → minhash_from_hashes form is the fast
-    path — see shingle_hashes)."""
-    return minhash_from_hashes(shingle_hashes(col, shingle_n), num_hashes)
-
-
-def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
-    """Split a signature into band hashes: array of (band_idx, band_hash)
-    structs; docs sharing any band hash are near-dup candidates."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(",", *[
-                        F.element_at(sig, b * rows + r + 1).cast("string")
-                        for r in range(rows)
-                    ])
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
-SIMHASH_BITS = 60  # 15 md5 hex chars — fits signed 64-bit in both engines
-
-
-def token_hashes(col: Column, hex_chars: int = 15) -> Column:
-    """ONE md5-derived hash per distinct token (hex_chars·4 bits).  Keep
-    in its own projection before the per-bit votes (same CollapseProject
-    rationale as shingle_hashes — otherwise the digest recomputes once
-    per output bit)."""
-    toks = F.array_distinct(tokens(col))
-    return F.transform(
-        toks,
-        lambda x: F.conv(
-            F.substring(F.md5(F.concat(F.lit("sh~"), x)), 1, hex_chars), 16, 10
-        ).cast("long"),
-    )
-
-
-def simhash_from_hashes(h: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash from per-token hashes: per bit, majority vote of token-hash
-    bits; near-dup docs land at small hamming distance.  60 bits (vs the
-    classic 32) keeps unrelated template-generated docs apart — with 32
-    bits the candidate pair set goes quadratic on synthetic corpora."""
-
-    def _vote(bit: int) -> Column:
-        return F.aggregate(
-            h,
-            F.lit(0).cast("long"),
-            lambda acc, x: acc
-            + (F.shiftright(x, bit).bitwiseAND(F.lit(1)) * 2 - 1),
-        )
-
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        out = out + F.when(_vote(b) > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0)
-        )
-    return out
-
-
-def simhash32(col: Column) -> Column:
-    """32-bit SimHash as a single expression (compat; prefer the
-    two-stage token_hashes → simhash_from_hashes form)."""
-    return simhash_from_hashes(token_hashes(col, 8), bits=32)
 
 
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"

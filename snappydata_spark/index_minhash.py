@@ -27,114 +27,19 @@ Scale: band rows are (id, int, 32-char hash) — signature bytes << text
 bytes, so the self-join reads a tiny fraction of corpus bandwidth; the
 join key (band, band_hash) is the classic LSH bucket, bounded by the
 banding threshold.  Hash arithmetic is the md5+affine family of
-functions/text.py, reproduced exactly by the dedup_minhash oracle CTEs.
+dedup._band_rows, reproduced exactly by the dedup_minhash oracle CTEs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from snappydata_spark.functions import text as T
-
-
-def _band_rows(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-) -> DataFrame:
-    """(id, band, band_hash) for every doc with >= 1 shingle, computed
-    VECTORIZED in Python workers via mapInPandas — hash-for-hash
-    identical to the Catalyst expression chain (functions/text.py
-    shingle_hashes -> minhash_from_hashes -> lsh_bands) and to the
-    DuckDB oracle CTEs:
-
-    - tokens: ASCII-\\s+ split of the trimmed text, empties dropped
-      (re.ASCII matches Java's default \\s class);
-    - base hash per shingle: first 8 md5 hex chars of 'mh~'+shingle as
-      an unsigned int (hashlib == Spark md5 == DuckDB md5, utf-8);
-    - sig[i] = min((h*(2i+1) + (12582917i+1)) % (2^31-1)) — int64-exact
-      numpy; docs with no shingle are dropped (an all-NULL signature
-      would bucket every short doc together);
-    - band_hash = md5 of the comma-joined signature slice;
-    - sig_digest = md5 of the comma-joined FULL signature, identical on
-      every band row of a doc.  Equal digests <=> equal signatures, so
-      dedup._sig_frame keys exact-duplicate docs from the band-0 rows
-      directly — a map-side column instead of the collect_list/array_sort
-      shuffle that re-derives the signature key per doc.
-
-    Why not the Catalyst chain: its interpreted HOF lambdas (~24M evals
-    at sf0.1) did not scale across local threads (9 s wall regardless
-    of partitioning — contention in interpreted eval); this pass is
-    ~0.5 s and parallelizes per Arrow batch."""
-    import hashlib
-    import re
-
-    rows = num_hashes // bands
-    mults = [2 * i + 1 for i in range(num_hashes)]
-    adds = [12582917 * i + 1 for i in range(num_hashes)]
-    ws = re.compile(r"\s+", re.ASCII)
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"__id": [], "band": [], "band_hash": [], "sig_digest": []}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                toks = [t for t in ws.split(text.strip()) if t]
-                if len(toks) < shingle_n:
-                    continue
-                hs = np.fromiter(
-                    (
-                        int(
-                            hashlib.md5(
-                                ("mh~" + " ".join(toks[i : i + shingle_n])).encode()
-                            ).hexdigest()[:8],
-                            16,
-                        )
-                        for i in range(len(toks) - shingle_n + 1)
-                    ),
-                    dtype=np.int64,
-                )
-                sig = [
-                    int(((hs * m + a) % 2147483647).min())
-                    for m, a in zip(mults, adds)
-                ]
-                dig = hashlib.md5(
-                    ",".join(str(s) for s in sig).encode()
-                ).hexdigest()
-                for b in range(bands):
-                    chunk = ",".join(
-                        str(sig[b * rows + r]) for r in range(rows)
-                    )
-                    out["__id"].append(doc_id)
-                    out["band"].append(b)
-                    out["band_hash"].append(
-                        hashlib.md5(chunk.encode()).hexdigest()
-                    )
-                    out["sig_digest"].append(dig)
-            yield pd.DataFrame(
-                {id_col: out["__id"], "band": out["band"],
-                 "band_hash": out["band_hash"],
-                 "sig_digest": out["sig_digest"]}
-            )
-
-    id_type = dict(df.dtypes)[id_col]
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.select(id_col, text_col)
-        .repartition(par)
-        .mapInPandas(
-            run,
-            f"{id_col} {id_type}, band int, band_hash string, "
-            "sig_digest string",
-        )
-    )
+from snappydata_spark.dedup import (
+    _band_rows,
+    _elect_reps,
+    _rep_bands,
+    collapse_banded_pairs,
+)
 
 
 def build_minhash(
@@ -147,10 +52,6 @@ def build_minhash(
     bands: int = 4,
     shingle_n: int = 3,
 ) -> dict:
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes={num_hashes} must divide evenly into bands={bands}"
-        )
     meta = sn.catalog.load_meta(sn._canon(table))
     if id_col is None:
         if not meta.key_columns:
@@ -187,12 +88,22 @@ def build_minhash(
     return info
 
 
+def _index_bands(info: dict, df: DataFrame, text_col: str | None = None) -> DataFrame:
+    """Band rows of `df`'s documents under the index's own parameters."""
+    return _band_rows(
+        df,
+        text_col or info["column"],
+        info["id_col"],
+        info["num_hashes"],
+        info["bands"],
+        info["shingle_n"],
+    )
+
+
 def _write_rep_bands(sn, idx_table: str, rep_table: str, id_col: str) -> None:
     """Materialize the band rows of each signature group's min-id
     REPRESENTATIVE (dedup._elect_reps).  Paid at build/maintenance,
     never at serve time."""
-    from snappydata_spark.dedup import _elect_reps, _rep_bands
-
     banded = sn.table(idx_table)
     rep_bands = _rep_bands(banded, _elect_reps(banded, id_col), id_col)
     sn.create_table(
@@ -226,8 +137,6 @@ def candidate_pairs(sn, index_name: str) -> DataFrame:
     verbatim-duplicate groups, the LSH bucket self-join runs over
     representatives only.  Edges are restricted to base rows visible to
     the current user."""
-    from snappydata_spark.dedup import collapse_banded_pairs
-
     info = sn._ann_indexes[index_name.lower()]
     banded = _visible_bands(sn, info)
     return collapse_banded_pairs(banded, info["id_col"])
@@ -263,14 +172,7 @@ def near_dup_lookup(
         )
     info = sn._ann_indexes[index_name.lower()]
     id_col = info["id_col"]
-    pb = _band_rows(
-        probe,
-        text_col or info["column"],
-        id_col,
-        info["num_hashes"],
-        info["bands"],
-        info["shingle_n"],
-    ).select(
+    pb = _index_bands(info, probe, text_col).select(
         F.col(id_col).alias("probe_id"), "band", "band_hash"
     )
     idx = _visible_bands(sn, info)
@@ -316,18 +218,11 @@ def near_dup_lookup_reps(
         # would stop matching groups that still have visible members
         # (false negatives at the ingestion gate).  Re-elect the min
         # VISIBLE member as rep inline instead.
-        from snappydata_spark.dedup import _elect_reps, _rep_bands
-
         banded = _visible_bands(sn, info)
         rep_bands = _rep_bands(banded, _elect_reps(banded, id_col), id_col)
-    pb = _band_rows(
-        probe,
-        text_col or info["column"],
-        id_col,
-        info["num_hashes"],
-        info["bands"],
-        info["shingle_n"],
-    ).select(F.col(id_col).alias("probe_id"), "band", "band_hash")
+    pb = _index_bands(info, probe, text_col).select(
+        F.col(id_col).alias("probe_id"), "band", "band_hash"
+    )
     return (
         rep_bands.join(F.broadcast(pb), ["band", "band_hash"])
         .filter(F.col(id_col) != F.col("probe_id"))
@@ -354,14 +249,7 @@ def refresh_minhash(
         rows_src = base if source is None else base.join(
             source.select(id_col).distinct(), id_col, "left_semi"
         )
-        upserts = _band_rows(
-            rows_src,
-            info["column"],
-            id_col,
-            info["num_hashes"],
-            info["bands"],
-            info["shingle_n"],
-        )
+        upserts = _index_bands(info, rows_src)
         # a touched doc whose NEW text yields no shingles (shorter than
         # shingle_n tokens) produces zero fresh bands — its old band
         # rows must delete, not linger (the inverted index's stale-terms

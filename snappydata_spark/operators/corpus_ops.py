@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from snappydata_spark.functions.text import TOKENS_SQL as _TOKS
 from snappydata_spark.functions import vector as V
 from snappydata_spark.operators.registry import _cleanup_at_exit, register
 from snappydata_spark.tables import load_tables
@@ -481,8 +482,6 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 DSIR_BUCKETS = 64
 DSIR_TOPN = 100
 
-_TOKS_SQL = r"list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')"
-
 
 def _dsir_oracle() -> str:
     B = DSIR_BUCKETS
@@ -490,7 +489,7 @@ def _dsir_oracle() -> str:
 WITH tok AS (
   SELECT doc_id, lang,
          ('0x' || substr(md5('dsir~' || t.token), 1, 15))::BIGINT % {B} AS b
-  FROM (SELECT doc_id, lang, unnest({_TOKS_SQL}) AS token FROM documents) t),
+  FROM (SELECT doc_id, lang, unnest({_TOKS}) AS token FROM documents) t),
 cnt AS (
   SELECT r.b,
          COALESCE(SUM(CASE WHEN tok.lang = 'en' THEN 1 ELSE 0 END), 0) AS tc,
@@ -616,7 +615,7 @@ def _bpe_oracle() -> str:
 w0 AS (
   SELECT ' ' || regexp_replace(t.word, '(.)', '\\1 ', 'g') AS ws,
          COUNT(*) AS cnt
-  FROM (SELECT unnest({_TOKS_SQL}) AS word FROM documents) t
+  FROM (SELECT unnest({_TOKS}) AS word FROM documents) t
   GROUP BY t.word)"""
     blocks = [head]
     prev = "w0"

@@ -15,11 +15,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from snappydata_spark import dedup
 from snappydata_spark.functions import text as T
+from snappydata_spark.functions.text import TOKENS_SQL as _TOKS
 from snappydata_spark.functions import vector as V
 from snappydata_spark.operators.registry import _cleanup_at_exit, register
 from snappydata_spark.tables import load_tables
 
-_TOKS = r"list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')"
 
 # corpus with perturbed near-dup copies (one extra token per copy)
 _CORPUS_SQL = """
@@ -118,7 +118,7 @@ def _minhash_ctes(
 ) -> str:
     rows = num_hashes // bands
     # one md5 per shingle + affine rehash family — mirrors
-    # functions/text.shingle_hashes / minhash_from_hashes exactly
+    # dedup._band_rows exactly
     sig_items = ", ".join(
         f"list_min([(h * {2 * i + 1} + {12582917 * i + 1}) % 2147483647 for h in hs])"
         for i in range(num_hashes)
@@ -189,8 +189,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------- simhash
 
 def _simhash_expr_sql() -> str:
-    """DuckDB expression mirroring functions/text.token_hashes +
-    simhash_from_hashes (60-bit)."""
+    """DuckDB statement of dedup._simhash_frame (60-bit)."""
     bit_terms = " + ".join(
         f"(CASE WHEN list_aggregate([((h >> {b}) & 1) * 2 - 1 for h in hs], 'sum') > 0"
         f" THEN {1 << b}::BIGINT ELSE 0 END)"

@@ -16,10 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from snappydata_spark.functions import text as T
+from snappydata_spark.functions.text import TOKENS_SQL as _TOKS
 from snappydata_spark.operators.registry import register
 from snappydata_spark.tables import load_tables
 
-_TOKS = r"list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')"
 _DUCK_NORM = r"lower(regexp_replace(trim(text), '\s+', ' ', 'g'))"
 
 PACK_BUDGET = 512  # tokens per packed training sequence

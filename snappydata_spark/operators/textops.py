@@ -11,10 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from snappydata_spark.functions import text as T
+from snappydata_spark.functions.text import TOKENS_SQL as _TOKS
 from snappydata_spark.operators.registry import register
 from snappydata_spark.tables import load_tables
 
-_TOKS = r"list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')"
 _STOP = "('the', 'a', 'and', 'of', 'to', 'in')"
 
 

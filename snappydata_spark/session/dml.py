@@ -735,8 +735,6 @@ class DMLMixin:
         the pruned subset equals matched-ness against the full table
         because _affected_files returns EVERY file containing a source
         key."""
-        from snappydata_spark.dialect import equi_key_pairs
-
         o = stmt.options
         name = stmt.table.lower()
         return self._run_exclusive(

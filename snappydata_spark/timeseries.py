@@ -23,7 +23,7 @@ Scale design (the whole point of these implementations):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def asof_join(

@@ -124,6 +124,34 @@ def test_rls_hidden_docs_never_leak_through_index(indexed, spark):
         sn.sql("ALTER TABLE mh_docs DISABLE ROW LEVEL SECURITY")
 
 
+@pytest.mark.parametrize(
+    "text", ["\xa0a b c d e", "a b c d e\u3000", "\x1ca b c d e"]
+)
+def test_band_rows_tokenize_like_spark_tokens(spark, text):
+    """Spark trim() strips only ASCII spaces, so tokens() keeps a
+    non-ASCII-space edge character inside the edge token: the banded
+    signature must differ from the same text without that character
+    (Python's str.strip() would drop it and band the two alike)."""
+    from snappydata_spark.functions import text as T
+
+    docs = spark.createDataFrame(
+        [(1, text), (2, "a b c d e")], "doc_id long, text string"
+    )
+    spark_toks = docs.select(T.tokens(F.col("text")).alias("t")).first().t
+    assert dedup._ascii_tokens(text) == spark_toks
+    bands = {1: set(), 2: set()}
+    for r in index_minhash._band_rows(docs, "text", "doc_id", 16, 4, 3).collect():
+        bands[r.doc_id].add((r.band, r.band_hash))
+    assert len(bands[1]) == len(bands[2]) == 4
+    assert bands[1] != bands[2]
+
+
+def test_band_rows_reject_uneven_bands(spark):
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="divide evenly"):
+        dedup.minhash_lsh_candidates(docs, num_hashes=10, bands=4)
+
+
 def test_concurrent_puts_keep_index_consistent(indexed, spark):
     """Two writers PUT-ing different docs concurrently: the per-table
     lock chain (base -> index table) must neither deadlock nor lose a

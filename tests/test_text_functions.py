@@ -6,6 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from snappydata_spark import dedup
 from snappydata_spark.functions import text as T
 from snappydata_spark.functions import vector as V
 
@@ -25,21 +26,21 @@ def test_shingles_overlap(spark):
 
 
 def test_minhash_stable_under_duplication(spark):
-    # minhash is a set signature: duplicated shingles don't change it
-    a = _one(spark, "x y z x y z x y z")
-    b = _one(spark, "x y z")
-    sig_a = a.select(T.minhash_signature(F.col("text"), 8).alias("s")).collect()[0].s
-    sig_b = b.select(T.minhash_signature(F.col("text"), 8).alias("s")).collect()[0].s
-    # a has shingles {x y z, y z x, z x y}; b only {x y z} — min over a
-    # superset is ≤ min over the subset, elementwise
-    assert all(sa <= sb for sa, sb in zip(sig_a, sig_b))
+    # minhash is a set signature: both texts have the shingle set
+    # {x y z, y z x, z x y}, so repeating it changes nothing
+    df = spark.createDataFrame(
+        [(1, "x y z x y z"), (2, "x y z x y z x y z")], "id int, text string"
+    )
+    rows = dedup._band_rows(df, "text", "id", 16, 4, 3).collect()
+    digests = {r.id: r.sig_digest for r in rows}
+    assert set(digests) == {1, 2}
+    assert digests[1] == digests[2]
 
 
 def test_simhash_near_for_near_docs(spark):
     base = "the quick brown fox jumps over the lazy dog again and again"
     df = spark.createDataFrame([(1, base), (2, base + " zzz")], "id int, text string")
-    out = df.select("id", T.simhash32(F.col("text")).alias("sh")).collect()
-    sh = {r.id: r.sh for r in out}
+    sh = {r.id: r.sh for r in dedup._simhash_frame(df, "text", "id").collect()}
     ham = bin(sh[1] ^ sh[2]).count("1")
     assert ham <= 8  # one extra token flips few bits
 
