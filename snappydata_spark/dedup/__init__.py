@@ -23,21 +23,19 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 
-def _sig_frame(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """One (id, sig_digest) row per doc of a (id, band, band_hash) table,
-    where sig_digest is a signature-equality key (equal iff every
-    minhash agrees).  This is the only code that knows whether a band
-    table carries a digest.
+def _with_sig_digest(banded: DataFrame, id_col: str) -> DataFrame:
+    """`banded` (id, band, band_hash[, sig_digest]) with a signature
+    equality key `sig_digest` on every row (equal iff every minhash
+    agrees).  This is the only code that knows whether a band table
+    carries a digest.
 
-    Band tables produced by _band_rows carry a map-side `sig_digest`
-    column (md5 of the full signature, identical on every band row), so
-    the per-doc row is just the band-0 slice — no shuffle.  Digest-less
-    band tables (indexes stored before the column existed) re-derive
-    the key from the band-ordered hash tuple via
-    collect_list/array_sort — one groupBy-id shuffle."""
+    Band tables produced by _band_rows carry the map-side md5 of the
+    full signature.  Digest-less band tables (indexes stored before the
+    column existed) re-derive the key from the band-ordered hash tuple
+    via collect_list/array_sort and join it back on the id."""
     if "sig_digest" in banded.columns:
-        return banded.filter(F.col("band") == 0).select(id_col, "sig_digest")
-    return banded.groupBy(id_col).agg(
+        return banded
+    digests = banded.groupBy(id_col).agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("band", "band_hash"))),
@@ -46,26 +44,39 @@ def _sig_frame(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ",",
         ).alias("sig_digest")
     )
+    return banded.join(digests, id_col)
 
 
 def _elect_reps(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, sig_digest, __srep) per doc of a band table: __srep is the
-    min id of the doc's signature group.  A MIN window over the signature
-    key elects it in one exchange (a groupBy + re-join takes two), and
-    the representatives are the rows where id == __srep."""
+    """Every band row of `banded` plus `__srep`, the min id of its doc's
+    signature group.
+
+    One exchange on band_hash serves the whole collapse.  It clusters
+    every LSH bucket (band, band_hash), so _band_collisions' self-join
+    needs no exchange of its own, and it clusters every signature group
+    too: the docs of a group share each band hash, so the MIN window over
+    (band_hash, sig_digest) sees the whole group on every band row.  The
+    window reads every band column, so each consumer of this frame plans
+    the same exchange and Spark runs it, and the featurizer below it,
+    once."""
     from pyspark.sql import Window as W
 
-    return _sig_frame(banded, id_col).withColumn(
-        "__srep", F.min(id_col).over(W.partitionBy("sig_digest"))
+    return (
+        _with_sig_digest(banded, id_col)
+        .repartition("band_hash")
+        .withColumn(
+            "__srep",
+            F.min(id_col).over(W.partitionBy("band_hash", "sig_digest")),
+        )
     )
 
 
-def _rep_bands(banded: DataFrame, reps: DataFrame, id_col: str) -> DataFrame:
-    """The band rows of the representatives in `reps` (_elect_reps)."""
-    rep_ids = reps.filter(F.col(id_col) == F.col("__srep")).select(
-        F.col("__srep").alias(id_col)
+def _rep_bands(reps: DataFrame, id_col: str) -> DataFrame:
+    """(id, band, band_hash) rows of the representatives in `reps`
+    (_elect_reps)."""
+    return reps.filter(F.col(id_col) == F.col("__srep")).select(
+        id_col, "band", "band_hash"
     )
-    return banded.join(rep_ids, id_col, "left_semi")
 
 
 def _band_collisions(rep_bands: DataFrame, id_col: str) -> DataFrame:
@@ -86,50 +97,32 @@ def _band_collisions(rep_bands: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def collapse_banded_pairs(
-    banded: DataFrame, id_col: str = "doc_id", doc2trep: DataFrame | None = None
-) -> DataFrame:
+def collapse_banded_pairs(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Exact-duplicate-collapsed candidate edges from a (id, band,
-    band_hash) table.
+    band_hash[, sig_digest]) table.
 
     Verbatim-duplicate groups are the norm in web corpora (the same page
     mirrored k times), and a per-document band self-join emits k(k-1)/2
-    pairs per group — quadratic output that no amount of banding fixes
-    (the r6 sf10 rehearsal emitted 14.6 B pairs on exactly that shape).
-    Instead:
+    pairs per group, quadratic output that no banding fixes.  Instead:
 
-    1. group documents by their FULL signature (equal iff every minhash
-       agrees) and pick the min-id representative (_elect_reps);
+    1. group documents by their FULL signature and elect the min-id
+       representative (_elect_reps);
     2. emit one member→representative edge per non-representative doc
-       (linear in rows — this carries the whole duplicate mass);
-    3. self-join the band table restricted to REPRESENTATIVES only, so
-       cross-group candidates are quadratic in distinct signatures, not
-       documents.
+       (from its band-0 row: linear in rows, and it carries the whole
+       duplicate mass);
+    3. self-join the band rows of REPRESENTATIVES only, so cross-group
+       candidates are quadratic in distinct signatures, not documents.
 
-    The returned edge set's transitive closure equals the closure of the
-    full pair list (members reach each other through their rep; reps of
+    The edge set's transitive closure equals the closure of the full pair
+    list (members reach each other through their rep; reps of
     band-colliding groups are directly connected), so
-    connected_components / keep_one_per_cluster results are unchanged —
-    only the materialized pair list shrinks from Σk² to Θ(n).  The reps
-    frame is slim (bounded by distinct signatures) and feeds the rep
-    semi-join, which AQE converts to a broadcast when reps fit and
-    degrades to a shuffle join when they don't.
-
-    `doc2trep` (id, __trep) is given when `banded` holds only the
-    verbatim-text representatives of a corpus (minhash_lsh_candidates):
-    every doc then takes the signature rep of its text rep, and the
-    inner join drops whole text groups whose rep produced no bands (text
-    shorter than one shingle / NULL) — the oracle's len(t) >= 3 gate."""
+    connected_components / keep_one_per_cluster results are unchanged.
+    The stored-index path (index_minhash) runs this same collapse."""
     reps = _elect_reps(banded, id_col)
-    members = reps
-    if doc2trep is not None:
-        members = doc2trep.join(
-            reps.select(F.col(id_col).alias("__trep"), "__srep"), "__trep"
-        )
-    member_edges = members.filter(F.col(id_col) != F.col("__srep")).select(
-        F.col("__srep").alias("doc1"), F.col(id_col).alias("doc2")
-    )
-    rep_pairs = _band_collisions(_rep_bands(banded, reps, id_col), id_col)
+    member_edges = reps.filter(
+        (F.col("band") == 0) & (F.col(id_col) != F.col("__srep"))
+    ).select(F.col("__srep").alias("doc1"), F.col(id_col).alias("doc2"))
+    rep_pairs = _band_collisions(_rep_bands(reps, id_col), id_col)
     return member_edges.unionByName(rep_pairs)
 
 
@@ -141,50 +134,19 @@ def minhash_lsh_candidates(
     bands: int = 4,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """MinHash + LSH banding: shingle → minhash signature (map-side) →
-    explode band hashes → collapse exact-duplicate signatures →
-    self-join representatives per (band, band_hash) bucket.
-    Returns candidate EDGES (doc1 < doc2, distinct): member→rep edges
-    for verbatim-duplicate mass plus rep-rep band-collision pairs —
-    linear output whose transitive closure equals the full pair set
-    (see collapse_banded_pairs)."""
-    # Verbatim-duplicate pre-collapse (r8): on web corpora the same page
-    # is mirrored k times, and minhashing each mirror re-pays the whole
-    # shingle->md5->minhash CPU for identical bytes.  Fingerprint the
-    # raw text map-side (one md5 per DOC vs one per shingle), elect a
-    # min-id representative per identical text, and band ONLY the
-    # representatives — signature CPU and band-table bytes scale with
-    # DISTINCT content, not raw corpus size.  Signature-level groups
-    # (distinct texts whose minhashes still all agree — e.g. trailing
-    # whitespace) collapse on the band table's map-side sig_digest.
-    # The final rep of a doc is sig_rep(text_rep(doc)); because a text
-    # group is a subset of its signature group and text reps are their
-    # groups' minima, the sig group's min over text reps IS the global
-    # min — member edges are exactly the oracle's (rep, doc) pairs.
-    from pyspark.sql import Window as W
+    """MinHash + LSH banding candidate EDGES (doc1 < doc2, distinct):
+    member→rep edges for exact-duplicate signatures plus rep-rep
+    band-collision pairs, a linear output whose transitive closure
+    equals the full pair set (collapse_banded_pairs).
 
-    # r12 (guide §2.4): the text-rep election used groupBy(__fp) + a
-    # fp⋈tmap re-join (two exchanges on the fingerprint) — a MIN window
-    # over the same key computes each doc's rep in ONE exchange, and
-    # the rep id set falls out of the same frame.
-    fp = df.select(id_col, F.md5(F.col(text_col)).alias("__fp"))
-    doc2trep = fp.withColumn(
-        "__trep", F.min(id_col).over(W.partitionBy("__fp"))
-    ).select(id_col, "__trep")
-    tmap = doc2trep.filter(F.col(id_col) == F.col("__trep")).select("__trep")
-    rep_docs = df.join(
-        tmap.select(F.col("__trep").alias(id_col)), id_col, "left_semi"
+    One featurizer pass (_band_rows) signs each distinct text once and
+    emits band rows for every doc; docs shorter than one shingle or with
+    NULL text get none and take no part.  Its output feeds one band_hash
+    exchange that the rep election, the member edges and both sides of
+    the bucket self-join share (_elect_reps), so nothing is persisted."""
+    return collapse_banded_pairs(
+        _band_rows(df, text_col, id_col, num_hashes, bands, shingle_n), id_col
     )
-    # materialize rep signatures once: the signature grouping and both
-    # sides of the rep self-join read the cached band table instead of
-    # re-running shingle->md5->minhash (2x the whole pipeline).  At
-    # 100 TB the same move is "write signatures to a table, self-join
-    # the table" -- signature bytes << text bytes.  Docs too short for a
-    # shingle get no band rows (see _band_rows).
-    banded = _band_rows(
-        rep_docs, text_col, id_col, num_hashes, bands, shingle_n
-    ).persist()
-    return collapse_banded_pairs(banded, id_col, doc2trep)
 
 
 _WS = re.compile(r"\s+", re.ASCII)
@@ -200,35 +162,46 @@ def _ascii_tokens(text: str) -> list[str]:
 def _featurize(
     df: DataFrame, text_col: str, id_col: str, fields: list[str], emit
 ) -> DataFrame:
-    """The one text → per-document features pass: select(id, text) →
-    repartition(defaultParallelism) → mapInPandas in Python workers.
+    """The one text → per-document features pass: select(id, text),
+    hash-partition and sort on xxhash64(text), mapInPandas in Python
+    workers.
 
-    `fields` are the output columns after the id ("name type").  For
-    every non-NULL text, `emit(cols, doc_id, toks)` appends zero or more
-    rows to `cols` — one list per output column, id first — where `toks`
-    is the document's _ascii_tokens.  Hashes are md5-derived (hashlib ==
-    Spark md5 == DuckDB md5 over utf-8), so every featurizer has an exact
-    DuckDB oracle (operators/dedup_ops.py).  The interpreted Catalyst
-    higher-order-function chains these replace did not scale across local
-    threads (~24M lambda evals at sf0.1, 9 s wall regardless of
-    partitioning); this pass parallelizes per Arrow batch."""
+    `fields` are the output columns after the id ("name type").
+    `emit(toks)` returns the feature rows (tuples, one value per field)
+    of one text, where `toks` is its _ascii_tokens; every copy of the
+    text gets those rows under its own id, and NULL texts get none.
+    Identical texts land in the same partition, adjacent, so each run
+    of copies is featurized once and the cost of signatures scales with
+    distinct content, while a worker holds one text's rows at a time.
+    Hashes are md5-derived (hashlib == Spark md5 == DuckDB md5 over
+    utf-8), so every featurizer has an exact DuckDB oracle
+    (operators/dedup_ops.py)."""
     names = [id_col] + [f.split()[0] for f in fields]
 
     def run(batches):
         import pandas as pd
 
+        text, rows = None, []
         for pdf in batches:
             cols = tuple([] for _ in names)
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is not None:
-                    emit(cols, doc_id, _ascii_tokens(text))
+            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
+                if t is None:
+                    continue
+                if t != text:
+                    text, rows = t, emit(_ascii_tokens(t))
+                for row in rows:
+                    cols[0].append(doc_id)
+                    for col, v in zip(cols[1:], row):
+                        col.append(v)
             yield pd.DataFrame(dict(zip(names, cols)))
 
     id_type = dict(df.dtypes)[id_col]
     par = df.sparkSession.sparkContext.defaultParallelism
+    key = F.xxhash64(text_col)
     return (
         df.select(id_col, text_col)
-        .repartition(par)
+        .repartition(par, key)
+        .sortWithinPartitions(key)
         .mapInPandas(run, ", ".join([f"{id_col} {id_type}", *fields]))
     )
 
@@ -236,6 +209,12 @@ def _featurize(
 def _md5_int(s: str, hex_chars: int) -> int:
     """The first `hex_chars` md5 hex digits of `s` as an unsigned int."""
     return int(hashlib.md5(s.encode()).hexdigest()[:hex_chars], 16)
+
+
+def _csv_md5(vals) -> str:
+    """md5 hex of the comma-joined decimal values (DuckDB's
+    md5(v1::VARCHAR || ',' || ...))."""
+    return hashlib.md5(",".join(map(str, vals)).encode()).hexdigest()
 
 
 def _shingles(toks: list[str], n: int) -> list[str]:
@@ -257,14 +236,14 @@ def _band_rows(
     - base hash per shingle: first 8 md5 hex chars of 'mh~'+shingle as
       an unsigned int;
     - sig[i] = min((h*(2i+1) + (12582917i+1)) % (2^31-1)) — int64-exact
-      numpy; docs with no shingle are dropped (an all-NULL signature
-      would bucket every short doc together);
+      numpy, all hashes in one broadcast pass; docs with no shingle are
+      dropped (an all-NULL signature would bucket every short doc
+      together);
     - band_hash = md5 of the comma-joined signature slice;
     - sig_digest = md5 of the comma-joined FULL signature, identical on
       every band row of a doc.  Equal digests <=> equal signatures, so
-      _sig_frame keys exact-duplicate docs from the band-0 rows directly
-      — a map-side column instead of the collect_list/array_sort shuffle
-      that re-derives the signature key per doc."""
+      _elect_reps keys exact-duplicate docs on a map-side column instead
+      of re-deriving the signature key per doc with a shuffle."""
     if num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes={num_hashes} must divide evenly into bands={bands}: "
@@ -274,29 +253,29 @@ def _band_rows(
     import numpy as np
 
     rows = num_hashes // bands
-    mults = [2 * i + 1 for i in range(num_hashes)]
-    adds = [12582917 * i + 1 for i in range(num_hashes)]
+    mults = np.array([2 * i + 1 for i in range(num_hashes)], dtype=np.int64)
+    adds = np.array([12582917 * i + 1 for i in range(num_hashes)], dtype=np.int64)
 
-    def emit(cols, doc_id, toks):
+    def emit(toks):
         if len(toks) < shingle_n:
-            return
-        ids, band, band_hash, sig_digest = cols
+            return []
         hs = np.fromiter(
             (_md5_int("mh~" + s, 8) for s in _shingles(toks, shingle_n)),
             dtype=np.int64,
         )
-        sig = [int(((hs * m + a) % 2147483647).min()) for m, a in zip(mults, adds)]
-        dig = hashlib.md5(",".join(str(s) for s in sig).encode()).hexdigest()
-        for b in range(bands):
-            chunk = ",".join(str(sig[b * rows + r]) for r in range(rows))
-            ids.append(doc_id)
-            band.append(b)
-            band_hash.append(hashlib.md5(chunk.encode()).hexdigest())
-            sig_digest.append(dig)
+        sig = ((hs[:, None] * mults + adds) % 2147483647).min(axis=0).tolist()
+        dig = _csv_md5(sig)
+        return [
+            (b, _csv_md5(sig[b * rows : (b + 1) * rows]), dig) for b in range(bands)
+        ]
 
+    # NOT NULL is what emit guarantees, and it matters to the plan: on a
+    # nullable band_hash the bucket self-join's inferred isnotnull filter
+    # would sink below _elect_reps' exchange on that side only, and the
+    # member edges would re-run this pass behind an exchange of their own
+    fields = ["band int", "band_hash string", "sig_digest string"]
     return _featurize(
-        df, text_col, id_col,
-        ["band int", "band_hash string", "sig_digest string"], emit,
+        df, text_col, id_col, [f"{f} not null" for f in fields], emit
     )
 
 
@@ -308,17 +287,14 @@ def _simhash_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
     bitpos = np.arange(60, dtype=np.int64)
 
-    def emit(cols, doc_id, toks):
-        ids, sh = cols
-        ids.append(doc_id)
+    def emit(toks):
         if not toks:
-            sh.append(0)
-            return
+            return [(0,)]
         hs = np.fromiter(
             (_md5_int("sh~" + t, 15) for t in dict.fromkeys(toks)), dtype=np.int64
         )
         votes = (((hs[:, None] >> bitpos) & 1) * 2 - 1).sum(axis=0)
-        sh.append(int(((votes > 0).astype(np.int64) << bitpos).sum()))
+        return [(int(((votes > 0).astype(np.int64) << bitpos).sum()),)]
 
     return _featurize(df, text_col, id_col, ["sh long"], emit)
 
@@ -330,12 +306,10 @@ def _shingle_hash_sets(
     doc (md5 15-hex prefix) — the containment index/verify substrate.
     Docs with no shingle are dropped."""
 
-    def emit(cols, doc_id, toks):
+    def emit(toks):
         if len(toks) < shingle_n:
-            return
-        ids, sh = cols
-        ids.append(doc_id)
-        sh.append(sorted({_md5_int(s, 15) for s in _shingles(toks, shingle_n)}))
+            return []
+        return [(sorted({_md5_int(s, 15) for s in _shingles(toks, shingle_n)}),)]
 
     return _featurize(df, text_col, id_col, ["sh array<long>"], emit)
 
@@ -348,11 +322,9 @@ def _shingle_string_sets(
     substrate; set sizes are order-independent so the distinct order
     never affects results)."""
 
-    def emit(cols, doc_id, toks):
-        ids, blk, sh = cols
-        ids.append(doc_id)
-        blk.append(hashlib.md5(" ".join(toks[:block_tokens]).encode()).hexdigest())
-        sh.append(list(dict.fromkeys(_shingles(toks, shingle_n))))
+    def emit(toks):
+        blk = hashlib.md5(" ".join(toks[:block_tokens]).encode()).hexdigest()
+        return [(blk, list(dict.fromkeys(_shingles(toks, shingle_n))))]
 
     return _featurize(
         df, text_col, id_col, ["blk string", "sh array<string>"], emit
@@ -382,10 +354,9 @@ def simhash_candidates(
     from pyspark.sql import Window as W
 
     # (1) min-id representative per signature; member→rep edges carry
-    # the exact-duplicate groups at hamming 0.  r12 (guide §2.4): the
-    # election is a MIN window over the signature instead of groupBy +
-    # re-join — one exchange, not two — and the distinct-signature
-    # frame is a filter of the same windowed frame.
+    # the exact-duplicate groups at hamming 0.  A MIN window elects it in
+    # one exchange, and the distinct-signature frame is a filter of the
+    # same windowed frame.
     sh = (
         _simhash_frame(df, text_col, id_col)
         .withColumn("__rep", F.min(id_col).over(W.partitionBy("sh")))
@@ -468,10 +439,8 @@ def ngram_jaccard_pairs(
     from pyspark.sql import Window as W
 
     docs = _shingle_string_sets(df, text_col, id_col, shingle_n, block_tokens)
-    # r12 (guide §2.4): rep election via a MIN window over (blk, __sk)
-    # instead of groupBy + re-join — one exchange, not two — and the
-    # representative frame becomes a FILTER of the same windowed frame
-    # instead of a third (left_semi) shuffle join.
+    # a MIN window over (blk, __sk) elects the reps in one exchange, and
+    # the representative frame is a filter of the same windowed frame
     docs = (
         docs.filter(F.size("sh") > 0)
         .withColumn(
@@ -679,6 +648,14 @@ def _cc_local_labels(edges: DataFrame, n_edges: int, schema) -> DataFrame | None
     return edges.sparkSession.createDataFrame(out, schema)
 
 
+def _release_checkpoint(frame: DataFrame) -> None:
+    """Free the blocks of a localCheckpoint()ed frame.  They belong to
+    the RDD under the frame's LogicalRDD, which DataFrame.unpersist()
+    does not reach, so without this each call leaves them persisted for
+    the life of the session."""
+    frame._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def connected_components(
     pairs: DataFrame, src: str = "doc1", dst: str = "doc2", max_iter: int = 20
 ) -> DataFrame:
@@ -748,9 +725,11 @@ def connected_components(
     # label locally, big ones take the loop below.
     n_edges = edges.count()
     if n_edges == 0:
-        return edges.sparkSession.createDataFrame([], schema)
-    local = _cc_local_labels(edges, n_edges, schema)
+        local = edges.sparkSession.createDataFrame([], schema)
+    else:
+        local = _cc_local_labels(edges, n_edges, schema)
     if local is not None:
+        _release_checkpoint(edges)
         return local
     labels = (
         edges.select(F.col("a").alias("node"))
@@ -773,11 +752,14 @@ def connected_components(
         neighbor = edges.join(labels, edges.b == labels.node).select(
             F.col("a").alias("node"), "cluster"
         )
-        labels = (
+        nxt = (
             neighbor.unionByName(labels)
             .groupBy("node")
             .agg(F.min("cluster").alias("cluster"))
         ).localCheckpoint(eager=True)  # cut lineage per round, execute once
+        if rnd:
+            _release_checkpoint(labels)  # the previous round's checkpoint
+        labels = nxt
         probe = labels.agg(
             F.sum(F.col("cluster").cast("decimal(38,0)")).alias("s"),
             F.count(F.lit(1)).alias("n"),
@@ -794,6 +776,8 @@ def connected_components(
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    if max_iter > 0:  # checkpointed labels no longer read the edges
+        _release_checkpoint(edges)
     return labels
 
 

@@ -36,8 +36,11 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(F.trim(col), r"\s+"), lambda x: x != "")
 
 
-# tokens() of a `text` column in DuckDB, for the registry oracles
-TOKENS_SQL = r"list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')"
+# tokens() of a `text` column in DuckDB, for the registry oracles.  The
+# class is Java's \s spelled out: RE2's \s lacks the vertical tab.
+TOKENS_SQL = (
+    r"list_filter(regexp_split_to_array(trim(text), '[\t\n\v\f\r ]+'), x -> x <> '')"
+)
 
 
 def token_count(col: Column) -> Column:

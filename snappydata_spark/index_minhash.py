@@ -105,7 +105,7 @@ def _write_rep_bands(sn, idx_table: str, rep_table: str, id_col: str) -> None:
     REPRESENTATIVE (dedup._elect_reps).  Paid at build/maintenance,
     never at serve time."""
     banded = sn.table(idx_table)
-    rep_bands = _rep_bands(banded, _elect_reps(banded, id_col), id_col)
+    rep_bands = _rep_bands(_elect_reps(banded, id_col), id_col)
     sn.create_table(
         rep_table,
         options={"key_columns": f"{id_col},band"},
@@ -219,7 +219,7 @@ def near_dup_lookup_reps(
         # (false negatives at the ingestion gate).  Re-elect the min
         # VISIBLE member as rep inline instead.
         banded = _visible_bands(sn, info)
-        rep_bands = _rep_bands(banded, _elect_reps(banded, id_col), id_col)
+        rep_bands = _rep_bands(_elect_reps(banded, id_col), id_col)
     pb = _index_bands(info, probe, text_col).select(
         F.col(id_col).alias("probe_id"), "band", "band_hash"
     )

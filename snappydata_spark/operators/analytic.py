@@ -352,9 +352,9 @@ def setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "explode_tokens",
-    oracle="""
+    oracle=f"""
 SELECT token, COUNT(*) AS cnt
-FROM (SELECT UNNEST(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '')) AS token
+FROM (SELECT UNNEST({T.TOKENS_SQL}) AS token
       FROM documents)
 GROUP BY token
 """,

@@ -52,9 +52,9 @@ def setop_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lateral_posexplode",
-    oracle="""
+    oracle=f"""
 SELECT doc_id, x - 1 AS pos, t[x] AS token
-FROM (SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '') AS t
+FROM (SELECT doc_id, {T.TOKENS_SQL} AS t
       FROM documents WHERE doc_id < 20),
      UNNEST(range(1, len(t) + 1)) AS u(x)
 """,

@@ -169,7 +169,9 @@ def test_exact_dup_groups_emit_linear_edges(spark):
     """A k-copy verbatim-duplicate group must emit k-1 member->rep edges,
     never k(k-1)/2 pairs (the r6 sf10 quadratic-output defect), for BOTH
     minhash and simhash — and the collapsed edge set must produce the
-    same connected components as the full pair list would."""
+    same connected components as the full pair list would.  The group
+    spans several Arrow batches, so the featurizer's reuse of a text's
+    features carries across batch boundaries."""
     k = 40
     page = "the same mirrored page body with plenty of tokens " * 3
     other = "a different near dup of the mirrored page body " * 3
@@ -180,8 +182,14 @@ def test_exact_dup_groups_emit_linear_edges(spark):
     )
     df = spark.createDataFrame(rows)
 
-    mh = dedup.minhash_lsh_candidates(df).collect()
-    sh = dedup.simhash_candidates(df).collect()
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(batch_conf)
+    spark.conf.set(batch_conf, "7")
+    try:
+        mh = dedup.minhash_lsh_candidates(df).collect()
+        sh = dedup.simhash_candidates(df).collect()
+    finally:
+        spark.conf.set(batch_conf, old_batch)
     for name, edges in (("minhash", mh), ("simhash", sh)):
         # linear bound: k-copy group -> k-1 edges; 3-copy group -> 2; at
         # most a handful of rep-rep pairs (4 distinct signatures max)
@@ -202,6 +210,26 @@ def test_exact_dup_groups_emit_linear_edges(spark):
         assert clusters[m] == 0
     assert clusters[101] == 100 and clusters[102] == 100
     assert 500 not in clusters  # unrelated doc pairs with nothing
+
+
+def test_minhash_candidates_featurize_once_without_persist(spark):
+    """The candidate stage caches nothing and runs one featurizer pass:
+    after the action, the executed plan holds no in-memory relation and
+    exactly one MapInPandas that is not behind a reused exchange (a
+    ReusedExchange node prints no subtree)."""
+    rows = [(i, f"mirror {i % 5} of a page body with enough tokens") for i in range(30)]
+    rows += [(100 + i, f"page {i} about storage engines and joins") for i in range(10)]
+    cand = dedup.minhash_lsh_candidates(
+        spark.createDataFrame(rows, "doc_id long, text string")
+    )
+    edges = {(r.doc1, r.doc2) for r in cand.collect()}
+    assert {(m % 5, m) for m in range(5, 30)} <= edges
+    plan = cand._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan
+    tree = plan.treeString()
+    assert "InMemoryRelation" not in tree and "InMemoryTableScan" not in tree
+    assert tree.count("MapInPandas") == 1, tree
 
 
 def test_embedding_block_sub_cap_bounds_task_matrix(spark):
@@ -386,6 +414,27 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
     dist = _labels(dedup.connected_components(pairs))
     assert local == dist
     assert {(0, 0), (9, 0), (102, 100), (201, 200), (300, 250), (250, 250)} <= local
+
+
+def test_connected_components_release_edge_checkpoint(spark, monkeypatch):
+    """No exit leaves the checkpointed edge set persisted: the local and
+    empty exits hold no RDD afterwards, and the distributed loop holds
+    only the checkpoint of the labels it returns."""
+    sc = spark.sparkContext
+
+    def new_persisted(before):
+        return set(sc._jsc.getPersistentRDDs().keys()) - before
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "doc1 long, doc2 long")
+    expect = {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    assert _labels(dedup.connected_components(pairs)) == expect
+    assert new_persisted(before) == set()
+    assert dedup.connected_components(pairs.filter("doc1 < 0")).count() == 0
+    assert new_persisted(before) == set()
+    monkeypatch.setattr(dedup, "CC_COLLECT_CAP", 0)
+    assert _labels(dedup.connected_components(pairs)) == expect
+    assert len(new_persisted(before)) == 1
 
 
 def test_connected_components_cap_falls_back(spark, monkeypatch):

@@ -37,6 +37,44 @@ def test_minhash_stable_under_duplication(spark):
     assert digests[1] == digests[2]
 
 
+def test_band_rows_match_per_hash_reference(spark):
+    """_band_rows' one-pass numpy signature against the per-hash
+    definition in plain Python integers."""
+    import hashlib
+
+    text = "the quick brown fox jumps over the lazy dog and then some more"
+    toks = text.split()
+    shingles = [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
+    hs = [int(hashlib.md5(("mh~" + s).encode()).hexdigest()[:8], 16) for s in shingles]
+    sig = [
+        min((h * (2 * i + 1) + 12582917 * i + 1) % 2147483647 for h in hs)
+        for i in range(16)
+    ]
+
+    def md5(vals):
+        return hashlib.md5(",".join(str(v) for v in vals).encode()).hexdigest()
+
+    df = spark.createDataFrame([(1, text)], "id int, text string")
+    got = {
+        r.band: (r.band_hash, r.sig_digest)
+        for r in dedup._band_rows(df, "text", "id", 16, 4, 3).collect()
+    }
+    assert got == {b: (md5(sig[4 * b : 4 * b + 4]), md5(sig)) for b in range(4)}
+
+
+def test_tokenizers_split_on_every_java_whitespace(spark):
+    """Spark tokens(), the DuckDB oracle's TOKENS_SQL and the featurizer's
+    _ascii_tokens split alike on vertical tab, form feed and CR."""
+    import duckdb
+
+    text = "a\x0bb\x0cc\rd e\tf\ng \x0b"
+    spark_toks = _one(spark, text).select(T.tokens(F.col("text")).alias("t")).first().t
+    duck_toks = duckdb.execute(
+        f"SELECT {T.TOKENS_SQL} FROM (SELECT ?::VARCHAR AS text)", [text]
+    ).fetchone()[0]
+    assert spark_toks == duck_toks == dedup._ascii_tokens(text) == list("abcdefg")
+
+
 def test_simhash_near_for_near_docs(spark):
     base = "the quick brown fox jumps over the lazy dog again and again"
     df = spark.createDataFrame([(1, base), (2, base + " zzz")], "id int, text string")
