@@ -120,8 +120,15 @@ def _visible_bands(sn, info) -> DataFrame:
     rows an RLS policy or grant hides from the base read path would leak
     their existence through the side door.  The semi-join is skipped
     when no RLS/grant can filter the base (it would re-scan the base id
-    projection per probe for nothing)."""
-    banded = sn.table(info["index_table"])
+    projection per probe for nothing).
+
+    Every band row carries a hash (_band_rows declares band_hash NOT
+    NULL), but parquet reads the column back as nullable.  Stating the
+    invariant here gives every consumer the same scan: otherwise the
+    bucket self-join's inferred isnotnull(band_hash) sinks below
+    _elect_reps' exchange on that side only, and the member edges plan
+    a second exchange and a second scan of the band table."""
+    banded = sn.table(info["index_table"]).filter(F.col("band_hash").isNotNull())
     if not sn._read_is_filtered(info["table"]):
         return banded
     id_col = info["id_col"]

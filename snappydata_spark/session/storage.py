@@ -3,6 +3,7 @@ copy-on-write."""
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -12,7 +13,7 @@ import time
 import uuid
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StructType
 
 from snappydata_spark.catalog import TableMeta, write_json_atomic
@@ -34,6 +35,58 @@ class _BucketFiles(list):
     def __init__(self, files: list[str], buckets: set[int]):
         super().__init__(files)
         self.buckets = frozenset(buckets)
+
+
+def _bucket_id(cols: list, buckets: int) -> Column:
+    """The bucket a row of a PARTITION_BY + BUCKETS table belongs to:
+    ``pmod(murmur3_hash(cols), buckets)``, the expression Spark's
+    bucketed writer assigns files with
+    (HashPartitioning.partitionIdExpression).  The staging writer
+    shuffles on it and bucket pruning computes it from source keys."""
+    return F.pmod(F.hash(*cols), F.lit(buckets))
+
+
+def _murmur3_int(v: int) -> int:
+    """Spark's hash() of one INT value (Murmur3_x86_32.hashInt, seed
+    42), as a signed 32-bit int."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593 & m
+    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & m
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@functools.lru_cache(maxsize=64)
+def _bucket_labels(buckets: int, n: int) -> tuple[int, ...]:
+    """One INT label per bucket id such that a hash exchange of `n`
+    partitions sends bucket b to partition b mod n: the smallest v with
+    pmod(hash(v), n) == b mod n.  Bucket ids themselves hash unevenly
+    (ids 0-7 over 4 partitions put 4 buckets in one partition and none
+    in another)."""
+    want = min(buckets, n)
+    first: dict[int, int] = {}
+    v = 0
+    while len(first) < want:
+        p = _murmur3_int(v) % n
+        if p < want:
+            first.setdefault(p, v)
+        v += 1
+    return tuple(first[b % n] for b in range(buckets))
+
+
+def _bucket_shuffle_key(cols: list, buckets: int, n: int) -> Column:
+    """The staging writer's shuffle key for an `n`-partition exchange:
+    a function of the bucket id, so every row of a bucket lands in one
+    partition, that spreads the buckets evenly (b → b mod n)."""
+    labels = F.array(*[F.lit(v) for v in _bucket_labels(buckets, n)])
+    return labels[_bucket_id(cols, buckets)]
 
 
 class StorageMixin:
@@ -66,6 +119,7 @@ class StorageMixin:
         """The staging writer: write `df` as new files in the table's
         data dir, under fresh names, and return those names.  Nothing is
         visible until the caller commits them through _manifest_commit.
+        A failed write leaves no staging directory or staging table.
 
         PARTITION_BY + BUCKETS tables stage through Spark's bucketed
         writer (bucketBy needs saveAsTable: a throwaway external table
@@ -74,9 +128,22 @@ class StorageMixin:
         entry (_catalog_entry) and bucket pruning
         (_bucket_affected_files) read.  Colocated joins then need no
         exchange (the CollapseCollocatedPlans / COLOCATE_WITH semantics
-        of the reference, SnappyStrategies.scala:768-826).  Other
-        tables with an index range-cluster the rows into `n_files`
-        files when `n_files` is given (rewrites and mutations)."""
+        of the reference, SnappyStrategies.scala:768-826).
+
+        The rows are shuffled on their bucket id (_bucket_shuffle_key),
+        with no fixed partition count.  Every row of a bucket lands in
+        one task, so each touched bucket gets exactly one file, and AQE
+        coalesces the shuffle to the tasks the data needs: a keyed
+        mutation that touches two buckets writes from one or two tasks,
+        not one per declared bucket, while a large write keeps its
+        buckets spread evenly over the exchange's partitions.  (A
+        shuffle on the key columns splits a bucket across tasks unless
+        the partition count divides the bucket count, and over the
+        table's own bucketed scan, as in COMPACT, Spark plans it away.)
+
+        Other tables with an index range-cluster the rows into
+        `n_files` files when `n_files` is given (rewrites and
+        mutations)."""
         # COMPRESSION option (ExternalStoreUtils.scala:88-105; batch codecs
         # CompressionCodecId.scala LZ4/SNAPPY) → parquet codec per table
         codec = str(meta.options.get("compression", "snappy")).lower()
@@ -85,37 +152,48 @@ class StorageMixin:
         )
         stamp = uuid.uuid4().hex[:8]
         tmp = os.path.join(self.catalog.table_path(meta.name), f"{tag}-{stamp}")
-        if self._is_bucketed(meta):
-            staging = f"snappy_stage_{stamp}_{uuid.uuid4().hex[:8]}"
-            (
-                df.repartition(meta.buckets, *meta.partition_by)
-                .write.format("parquet")
-                .option("compression", codec)
-                .options(**self._bloom_opts(meta))
-                .bucketBy(meta.buckets, *meta.partition_by)
-                .sortBy(*meta.partition_by)
-                .option("path", tmp)
-                .saveAsTable(staging)
-            )
-            self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        else:
-            cols = self._index_cols(meta.name) if n_files else None
-            if cols:
-                # indexed tables keep their clustered layout through
-                # mutations: footer min/max skipping doesn't decay
-                df = self._cluster_for_index(df, cols, n_files)
-            df.write.mode("overwrite").option("compression", codec).options(
-                **self._bloom_opts(meta)
-            ).parquet(tmp)
-        data = self.catalog.data_path(meta.name)
-        os.makedirs(data, exist_ok=True)
-        names = []
-        for f in sorted(os.listdir(tmp)):
-            if f.endswith(".parquet"):
-                os.rename(os.path.join(tmp, f), os.path.join(data, f"{tag}-{stamp}-{f}"))
-                names.append(f"{tag}-{stamp}-{f}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        return names
+        staging = None
+        try:
+            if self._is_bucketed(meta):
+                staging = f"snappy_stage_{stamp}_{uuid.uuid4().hex[:8]}"
+                conf = self.spark._jsparkSession.sessionState().conf()
+                # the exchange's partition count before AQE coalesces it
+                key = _bucket_shuffle_key(
+                    meta.partition_by, meta.buckets, conf.numShufflePartitions()
+                )
+                (
+                    df.repartition(key)
+                    .write.format("parquet")
+                    .option("compression", codec)
+                    .options(**self._bloom_opts(meta))
+                    .bucketBy(meta.buckets, *meta.partition_by)
+                    .sortBy(*meta.partition_by)
+                    .option("path", tmp)
+                    .saveAsTable(staging)
+                )
+            else:
+                cols = self._index_cols(meta.name) if n_files else None
+                if cols:
+                    # indexed tables keep their clustered layout through
+                    # mutations: footer min/max skipping doesn't decay
+                    df = self._cluster_for_index(df, cols, n_files)
+                df.write.mode("overwrite").option("compression", codec).options(
+                    **self._bloom_opts(meta)
+                ).parquet(tmp)
+            data = self.catalog.data_path(meta.name)
+            os.makedirs(data, exist_ok=True)
+            names = []
+            for f in sorted(os.listdir(tmp)):
+                if f.endswith(".parquet"):
+                    os.rename(
+                        os.path.join(tmp, f), os.path.join(data, f"{tag}-{stamp}-{f}")
+                    )
+                    names.append(f"{tag}-{stamp}-{f}")
+            return names
+        finally:
+            if staging is not None:
+                self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
+            shutil.rmtree(tmp, ignore_errors=True)
 
     def _write(self, df: DataFrame, meta: TableMeta, mode: str) -> None:
         """Create (mode 'overwrite') or append: stage, then one manifest
@@ -608,10 +686,8 @@ class StorageMixin:
     ) -> list[str] | None:
         """Bucket-function file pruning for key-based mutations on bucketed
         tables: the affected bucket ids are computed from the SOURCE keys
-        alone — ``pmod(murmur3_hash(bucket_cols), n)``, the exact
-        expression Spark's bucketed writer assigns files with
-        (HashPartitioning.partitionIdExpression) — so NO scan of the
-        target runs at all; candidate files are the manifest's live
+        alone with _bucket_id, the expression the files were written
+        by, so NO scan of the target runs at all; candidate files are the manifest's live
         files, filtered by the bucket id encoded in each file name.  The
         reference's analogue is routing a keyed mutation to its owning
         bucket via the store's hash ring (PartitionedRegion put routing;
@@ -637,9 +713,7 @@ class StorageMixin:
         exprs = [F.col(c).cast(types[c]) for c in bcols]
         ids = {
             r[0]
-            for r in source.select(
-                F.pmod(F.hash(*exprs), F.lit(meta.buckets)).alias("b")
-            )
+            for r in source.select(_bucket_id(exprs, meta.buckets).alias("b"))
             .distinct()
             .collect()
         }

@@ -41,6 +41,22 @@ def test_pairs_match_direct_pipeline(indexed, corpus):
     assert (1, 2) in from_index
 
 
+def test_stored_collapse_reads_one_band_exchange(indexed):
+    """The member edges and both sides of the bucket self-join share
+    one band_hash exchange over one scan of the stored band table, as
+    in the direct pipeline (the executed plan, after the action)."""
+    pairs = index_minhash.candidate_pairs(indexed, "mh_idx")
+    assert (1, 2) in {(r.doc1, r.doc2) for r in pairs.collect()}
+    plan = pairs._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan
+    lines = plan.treeString().splitlines()
+    band = [ln for ln in lines if "Exchange hashpartitioning(band_hash" in ln]
+    assert sum("ReusedExchange" not in ln for ln in band) == 1, lines
+    assert sum("ReusedExchange" in ln for ln in band) == 2, lines
+    assert sum("FileScan parquet" in ln for ln in lines) == 1, lines
+
+
 def test_put_rebands_only_touched_docs(indexed, spark):
     """PUT of a near-dup doc must surface a new candidate pair; the
     band rows of untouched docs must be byte-identical afterwards."""

@@ -36,7 +36,8 @@ replaying the log serially reproduces the unique correct final state.
 Every schedule runs twice: on an unbucketed keyed table and on a
 bucketed one (PARTITION_BY k, 4 BUCKETS).  Both commit through the same
 hooked `_manifest_commit` and take the same claims, so one oracle serves
-both layouts.
+both layouts.  On the bucketed layout a schedule also ends by checking
+that every row of every live file hashes to the bucket in its file name.
 
 Usage:
     python tools/fuzz_mutations.py --schedules 200 --seed 1 \
@@ -49,6 +50,7 @@ import argparse
 import json
 import os
 import random
+import re
 import shutil
 import sys
 import tempfile
@@ -251,6 +253,38 @@ def _apply_model(model: dict[int, int], op: dict) -> None:
     # compact: no logical effect
 
 
+def _misplaced_rows(sn, name: str, opts: dict) -> list[tuple[str, int]]:
+    """(file, bucket id) for every live file of a bucketed table holding
+    a row that does not hash to the bucket in its file name — the
+    invariant bucket pruning and colocated joins rely on.  Empty for a
+    table without buckets."""
+    from pyspark.sql import functions as F
+
+    if not opts.get("buckets"):
+        return []
+    data = sn.catalog.data_path(name)
+    files = sn._load_manifest(name)["files"]
+    if not files:
+        return []
+    rows = (
+        sn.spark.read.parquet(*[os.path.join(data, f) for f in files])
+        .select(
+            F.input_file_name().alias("f"),
+            F.expr(
+                f"pmod(hash({opts['partition_by']}), {opts['buckets']})"
+            ).alias("b"),
+        )
+        .distinct()
+        .collect()
+    )
+    return [
+        (os.path.basename(r.f), r.b)
+        for r in rows
+        if int(re.search(r"_(\d{5})\.", os.path.basename(r.f)).group(1))
+        != r.b
+    ]
+
+
 def run_schedule(
     spark,
     seed: int,
@@ -395,6 +429,15 @@ def _run_layout(
                 "value_diffs": repr(diff)[:400],
                 "commit_order": oplog.entries,
                 "ops": {i: by_id[i] for i in oplog.entries},
+            }
+        misplaced = _misplaced_rows(boot, TABLE, LAYOUTS[layout])
+        if misplaced:
+            return {
+                "ok": False,
+                "seed": seed,
+                "mode": mode,
+                "layout": layout,
+                "reason": f"rows outside their file's bucket: {misplaced[:10]}",
             }
         return {
             "ok": True,
