@@ -8,11 +8,14 @@ everything after it is Catalyst.  Exact dedup is a fingerprint groupBy
 in operators/dedup_ops.py.
 
 Scale design: every family is map-side signature computation followed by
-exactly ONE shuffle on a blocking key (fingerprint / LSH band / SimHash
-byte-band / prefix block / label block).  No quadratic joins over the full
-corpus: candidate pairs are generated per-block and blocks are bounded.
-That is the shape that survives 100 TB — the all-pairs work happens only
-within hash buckets.
+shuffles on blocking keys (fingerprint / LSH band / SimHash signature and
+byte-band / prefix block / shingle key / label block).  No quadratic joins
+over the full corpus: candidate pairs are generated per-block and blocks
+are bounded.  That is the shape that survives 100 TB — the all-pairs work
+happens only within hash buckets.  No stage persists: the branches of a
+stage (rep election, member edges, both join sides) read one exchange
+above the featurizer, which Spark runs once and reuses, so a long-lived
+session is left holding no cached frame.
 """
 
 from __future__ import annotations
@@ -311,23 +314,26 @@ def _shingle_hash_sets(
             return []
         return [(sorted({_md5_int(s, 15) for s in _shingles(toks, shingle_n)}),)]
 
-    return _featurize(df, text_col, id_col, ["sh array<long>"], emit)
+    return _featurize(df, text_col, id_col, ["sh array<long> not null"], emit)
 
 
 def _shingle_string_sets(
     df: DataFrame, text_col: str, id_col: str, shingle_n: int, block_tokens: int
 ) -> DataFrame:
-    """(id, blk, sh array<string>): first-occurrence-distinct shingle
-    strings + the md5 prefix-fingerprint blocking key (the ngram-Jaccard
-    substrate; set sizes are order-independent so the distinct order
-    never affects results)."""
+    """(id, blk, sh array<string>): sorted distinct shingle strings +
+    the md5 prefix-fingerprint blocking key (the ngram-Jaccard
+    substrate).  Sorting makes equal sets equal arrays; set sizes, the
+    only thing Jaccard reads, do not depend on the order.  Docs with no
+    shingle are dropped."""
 
     def emit(toks):
+        if len(toks) < shingle_n:
+            return []
         blk = hashlib.md5(" ".join(toks[:block_tokens]).encode()).hexdigest()
-        return [(blk, list(dict.fromkeys(_shingles(toks, shingle_n))))]
+        return [(blk, sorted(set(_shingles(toks, shingle_n))))]
 
     return _featurize(
-        df, text_col, id_col, ["blk string", "sh array<string>"], emit
+        df, text_col, id_col, ["blk string not null", "sh array<string>"], emit
     )
 
 
@@ -355,12 +361,15 @@ def simhash_candidates(
 
     # (1) min-id representative per signature; member→rep edges carry
     # the exact-duplicate groups at hamming 0.  A MIN window elects it in
-    # one exchange, and the distinct-signature frame is a filter of the
-    # same windowed frame.
+    # one exchange on sh, and the distinct-signature frame is a filter of
+    # the same windowed frame, so every branch plans that exchange and
+    # Spark runs it, and the featurizer below it, once.  The no-op
+    # isnotnull(sh) is the band join's inferred filter, stated on every
+    # branch so it does not sink below the exchange on one side only.
     sh = (
         _simhash_frame(df, text_col, id_col)
+        .filter(F.col("sh").isNotNull())
         .withColumn("__rep", F.min(id_col).over(W.partitionBy("sh")))
-        .persist()
     )
     groups = sh.filter(F.col(id_col) == F.col("__rep")).select("sh", "__rep")
     member_edges = (
@@ -426,8 +435,8 @@ def ngram_jaccard_pairs(
     shingle sets only within a block.
 
     Exact-dup collapse (the collapse_banded_pairs discipline): documents
-    with IDENTICAL shingle sets (md5 fingerprint of the sorted set) group
-    to a min-id representative — one member→rep edge each at jaccard 1.0
+    with IDENTICAL shingle sets (equal sorted arrays) group to a min-id
+    representative — one member→rep edge each at jaccard 1.0
     — and only representatives enter the pairwise block join.  Jaccard
     depends only on the sets, so a member's similarity to any third doc
     EQUALS its rep's: the collapsed edge set's transitive closure equals
@@ -438,18 +447,17 @@ def ngram_jaccard_pairs(
     passed the threshold before)."""
     from pyspark.sql import Window as W
 
-    docs = _shingle_string_sets(df, text_col, id_col, shingle_n, block_tokens)
-    # a MIN window over (blk, __sk) elects the reps in one exchange, and
-    # the representative frame is a filter of the same windowed frame
+    # one exchange on blk serves the whole stage: a MIN window over
+    # (blk, sh) elects the reps, and the rep frame is a filter of the
+    # same windowed frame, already clustered for the block self-join.
+    # Every branch reads id, blk and sh, so each plans the same exchange
+    # and Spark runs it, and the featurizer below it, once.  blk is NOT
+    # NULL so the join's inferred isnotnull(blk) cannot sink below the
+    # exchange on the join side only.
     docs = (
-        docs.filter(F.size("sh") > 0)
-        .withColumn(
-            "__sk", F.md5(F.array_join(F.array_sort("sh"), "\x01"))
-        )
-        .withColumn(
-            "__rep", F.min(id_col).over(W.partitionBy("blk", "__sk"))
-        )
-        .persist()  # member edges + both join sides read one shingle pass
+        _shingle_string_sets(df, text_col, id_col, shingle_n, block_tokens)
+        .repartition("blk")
+        .withColumn("__rep", F.min(id_col).over(W.partitionBy("blk", "sh")))
     )
     member_edges = (
         docs.filter(F.col(id_col) != F.col("__rep"))
@@ -833,12 +841,25 @@ def containment_pairs(
        fraction of the shuffle width.  Within-doc 60-bit collisions
        (P ≈ |sh|²/2⁶¹) are removed by array_distinct on both engines.
 
-    One shuffle on the shingle key (+ the window df count, same key) +
-    one on the pair."""
+    Shuffles: the featurizer's own on the text hash; one on the doc id
+    that every reader of the shingle sets shares, which also clusters
+    both verify sides; one per join side on the shingle key (the index
+    side's also serves the df window); and the candidate pairs' own for
+    the distinct and the two verify joins (AQE drops those it can
+    replace with a broadcast)."""
     from pyspark.sql import Window as W
 
-    docs = _shingle_hash_sets(df, text_col, id_col, shingle_n)
-    docs = docs.persist()  # keys + both join sides read one shingle pass
+    # one exchange on the doc id feeds every reader of the shingle sets
+    # (probe keys, index keys, both verify sides), so Spark runs it, and
+    # the featurizer below it, once.  The no-op filter states those
+    # readers' inferred filters (the joins' isnotnull(id), the explode's
+    # size(sh) > 0) on every branch, so none sinks below the exchange on
+    # one side only; sh is NOT NULL for the explode's isnotnull(sh).
+    docs = (
+        _shingle_hash_sets(df, text_col, id_col, shingle_n)
+        .filter(F.col(id_col).isNotNull() & (F.size("sh") > 0))
+        .repartition(id_col)
+    )
     probe = docs.select(
         F.col(id_col),
         F.size("sh").alias("sz"),

@@ -212,24 +212,49 @@ def test_exact_dup_groups_emit_linear_edges(spark):
     assert 500 not in clusters  # unrelated doc pairs with nothing
 
 
-def test_minhash_candidates_featurize_once_without_persist(spark):
-    """The candidate stage caches nothing and runs one featurizer pass:
-    after the action, the executed plan holds no in-memory relation and
-    exactly one MapInPandas that is not behind a reused exchange (a
-    ReusedExchange node prints no subtree)."""
+_EDGES = [("doc1", "bigint", True), ("doc2", "bigint", True)]
+
+
+@pytest.mark.parametrize(
+    "stage, schema",
+    [
+        (dedup.minhash_lsh_candidates, _EDGES),
+        (dedup.simhash_candidates, _EDGES + [("hamming", "int", True)]),
+        (dedup.ngram_jaccard_pairs, _EDGES + [("jaccard", "double", True)]),
+        (
+            dedup.containment_pairs,
+            [("src", "bigint", True), ("dst", "bigint", True),
+             ("containment", "double", True)],
+        ),
+    ],
+    ids=["minhash", "simhash", "ngram", "containment"],
+)
+def test_near_dup_stage_featurizes_once_without_persist(spark, stage, schema):
+    """Each near-dup stage caches nothing and runs one featurizer pass:
+    after the action no new RDD is persisted, the final plan holds no
+    in-memory relation and exactly one MapInPandas that is not behind a
+    reused exchange (a ReusedExchange node prints no subtree).  The only
+    fixed-count shuffle is the one that spreads that pass over the
+    cores.  The output schema, nullability included, is pinned."""
     rows = [(i, f"mirror {i % 5} of a page body with enough tokens") for i in range(30)]
     rows += [(100 + i, f"page {i} about storage engines and joins") for i in range(10)]
-    cand = dedup.minhash_lsh_candidates(
-        spark.createDataFrame(rows, "doc_id long, text string")
-    )
-    edges = {(r.doc1, r.doc2) for r in cand.collect()}
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    out = stage(spark.createDataFrame(rows, "doc_id long, text string"))
+    edges = {(r[0], r[1]) for r in out.collect()}
+    # every copy of a mirrored text is linked to its min-id copy
     assert {(m % 5, m) for m in range(5, 30)} <= edges
-    plan = cand._jdf.queryExecution().executedPlan()
+    assert set(sc._jsc.getPersistentRDDs().keys()) == before
+    plan = out._jdf.queryExecution().executedPlan()
     if plan.nodeName() == "AdaptiveSparkPlan":
         plan = plan.executedPlan()  # the final plan
     tree = plan.treeString()
     assert "InMemoryRelation" not in tree and "InMemoryTableScan" not in tree
     assert tree.count("MapInPandas") == 1, tree
+    assert tree.count("REPARTITION_BY_NUM") == 1, tree
+    assert [
+        (f.name, f.dataType.simpleString(), f.nullable) for f in out.schema
+    ] == schema
 
 
 def test_embedding_block_sub_cap_bounds_task_matrix(spark):

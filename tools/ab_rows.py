@@ -1,12 +1,12 @@
-"""Quiet-window A/B of individual bench rows between two checkouts
-(r12 verdict item 2: re-measure dedup_minhash_lsh /
-sim_ivf_topk_vectorized at 32c, HEAD vs the r11 shapes).
+"""Cold and warm timings of individual registry rows from one checkout.
 
-Runs bench.py's exact warm methodology (1 warmup + REPS timed .count()
-runs, median, clearCache between queries) for the named queries against
-the repo rooted at `repo_dir`, printing one JSON line.  Interleave
-invocations of this script across checkouts (A B A B) so both sides see
-the same weather.
+For each named query, the first `.count()` in the process is reported
+as `cold` (rows that persist a frame are judged on it: their warm reps
+re-read the cached frame), then REPS timed warm runs give `median`.
+clearCache runs between queries.  Prints one JSON line.  Interleave
+invocations across checkouts (A B A B) so both sides see the same
+weather; keep the query order the same on both sides, since only the
+first row pays the Python workers' start-up.
 
 Usage: python tools/ab_rows.py <repo_dir> <q1,q2,...> [sf_dir]
 """
@@ -21,13 +21,23 @@ import time
 
 repo = os.path.abspath(sys.argv[1])
 names = sys.argv[2].split(",")
-SF_DIR = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
+SF_DIR = os.path.abspath(sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1")
 REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5")))
 
 sys.path.insert(0, repo)
+# Python workers import the package from the JVM's working directory,
+# which comes before PYTHONPATH: start Spark from `repo` so that they
+# run the same checkout as this process
+os.chdir(repo)
 
 from snappydata_spark import get_spark  # noqa: E402
 from snappydata_spark.operators import QUERIES  # noqa: E402
+
+
+def _timed(fn, spark) -> float:
+    t0 = time.time()
+    fn(spark, SF_DIR).count()
+    return round(time.time() - t0, 3)
 
 
 def main():
@@ -36,13 +46,10 @@ def main():
     out = {}
     for name in names:
         fn = QUERIES[name]
-        fn(spark, SF_DIR).count()  # warmup
-        runs = []
-        for _ in range(REPS):
-            t0 = time.time()
-            fn(spark, SF_DIR).count()
-            runs.append(round(time.time() - t0, 3))
+        cold = _timed(fn, spark)
+        runs = [_timed(fn, spark) for _ in range(REPS)]
         out[name] = {
+            "cold": cold,
             "median": round(statistics.median(runs), 3),
             "runs": runs,
             "load1": round(os.getloadavg()[0], 2),
