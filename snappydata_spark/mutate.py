@@ -10,10 +10,14 @@ trick we do NOT port.  Our engine expresses the same *semantics* as pure
 DataFrame rewrites (usable standalone and by the CDC sink), and applies them
 to managed tables by copy-on-write parquet rewrite + atomic directory swap.
 
-Scale note: these rewrites are shuffle-on-key joins.  At 100 TB the target
-side stays fully distributed (no collect); with the managed table bucketed
-on the key columns the join shuffles only the (small) source side, and the
-rewrite only rewrites matched buckets.
+Scale note: these rewrites are joins on the key columns.  At 100 TB the
+target side stays fully distributed (no collect of its rows).  With the
+managed table bucketed on the key columns, the session rewrites only the
+buckets a mutation can touch, and finds them without a job over the
+target: a keyed write hashes the source's keys (a collect of small ints,
+no Spark job over an inline VALUES batch), and a predicate that fixes
+the bucket column takes Spark's planned bucket set.  The anti join's
+source side is not de-duplicated first; a small one is broadcast.
 """
 
 from __future__ import annotations
@@ -24,10 +28,9 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 def _anti_on_keys(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
     """target rows whose key tuple does NOT appear in source, with
     null-safe key equality (a NULL key is a matchable value, as in the
-    reference's store PK semantics)."""
-    marked = source.select(
-        *[F.col(k).alias(f"__src_{k}") for k in keys]
-    ).distinct()
+    reference's store PK semantics).  An anti join's output does not
+    depend on duplicate source keys, so they are not removed first."""
+    marked = source.select(*[F.col(k).alias(f"__src_{k}") for k in keys])
     cond = None
     for k in keys:
         c = target[k].eqNullSafe(marked[f"__src_{k}"])

@@ -6,11 +6,18 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
 
 from snappydata_spark import mutate
 from snappydata_spark.catalog import TableMeta
 from snappydata_spark.session.locks import _serialized
+from snappydata_spark.session.storage import _observe_hits
+
+
+# logical operators whose output rows can differ between two evaluations
+# of the same plan
+_UNSTABLE_NODES = {"GlobalLimit", "LocalLimit", "Offset", "Tail", "Sample"}
 
 
 class DMLMixin:
@@ -206,6 +213,29 @@ class DMLMixin:
             )
         except Exception:  # noqa: BLE001 — audit must never break writes
             pass
+
+    def _pin_source(self, df: DataFrame) -> DataFrame:
+        """A keyed mutation's source, as every evaluation in the
+        statement will read it: its bucket ids or claim tokens, its anti
+        join and its written rows.  These evaluations are planned in
+        different shapes, and a source such as ``t.limit(5)`` picks
+        different rows in each, so a source whose optimized plan holds a
+        limit, a sample or a nondeterministic expression is persisted
+        until the statement ends (released with the identity pins).
+        Other sources, inline VALUES batches among them, read the same
+        rows every time and are used as they are."""
+        if df.storageLevel != StorageLevel.NONE:
+            return df  # already pinned (a transaction's staged source)
+        stack = [df._jdf.queryExecution().optimizedPlan()]
+        while stack:
+            node = stack.pop()
+            if not node.deterministic() or node.nodeName() in _UNSTABLE_NODES:
+                pinned = df.persist()
+                self._identity_pins.append(pinned)
+                return pinned
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        return df
 
     def _release_identity_pins(self) -> None:
         for p in self._identity_pins:
@@ -505,7 +535,7 @@ class DMLMixin:
         self._check_write_priv(name, "insert")
         meta = self.catalog.load_meta(name.lower())
         try:
-            df = self._assign_identities(meta, df)
+            df = self._pin_source(self._assign_identities(meta, df))
             self._validate_checks(meta, df)
             keys = meta.key_columns or meta.partition_by
             if not keys:
@@ -518,8 +548,10 @@ class DMLMixin:
             # duplicate keys within one batch conflate to the LAST occurrence
             # (CDC keep-last discipline) BEFORE any path — the pruned path
             # unions the source verbatim, so an unconflated batch would write
-            # two rows under one key
-            df = mutate.conflate_last(df, keys)
+            # two rows under one key.  Bucket ids and claim tokens read the
+            # raw batch: conflation keeps its key set, and the raw batch
+            # yields them without planning the conflating window
+            raw, df = df, mutate.conflate_last(df, keys)
             self._validate_uniques_incremental(meta, df, exclude_keys=keys)
             self._validate_fks(meta, df)
             target = self._mutation_target(name)
@@ -539,15 +571,15 @@ class DMLMixin:
                 self._assert_no_fk_orphans(
                     meta, mutate.put_into_df(target, df, keys)
                 )
-            files = self._bucket_affected_files(meta, df, keys)
+            files = self._bucket_affected_files(meta, raw, keys)
             if files is None:
-                files = self._affected_files(target, source=df, keys=keys)
+                files = self._affected_files(target, source=raw, keys=keys)
             # key tokens guard the empty-radius case: two concurrent PUTs
             # of the same NEW key touch zero common files but must still
             # serialize, or both would append and duplicate the key
-            self._scope_gate(meta, files, key_source=(df, keys))
+            self._scope_gate(meta, files, key_source=(raw, keys))
             touched = self._read_files(target.schema, files)
-            keep = mutate._anti_on_keys(touched, df, keys).select(*target.columns)
+            keep = mutate._anti_on_keys(touched, raw, keys).select(*target.columns)
             self._replace_files(
                 meta, files, keep.unionByName(df.select(*target.columns))
             )
@@ -561,11 +593,16 @@ class DMLMixin:
         Key columns are immutable under UPDATE (the reference rejects
         SET on a key column; change-of-key is a DELETE + PUT).
 
-        File-pruned: the predicate scan (parquet min/max pushdown prunes
-        row groups) finds the files containing matched rows; only those
-        are rewritten — the reference's ColumnDeltaEncoder writes deltas
-        per column batch (ColumnDelta.scala:16-75), this is the same
-        blast-radius contract at file granularity."""
+        File-pruned: only files that can hold a matched row are
+        rewritten — the reference's ColumnDeltaEncoder writes deltas per
+        column batch (ColumnDelta.scala:16-75), this is the same
+        blast-radius contract at file granularity.  On a bucketed table
+        whose predicate fixes the bucket column (``WHERE k IN (1, 2)``)
+        the files come from the planner's bucket set with no Spark job
+        (_planned_bucket_files); otherwise a predicate scan (parquet
+        min/max pushdown prunes row groups) finds the files containing
+        matched rows (_affected_files).  An UPDATE matching no row
+        commits nothing on either path."""
         self._check_write_priv(name, "update")
         meta = self.catalog.load_meta(name.lower())
         bad = [c for c in assignments if c.lower() in meta.key_columns]
@@ -607,7 +644,10 @@ class DMLMixin:
             assigned & set(fk["ref_columns"])
             for _, fk in self._referencing_fks(meta.name)
         )
-        files = self._affected_files(target, pred=where)
+        files = self._planned_bucket_files(meta, target, where)
+        planned = files is not None
+        if not planned:
+            files = self._affected_files(target, pred=where)
         if not files:
             return  # nothing matched: zero writes
         self._scope_gate(meta, files)
@@ -626,13 +666,22 @@ class DMLMixin:
         self._validate_checks(meta, updated)
         if fk_hit:
             self._validate_fks(meta, updated)
-        self._replace_files(meta, files, updated)
+        hits = None
+        if planned:
+            # observed on a fresh frame: an observation keeps only the
+            # first action's count, and the validations ran their own
+            touched, hits = _observe_hits(touched, where)
+            updated = mutate.update_df(touched, where, assignments)
+        self._replace_files(meta, files, updated, hits)
 
     @_serialized
     def delete(self, name: str, where, alias: str | None = None) -> None:
         """DELETE FROM t WHERE ... — SnappySession.delete:2119.  File-pruned
-        like update(); the reference's analogue is the per-batch delete
-        bitmap (ColumnDeleteEncoder.scala:39)."""
+        like update(), through the planner's bucket set when the
+        predicate fixes the bucket column, else the predicate scan; a
+        DELETE matching no row commits nothing.  The reference's
+        analogue is the per-batch delete bitmap
+        (ColumnDeleteEncoder.scala:39)."""
         self._check_write_priv(name, "delete")
         meta = self.catalog.load_meta(name.lower())
         target = self._mutation_target(name)
@@ -644,14 +693,20 @@ class DMLMixin:
             # parent-side NO ACTION: the post-delete survivors must still
             # cover every child's non-null FK values
             self._assert_no_fk_orphans(meta, mutate.delete_df(target, where))
-        files = self._affected_files(target, pred=where)
+        files = self._planned_bucket_files(meta, target, where)
+        planned = files is not None
+        if not planned:
+            files = self._affected_files(target, pred=where)
         if not files:
             return
         self._scope_gate(meta, files)
         touched = self._read_files(target.schema, files)
         if alias:
             touched = touched.alias(alias)
-        self._replace_files(meta, files, mutate.delete_df(touched, where))
+        hits = None
+        if planned:
+            touched, hits = _observe_hits(touched, where)
+        self._replace_files(meta, files, mutate.delete_df(touched, where), hits)
 
     @_serialized
     def delete_from(self, name: str, df: DataFrame) -> None:
@@ -667,20 +722,24 @@ class DMLMixin:
         target = self._mutation_target(name)
         if target is None:
             return
-        if self._referencing_fks(meta.name):
-            self._assert_no_fk_orphans(
-                meta, mutate.delete_from_df(target, df, keys)
+        try:
+            df = self._pin_source(df)
+            if self._referencing_fks(meta.name):
+                self._assert_no_fk_orphans(
+                    meta, mutate.delete_from_df(target, df, keys)
+                )
+            files = self._bucket_affected_files(meta, df, keys)
+            if files is None:
+                files = self._affected_files(target, source=df, keys=keys)
+            if not files:
+                return
+            self._scope_gate(meta, files, key_source=(df, keys))
+            touched = self._read_files(target.schema, files)
+            self._replace_files(
+                meta, files, mutate._anti_on_keys(touched, df, keys).select(*target.columns)
             )
-        files = self._bucket_affected_files(meta, df, keys)
-        if files is None:
-            files = self._affected_files(target, source=df, keys=keys)
-        if not files:
-            return
-        self._scope_gate(meta, files, key_source=(df, keys))
-        touched = self._read_files(target.schema, files)
-        self._replace_files(
-            meta, files, mutate._anti_on_keys(touched, df, keys).select(*target.columns)
-        )
+        finally:
+            self._release_identity_pins()
 
     def _apply_column_list(self, name: str, src: DataFrame, cols: list[str]) -> DataFrame:
         """ANSI column-list DML (INSERT/PUT INTO t (a, b) ...): the

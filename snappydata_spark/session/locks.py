@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 
 from snappydata_spark.catalog import TableMeta
+from snappydata_spark.session.storage import _source_ids
 
 try:
     import fcntl as _fcntl
@@ -654,17 +655,11 @@ class LockingMixin:
         of the SAME key whose key is new to the table have EMPTY file
         radii — without a shared token both would append and duplicate
         the key.  Hashing source keys into a bounded token space makes
-        them intersect (false-positive collisions just serialize)."""
-        rows = (
-            source.select(
-                F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(buckets)).alias(
-                    "__t"
-                )
-            )
-            .distinct()
-            .collect()
-        )
-        return frozenset(f"key:{r[0]}" for r in rows)
+        them intersect (false-positive collisions just serialize).  The
+        hashes come from the raw source through the same bounded
+        collect as bucket ids (_source_ids)."""
+        expr = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(buckets))
+        return frozenset(f"key:{t}" for t in _source_ids(source, expr))
 
     def _run_exclusive(self, name: str, body):
         """Run `body()` under the exclusive table lock with in-flight

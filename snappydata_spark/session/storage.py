@@ -13,7 +13,7 @@ import time
 import uuid
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 from pyspark.sql.types import StructType
 
 from snappydata_spark.catalog import TableMeta, write_json_atomic
@@ -26,15 +26,57 @@ _CATALOG_ENTRIES: dict[str, tuple] = {}
 _CATALOG_LOCK = threading.Lock()
 
 
+# source rows above which a keyed mutation collects its bucket ids or
+# key-claim tokens through a distinct() aggregate instead of row by row
+KEY_COLLECT_CAP = 10_000
+
+
 class _BucketFiles(list):
     """A bucket-pruned file radius.  `buckets` are the bucket ids the
-    source keys hash to; they double as the mutation's key-claim tokens
-    (the same key always hashes to the same bucket), so claiming them
-    costs no second job over the source."""
+    mutation's keys hash to; they double as its key-claim tokens (the
+    same key always hashes to the same bucket), so claiming them costs
+    no second job over the source."""
 
     def __init__(self, files: list[str], buckets: set[int]):
         super().__init__(files)
         self.buckets = frozenset(buckets)
+
+
+def _source_ids(source: DataFrame, expr: Column) -> set[int]:
+    """The distinct values of the int expression `expr` over `source`,
+    computed by Spark so the driver never converts source rows.  Up to
+    KEY_COLLECT_CAP rows are collected as they are, with no aggregate:
+    over an inline VALUES batch that runs no Spark job at all, where a
+    distinct() runs its shuffle stages.  A larger source falls back to
+    the distinct() collect."""
+    ids = source.select(expr.alias("__id"))
+    rows = ids.limit(KEY_COLLECT_CAP + 1).collect()
+    if len(rows) > KEY_COLLECT_CAP:
+        rows = ids.distinct().collect()
+    return {r[0] for r in rows}
+
+
+def _observe_hits(df: DataFrame, pred) -> tuple[DataFrame, Observation]:
+    """`df` with an Observation that counts its rows matching `pred`.
+    The count rides the frame's first action (on a bucketed staged
+    write, no extra job); read it after that action with
+    _observed_hits."""
+    p = F.expr(pred) if isinstance(pred, str) else pred
+    hits = Observation()
+    observed = df.observe(hits, F.count_if(F.coalesce(p, F.lit(False))).alias("n"))
+    return observed, hits
+
+
+def _observed_hits(hits: Observation) -> int | None:
+    """The count `hits` observed, or None when it observed nothing (the
+    observed frame was planned away as empty).  Spark completes the
+    observation when the action ends; the JVM's getRowOrEmpty waits at
+    most 100 ms for it, where PySpark's `get` waits without bound and
+    fails on an empty row."""
+    row = hits._jo.getRowOrEmpty()
+    if row.isEmpty() or row.get().size() == 0:
+        return None
+    return row.get().getLong(0)
 
 
 def _bucket_id(cols: list, buckets: int) -> Column:
@@ -205,15 +247,13 @@ class StorageMixin:
         else:
             self._manifest_commit(meta.name, full=names, schema=df.schema)
 
-    # tombstoned files survive this many further manifest generations
-    # before physical deletion, so a reader that resolved the previous
-    # manifest finishes its scan on intact files (the snapshot-isolation
-    # contract the reference gets from its store transaction,
-    # SnapshotConnectionListener.scala; here: manifest pinning + grace GC)
     # a tombstoned file is physically unlinked only after this many younger
-    # generations exist — the isolation window for in-flight scans: a
-    # reader survives up to GRACE-1 concurrent mutations of the table it
-    # is scanning (not unbounded; see _managed_df).  vacuum() ignores it.
+    # manifest generations exist, so a reader that resolved an earlier
+    # manifest finishes its scan on intact files: it survives up to
+    # GRACE-1 concurrent mutations of the table it is scanning (not
+    # unbounded; see _managed_df).  The reference gets this snapshot
+    # isolation from its store transaction (SnapshotConnectionListener
+    # .scala); here it is manifest pinning + grace GC.  vacuum() ignores it.
     _TOMBSTONE_GRACE = 8
 
     def _manifest_path(self, name: str) -> str:
@@ -687,10 +727,12 @@ class StorageMixin:
         """Bucket-function file pruning for key-based mutations on bucketed
         tables: the affected bucket ids are computed from the SOURCE keys
         alone with _bucket_id, the expression the files were written
-        by, so NO scan of the target runs at all; candidate files are the manifest's live
-        files, filtered by the bucket id encoded in each file name.  The
-        reference's analogue is routing a keyed mutation to its owning
-        bucket via the store's hash ring (PartitionedRegion put routing;
+        by, so NO scan of the target runs at all.  `source` may be the
+        raw, unconflated batch: conflation keeps exactly its key set.
+        The ids come back through _source_ids, which over an inline
+        VALUES batch runs no Spark job.  The reference's analogue is
+        routing a keyed mutation to its owning bucket via the store's
+        hash ring (PartitionedRegion put routing;
         ColumnTableBulkOps.scala:46-120).
 
         Returns the (superset-safe) file list with its bucket ids, or None
@@ -711,18 +753,64 @@ class StorageMixin:
             for f in StructType.fromJson(m["schema"]).fields
         }
         exprs = [F.col(c).cast(types[c]) for c in bcols]
-        ids = {
-            r[0]
-            for r in source.select(_bucket_id(exprs, meta.buckets).alias("b"))
-            .distinct()
-            .collect()
-        }
+        ids = _source_ids(source, _bucket_id(exprs, meta.buckets))
+        return self._bucket_files(meta, m, ids)
+
+    def _planned_bucket_files(
+        self, meta: TableMeta, target: DataFrame, pred
+    ) -> list[str] | None:
+        """Bucket pruning for a predicate mutation, taken from Spark's own
+        planner: when `pred` fixes the bucket column (``k = c``,
+        ``k IN (...)``, either ANDed with other terms), FileSourceStrategy
+        gives the table's scan an optionalBucketSet, the buckets whose
+        rows can match.  Planning runs no Spark job, so the mutation
+        skips the _affected_files scan.  The radius is a superset: its
+        files may hold no matching row (keys absent from the table), so
+        the caller counts matches while it writes (_replace_files'
+        `hits`).
+
+        None falls back to _affected_files: a table that is not
+        bucketed, a transaction reading its own staged generation (a
+        plain parquet read with no bucket spec), a plan with more or
+        other leaves than one file scan (``k IN (SELECT ...)``), or a
+        scan with no bucket set (the predicate does not fix the bucket
+        column, or it matches every bucket)."""
+        staged = self._staged_manifests
+        if not self._is_bucketed(meta) or (
+            staged is not None and meta.name.lower() in staged
+        ):
+            return None
+        p = F.expr(pred) if isinstance(pred, str) else pred
+        leaves = target.filter(p)._jdf.queryExecution().sparkPlan().collectLeaves()
+        if leaves.size() != 1:
+            return None
+        scan = leaves.apply(0)
+        if scan.getClass().getSimpleName() != "FileSourceScanExec":
+            return None
+        spec, bits = scan.relation().bucketSpec(), scan.optionalBucketSet()
+        if not (spec.isDefined() and bits.isDefined()):
+            return None
+        if spec.get().numBuckets() != meta.buckets:
+            return None
+        bits, ids, b = bits.get(), set(), 0
+        while (b := bits.nextSetBit(b)) >= 0:
+            ids.add(b)
+            b += 1
+        m = self._load_manifest(meta.name)
+        return None if m is None else self._bucket_files(meta, m, ids)
+
+    def _bucket_files(
+        self, meta: TableMeta, m: dict, ids: set[int]
+    ) -> list[str] | None:
+        """Manifest `m`'s live files of the buckets `ids`, by the bucket
+        id encoded in each file name; None when a file has no bucket id
+        (not a bucketed layout: use the scan path)."""
         data = self.catalog.data_path(meta.name)
         files: list[str] = []
         for f in m["files"]:
             b = re.search(r"_(\d{5})(?:\.|$)", f)
             if b is None:
-                return None  # not a bucketed layout: use the scan path
+                return None
             if int(b.group(1)) % meta.buckets in ids:
                 files.append(os.path.join(data, f))
         return _BucketFiles(files, ids)
@@ -738,8 +826,10 @@ class StorageMixin:
         blast radius (the Delta-Lake copy-on-write discipline; the
         reference's analogue is per-column-batch deltas + delete bitmaps,
         ColumnDelta.scala:16-75).  The scan benefits from parquet
-        row-group min/max pruning for predicate mutations.  Every keyed
-        or predicate mutation commits through this list, however long.
+        row-group min/max pruning for predicate mutations.  It is the
+        fallback of bucketed tables: keyed mutations there prune with
+        _bucket_affected_files, and predicates that fix the bucket
+        column with _planned_bucket_files, neither of which scans.
 
         The collected list is driver metadata (file PATHS, not rows) —
         same contract as Delta's transaction log reads."""
@@ -748,9 +838,8 @@ class StorageMixin:
             p = F.expr(pred) if isinstance(pred, str) else pred
             hits = tagged.filter(F.coalesce(p, F.lit(False)))
         else:
-            marked = source.select(
-                *[F.col(k).alias(f"__src_{k}") for k in keys]
-            ).distinct()
+            # a semi join's output does not depend on duplicate source keys
+            marked = source.select(*[F.col(k).alias(f"__src_{k}") for k in keys])
             cond = None
             for k in keys:
                 c = tagged[k].eqNullSafe(marked[f"__src_{k}"])
@@ -772,7 +861,11 @@ class StorageMixin:
         return uri
 
     def _replace_files(
-        self, meta: TableMeta, files: list[str], new_rows: DataFrame
+        self,
+        meta: TableMeta,
+        files: list[str],
+        new_rows: DataFrame,
+        hits: Observation | None = None,
     ) -> None:
         """Swap the touched files for the rewritten rows; every other file
         is untouched (byte-identical).  New files are staged, moved in,
@@ -785,10 +878,19 @@ class StorageMixin:
         transaction, SnapshotConnectionListener.scala).  Bucketed rows
         re-hash into their buckets in the staging writer, so bucket
         pruning and colocated joins stay correct even if an UPDATE moved
-        a partition column."""
+        a partition column.  `hits` (from _observe_hits on the rewritten
+        rows' input) makes a rewrite that matched no row commit nothing:
+        its staged files are unlinked, as if it never ran."""
         self._audit_plan(f"replace_files:{meta.name}", new_rows)
         schema = new_rows.schema
         added = self._stage(new_rows, meta, "mut", n_files=max(1, len(files)))
+        if hits is not None and _observed_hits(hits) == 0:
+            # a planned bucket radius none of whose rows matched: the
+            # rewrite changed nothing, so nothing commits
+            data = self.catalog.data_path(meta.name)
+            for n in added:
+                os.remove(os.path.join(data, n))
+            return
         # the manifest read-modify-write is the only section that
         # needs the table lock: a DOWNGRADED writer (claims held,
         # lock released — see _WriteScope) re-takes it just for this.

@@ -8,6 +8,7 @@ columns would split buckets across tasks and give a bucket two files."""
 
 import os
 import re
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -107,6 +108,56 @@ def test_keyed_write_runs_one_task_per_touched_bucket_group(sn3):
     assert 1 <= write_stage.numTasks <= 2, write_stage
     assert sorted(_files_by_bucket(sn3, "bt")) == list(range(BUCKETS))
     _one_file_per_bucket(sn3, "bt")
+
+
+def _jobs(sn, sql):
+    """Spark jobs `sql` runs, counted through a job group."""
+    sc = sn.spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        sn.sql(sql)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_keyed_writes_run_in_few_jobs(sn3, monkeypatch):
+    """With AQE on, a 2-key PUT takes its bucket ids from the VALUES
+    batch (no job) and writes in at most 4 jobs; an UPDATE or DELETE
+    whose predicate fixes the bucket column takes its files from the
+    planner's bucket set, never scanning for them, and writes in at
+    most 2.  One that matches no row commits nothing and leaves no
+    file behind."""
+    assert sn3.spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    sn3.create_table("kj", options=dict(OPTS), df=_rows(sn3, range(200)))
+    model = {k: f"v{k}" for k in range(200)}
+    sn3.sql("PUT INTO kj VALUES (1, 'w1'), (2, 'w2')")  # warm-up
+    model.update({1: "w1", 2: "w2"})
+
+    def _boom(*a, **k):
+        raise AssertionError("key-fixed mutation scanned for its files")
+
+    monkeypatch.setattr(sn3, "_affected_files", _boom)
+    assert _jobs(sn3, "PUT INTO kj VALUES (3, 'p3'), (500, 'p500')") <= 4
+    model.update({3: "p3", 500: "p500"})
+    assert _jobs(sn3, "UPDATE kj SET v = 'u' WHERE k IN (3, 4)") <= 2
+    model.update({3: "u", 4: "u"})
+    assert _jobs(sn3, "DELETE FROM kj WHERE k IN (5, 6)") <= 2
+    del model[5], model[6]
+
+    history = sn3.table_history("kj")
+    data = sn3.catalog.data_path("kj")
+    listing = sorted(os.listdir(data))
+    # absent keys, in buckets that hold files: the rewrite runs and
+    # observes no match
+    sn3.sql("UPDATE kj SET v = 'x' WHERE k IN (900, 901)")
+    sn3.sql("DELETE FROM kj WHERE k = 902")
+    assert sn3.table_history("kj") == history
+    assert sorted(os.listdir(data)) == listing
+    assert {r.k: r.v for r in sn3.table("kj").collect()} == model
+    _one_file_per_bucket(sn3, "kj")
 
 
 def test_bucket_labels_spread_buckets_over_partitions(spark):

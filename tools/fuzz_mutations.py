@@ -132,6 +132,36 @@ def _key_range(rng: random.Random, lo: int, hi: int) -> tuple[int, int]:
     return a, b
 
 
+def _maybe_key_list(op: dict) -> dict:
+    """Half the UPDATE/DELETE ops trade their BETWEEN range for an
+    IN-list of 1-4 keys from it, sometimes plus a key the table never
+    holds (KEYSPACE and above).  Spark bucket-prunes an IN-list but not
+    a BETWEEN, so only the IN-lists reach the planned bucket path on
+    the bucketed layout.  The choice uses its own generator seeded from
+    the op, so the schedule's other draws stay as they were."""
+    pick = random.Random(op["lo"] * 1_000_003 + op["hi"] * 1009 + op["id"])
+    if pick.random() < 0.5:
+        return op
+    span = range(op["lo"], op["hi"] + 1)
+    keys = pick.sample(span, min(pick.randrange(1, 5), len(span)))
+    if pick.random() < 0.3:
+        keys.append(KEYSPACE + pick.randrange(KEYSPACE))
+    rest = {k: v for k, v in op.items() if k not in ("lo", "hi")}
+    return {**rest, "keys": sorted(keys)}
+
+
+def _pred(op: dict) -> str:
+    if "keys" in op:
+        return f"k IN ({', '.join(map(str, op['keys']))})"
+    return f"k BETWEEN {op['lo']} AND {op['hi']}"
+
+
+def _hit(op: dict, k: int) -> bool:
+    if "keys" in op:
+        return k in op["keys"]
+    return op["lo"] <= k <= op["hi"]
+
+
 def gen_schedule(
     rng: random.Random,
     n_threads: int,
@@ -173,17 +203,21 @@ def gen_schedule(
             elif kind == "update":
                 a, b = _key_range(rng, lo, hi)
                 ops.append(
-                    {
-                        "id": op_seq,
-                        "kind": "update",
-                        "lo": a,
-                        "hi": b,
-                        "delta": op_seq * 1000,
-                    }
+                    _maybe_key_list(
+                        {
+                            "id": op_seq,
+                            "kind": "update",
+                            "lo": a,
+                            "hi": b,
+                            "delta": op_seq * 1000,
+                        }
+                    )
                 )
             elif kind == "delete":
                 a, b = _key_range(rng, lo, hi)
-                ops.append({"id": op_seq, "kind": "delete", "lo": a, "hi": b})
+                ops.append(
+                    _maybe_key_list({"id": op_seq, "kind": "delete", "lo": a, "hi": b})
+                )
             else:  # delete_from
                 n_keys = rng.randrange(1, 5)
                 keys = rng.sample(range(lo, hi), min(n_keys, hi - lo))
@@ -213,13 +247,9 @@ def _exec_op(sn, spark, op: dict) -> None:
             "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)"
         )
     elif kind == "update":
-        sn.update(
-            TABLE,
-            f"k BETWEEN {op['lo']} AND {op['hi']}",
-            {"v": f"v + {op['delta']}"},
-        )
+        sn.update(TABLE, _pred(op), {"v": f"v + {op['delta']}"})
     elif kind == "delete":
-        sn.delete(TABLE, f"k BETWEEN {op['lo']} AND {op['hi']}")
+        sn.delete(TABLE, _pred(op))
     elif kind == "delete_from":
         sn.delete_from(
             TABLE,
@@ -240,10 +270,10 @@ def _apply_model(model: dict[int, int], op: dict) -> None:
             model[k] = v
     elif kind == "update":
         for k in model:
-            if op["lo"] <= k <= op["hi"]:
+            if _hit(op, k):
                 model[k] += op["delta"]
     elif kind == "delete":
-        for k in [k for k in model if op["lo"] <= k <= op["hi"]]:
+        for k in [k for k in model if _hit(op, k)]:
             del model[k]
     elif kind == "delete_from":
         for k in op["keys"]:
