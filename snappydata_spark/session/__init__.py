@@ -15,6 +15,7 @@ import hashlib
 import os
 import re
 import tempfile
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -242,11 +243,13 @@ class SnappySession(
         # scripts replay, SYSDISKSTORES serves rows, and DROP validates
         # no table still targets the store
         self._diskstores: dict[str, dict] = {}
-        # identity-assignment pins: frames persisted by _assign_identities
-        # so validation probes and the final write see the SAME generated
-        # values (a nondeterministic source would otherwise recompute
-        # different ids per action); released after the write completes
-        self._identity_pins: list[DataFrame] = []
+        # statement pins, per thread (see DMLMixin._statement_pins):
+        # frames persisted by _assign_identities so validation probes and
+        # the final write see the SAME generated values, and by
+        # _pin_source so every evaluation of an unstable keyed source
+        # reads the same rows; each statement releases its own after the
+        # write completes
+        self._pin_tl = threading.local()
         # SYSCS_UTIL.SET_STATISTICS_TIMING (setstatstimingproc.md): when
         # on, sql() records (statement, wall_ms) per execution; off
         # resets all timing values (the documented zeroing)

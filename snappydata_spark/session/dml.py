@@ -144,7 +144,7 @@ class DMLMixin:
             tagged_all = (
                 df.withColumn("__pid", F.spark_partition_id()).persist()
             )
-            self._identity_pins.append(tagged_all)
+            self._statement_pins().append(tagged_all)
             stats = (
                 tagged_all.groupBy("__pid")
                 .agg(
@@ -221,9 +221,9 @@ class DMLMixin:
         different shapes, and a source such as ``t.limit(5)`` picks
         different rows in each, so a source whose optimized plan holds a
         limit, a sample or a nondeterministic expression is persisted
-        until the statement ends (released with the identity pins).
-        Other sources, inline VALUES batches among them, read the same
-        rows every time and are used as they are."""
+        until the statement ends (a statement pin).  Other sources,
+        inline VALUES batches among them, read the same rows every time
+        and are used as they are."""
         if df.storageLevel != StorageLevel.NONE:
             return df  # already pinned (a transaction's staged source)
         stack = [df._jdf.queryExecution().optimizedPlan()]
@@ -231,19 +231,33 @@ class DMLMixin:
             node = stack.pop()
             if not node.deterministic() or node.nodeName() in _UNSTABLE_NODES:
                 pinned = df.persist()
-                self._identity_pins.append(pinned)
+                self._statement_pins().append(pinned)
                 return pinned
             kids = node.children()
             stack.extend(kids.apply(i) for i in range(kids.size()))
         return df
 
-    def _release_identity_pins(self) -> None:
-        for p in self._identity_pins:
+    def _statement_pins(self) -> list[DataFrame]:
+        """This thread's frames persisted for its running statements.
+        Sessions are shared across threads (like _scope_stack), so a
+        statement must never release a pin another thread's statement
+        is still reading."""
+        tl = self._pin_tl
+        if not hasattr(tl, "pins"):
+            tl.pins = []
+        return tl.pins
+
+    def _release_pins(self, mark: int = 0) -> None:
+        """Unpersist this thread's pins above `mark`, the pin count when
+        the releasing statement began: a nested statement (a PUT into an
+        empty table runs insert) keeps its caller's pins."""
+        pins = self._statement_pins()
+        for p in pins[mark:]:
             try:
                 p.unpersist()
             except Exception:  # noqa: BLE001 — session teardown race
                 pass
-        self._identity_pins.clear()
+        del pins[mark:]
 
     # (create-table.md:341-366 — GemFireXD row-DDL constraint surface:
     # UNIQUE disallows NULLs; an FK row with any NULL component is
@@ -444,6 +458,7 @@ class DMLMixin:
         """INSERT INTO (append) — SnappySession.insert:1990-2029."""
         self._check_write_priv(name, "insert")
         meta = self.catalog.load_meta(name.lower())
+        mark = len(self._statement_pins())
         try:
             if self._skip_constraints() and meta.key_columns:
                 # skip-constraint-checks.md: PK constraints survive the
@@ -463,7 +478,7 @@ class DMLMixin:
             self._validate_fks(meta, df)
             self._write(df, meta, mode="append")
         finally:
-            self._release_identity_pins()
+            self._release_pins(mark)
         self._maybe_flush_small_files(name, meta)
         self._refresh_view(name)
 
@@ -534,6 +549,7 @@ class DMLMixin:
         zero existing files — it degenerates to a pure insert."""
         self._check_write_priv(name, "insert")
         meta = self.catalog.load_meta(name.lower())
+        mark = len(self._statement_pins())
         try:
             df = self._pin_source(self._assign_identities(meta, df))
             self._validate_checks(meta, df)
@@ -584,7 +600,7 @@ class DMLMixin:
                 meta, files, keep.unionByName(df.select(*target.columns))
             )
         finally:
-            self._release_identity_pins()
+            self._release_pins(mark)
         self._maybe_flush_small_files(name, meta)
 
     @_serialized
@@ -722,6 +738,7 @@ class DMLMixin:
         target = self._mutation_target(name)
         if target is None:
             return
+        mark = len(self._statement_pins())
         try:
             df = self._pin_source(df)
             if self._referencing_fks(meta.name):
@@ -739,7 +756,7 @@ class DMLMixin:
                 meta, files, mutate._anti_on_keys(touched, df, keys).select(*target.columns)
             )
         finally:
-            self._release_identity_pins()
+            self._release_pins(mark)
 
     def _apply_column_list(self, name: str, src: DataFrame, cols: list[str]) -> DataFrame:
         """ANSI column-list DML (INSERT/PUT INTO t (a, b) ...): the

@@ -656,8 +656,8 @@ class LockingMixin:
         radii — without a shared token both would append and duplicate
         the key.  Hashing source keys into a bounded token space makes
         them intersect (false-positive collisions just serialize).  The
-        hashes come from the raw source through the same bounded
-        collect as bucket ids (_source_ids)."""
+        hashes come from the raw source through the same collect as
+        bucket ids (_source_ids)."""
         expr = F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(buckets))
         return frozenset(f"key:{t}" for t in _source_ids(source, expr))
 

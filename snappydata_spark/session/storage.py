@@ -26,11 +26,6 @@ _CATALOG_ENTRIES: dict[str, tuple] = {}
 _CATALOG_LOCK = threading.Lock()
 
 
-# source rows above which a keyed mutation collects its bucket ids or
-# key-claim tokens through a distinct() aggregate instead of row by row
-KEY_COLLECT_CAP = 10_000
-
-
 class _BucketFiles(list):
     """A bucket-pruned file radius.  `buckets` are the bucket ids the
     mutation's keys hash to; they double as its key-claim tokens (the
@@ -44,16 +39,16 @@ class _BucketFiles(list):
 
 def _source_ids(source: DataFrame, expr: Column) -> set[int]:
     """The distinct values of the int expression `expr` over `source`,
-    computed by Spark so the driver never converts source rows.  Up to
-    KEY_COLLECT_CAP rows are collected as they are, with no aggregate:
-    over an inline VALUES batch that runs no Spark job at all, where a
-    distinct() runs its shuffle stages.  A larger source falls back to
+    computed by Spark so the driver never converts source rows.  When
+    the id projection plans to a LocalRelation (an inline VALUES batch:
+    its rows, and so its ids, are already in the driver), the ids are
+    collected as they are, which runs no Spark job, where a distinct()
+    runs its shuffle stages.  Any other source is evaluated once, by
     the distinct() collect."""
     ids = source.select(expr.alias("__id"))
-    rows = ids.limit(KEY_COLLECT_CAP + 1).collect()
-    if len(rows) > KEY_COLLECT_CAP:
-        rows = ids.distinct().collect()
-    return {r[0] for r in rows}
+    if ids._jdf.queryExecution().optimizedPlan().nodeName() != "LocalRelation":
+        ids = ids.distinct()
+    return {r[0] for r in ids.collect()}
 
 
 def _observe_hits(df: DataFrame, pred) -> tuple[DataFrame, Observation]:
@@ -69,14 +64,16 @@ def _observe_hits(df: DataFrame, pred) -> tuple[DataFrame, Observation]:
 
 def _observed_hits(hits: Observation) -> int | None:
     """The count `hits` observed, or None when it observed nothing (the
-    observed frame was planned away as empty).  Spark completes the
-    observation when the action ends; the JVM's getRowOrEmpty waits at
-    most 100 ms for it, where PySpark's `get` waits without bound and
-    fails on an empty row."""
-    row = hits._jo.getRowOrEmpty()
-    if row.isEmpty() or row.get().size() == 0:
+    observed frame was planned away as empty).  Call it after the action
+    that ran the observed frame has returned: Spark then completes the
+    observation, with an empty row when the frame was planned away, so
+    the wait always ends.  PySpark's `get` waits the same way but fails
+    on that empty row; the JVM's getRowOrEmpty gives up after 100 ms,
+    which would make a slow listener commit a no-match rewrite."""
+    row = hits._jo.getRow()
+    if row.size() == 0:
         return None
-    return row.get().getLong(0)
+    return row.getLong(0)
 
 
 def _bucket_id(cols: list, buckets: int) -> Column:

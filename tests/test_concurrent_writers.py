@@ -51,14 +51,14 @@ def test_disjoint_put_commits_while_rival_mid_rewrite(snappy, spark):
 
     real_replace = type(sa)._replace_files
 
-    def stalling_replace(meta, files, rows):
+    def stalling_replace(meta, files, rows, hits=None):
         # runs AFTER _scope_gate: A holds its claim, not the table lock
         a_mid_rewrite.set()
         if not b_done.wait(timeout=90):
             raise AssertionError(
                 "writer B did not commit while A held a disjoint claim"
             )
-        return real_replace(sa, meta, files, rows)
+        return real_replace(sa, meta, files, rows, hits)
 
     sa._replace_files = stalling_replace
 
@@ -109,16 +109,16 @@ def test_predicate_delete_sees_concurrent_new_key(snappy, spark):
     errors = []
     real_replace = type(sa)._replace_files
 
-    def put_replace(meta, files, rows):
+    def put_replace(meta, files, rows, hits=None):
         a_stalled.set()
         b_rewriting.wait(timeout=5)  # a downgraded DELETE would get here
-        real_replace(sa, meta, files, rows)
+        real_replace(sa, meta, files, rows, hits)
         a_done.set()
 
-    def delete_replace(meta, files, rows):
+    def delete_replace(meta, files, rows, hits=None):
         b_rewriting.set()
         a_done.wait(timeout=90)  # commit after the PUT
-        real_replace(sb, meta, files, rows)
+        real_replace(sb, meta, files, rows, hits)
 
     sa._replace_files = put_replace
     sb._replace_files = delete_replace
@@ -168,12 +168,12 @@ def test_intersecting_put_waits_then_applies(snappy, spark):
 
     real_replace = type(sa)._replace_files
 
-    def stalling_replace(meta, files, rows):
+    def stalling_replace(meta, files, rows, hits=None):
         a_mid_rewrite.set()
         assert b_started.wait(timeout=90)
         time.sleep(1.0)  # give B time to reach the claim wait
         order.append("a")
-        return real_replace(sa, meta, files, rows)
+        return real_replace(sa, meta, files, rows, hits)
 
     sa._replace_files = stalling_replace
 
@@ -249,10 +249,10 @@ def test_whole_table_action_waits_for_claims(snappy, spark):
 
     real_replace = type(sa)._replace_files
 
-    def stalling_replace(meta, files, rows):
+    def stalling_replace(meta, files, rows, hits=None):
         a_mid_rewrite.set()
         time.sleep(2.0)
-        out = real_replace(sa, meta, files, rows)
+        out = real_replace(sa, meta, files, rows, hits)
         t_end["a"] = time.monotonic()
         return out
 
@@ -374,11 +374,11 @@ def test_merge_waits_out_claim_holder(snappy, spark):
 
     real_replace = type(sa)._replace_files
 
-    def stalling_replace(meta, files, rows):
+    def stalling_replace(meta, files, rows, hits=None):
         a_mid_rewrite.set()
         if not release_a.wait(timeout=90):
             raise AssertionError("test never released writer A")
-        return real_replace(sa, meta, files, rows)
+        return real_replace(sa, meta, files, rows, hits)
 
     sa._replace_files = stalling_replace
 
@@ -438,11 +438,11 @@ def test_insert_overwrite_waits_out_claim_holder(snappy, spark):
 
     real_replace = type(sa)._replace_files
 
-    def stalling_replace(meta, files, rows):
+    def stalling_replace(meta, files, rows, hits=None):
         a_mid_rewrite.set()
         if not release_a.wait(timeout=90):
             raise AssertionError("test never released writer A")
-        return real_replace(sa, meta, files, rows)
+        return real_replace(sa, meta, files, rows, hits)
 
     sa._replace_files = stalling_replace
 

@@ -224,7 +224,7 @@ def test_identity_counting_is_one_job_per_column(audited):
         jobs = tracker.getJobIdsForGroup(group)
     assert len(jobs) == 1, f"expected 1 counting job, saw {len(jobs)}"
     assert sorted(r.a for r in out.collect()) == list(range(1, 2001))
-    sn._release_identity_pins()
+    sn._release_pins()
     sn.sql("DROP TABLE idjobs")
 
 

@@ -2,8 +2,10 @@
 (reference API surface python/pyspark/sql/snappy/snappysession.py:26-138)."""
 
 import os
+import threading
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 
@@ -73,6 +75,70 @@ def test_delete_from_api(loaded):
     doomed = sn.table("t_orders").select("o_orderkey").limit(7)
     sn.delete_from("t_orders", doomed)
     assert sn.table("t_orders").count() == n - 7
+
+
+def test_statement_pins_are_per_thread(snappy, monkeypatch):
+    """A session shared by two threads: thread A's PUT pins its unordered
+    ``limit`` source and waits while thread B runs a deleteFrom, with its
+    own pinned source, to the end.  B's statement releases only its own
+    pin: A's source is still cached when A resumes, so the PUT replaces
+    exactly its five rows, and A releases it when its PUT ends."""
+    spark = snappy.spark
+    rows = [(k, f"v{k}") for k in range(100)]
+    for t in ("pin_a", "pin_b"):
+        snappy.create_table(
+            t,
+            options={"key_columns": "k"},
+            df=spark.createDataFrame(rows, "k long, v string"),
+        )
+    a_pinned, b_done = threading.Event(), threading.Event()
+    pinned, seen, errors = [], [], []
+    real_pin = snappy._pin_source
+
+    def pin_then_wait(df):
+        out = real_pin(df)
+        if threading.current_thread().name == "put-a":
+            pinned.append(out)
+            a_pinned.set()
+            seen.append((b_done.wait(timeout=120), out.storageLevel))
+        return out
+
+    monkeypatch.setattr(snappy, "_pin_source", pin_then_wait)
+
+    def put_a():
+        try:
+            src = snappy.table("pin_a").limit(5).withColumn("v", F.lit("p"))
+            snappy.put("pin_a", src)
+        except Exception as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+
+    def delete_b():
+        try:
+            if not a_pinned.wait(timeout=120):
+                raise AssertionError("PUT never pinned its source")
+            snappy.delete_from("pin_b", snappy.table("pin_b").select("k").limit(7))
+        except Exception as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+        finally:
+            b_done.set()
+
+    threads = [
+        threading.Thread(target=put_a, name="put-a"),
+        threading.Thread(target=delete_b, name="delete-b"),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not errors, errors
+    assert len(seen) == 1
+    b_finished, level = seen[0]
+    assert b_finished
+    assert level != StorageLevel.NONE  # B left A's pin alone
+    assert pinned[0].storageLevel == StorageLevel.NONE  # A released it
+    a = {r.k: r.v for r in snappy.table("pin_a").collect()}
+    assert len(a) == 100 and sum(v == "p" for v in a.values()) == 5
+    assert snappy.table("pin_b").count() == 93
 
 
 def test_create_table_overwrite_guard(snappy, sf_dir):
